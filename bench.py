@@ -50,7 +50,6 @@ HEADLINE = [
     "q16_salted_count",
     "q26_minhash_lsh",
     "q29_cosine_topk",
-    # q35 retired from the battery in r4 (its fused twin q39 stays below)
     "q36_salted_topk",
     "q39_candidate_ions_fused",
     # corpus-pipeline heavies (round 3): curation composite, line-level
@@ -382,44 +381,7 @@ def bench_once(
         # cost reported, cache reused afterwards
         "input_layout": "rechunked" if (rechunk and not streaming_only) else "original",
         "rechunk_sec": rechunk_sec,
-        **_recorded_evidence(),
     }
-
-
-def _recorded_evidence() -> dict:
-    """Attach the latest recorded scale-shape and scaling-efficiency runs
-    (produced by tools/bench_scale_shape.py and ``--scaling --pin``) so a
-    plain ``python bench.py`` run — what the driver records as BENCH_rN —
-    carries the sf1/sf3 linearity evidence and the N→4N efficiency number
-    alongside the sf0.1 walls, instead of leaving them only in BASELINE.md."""
-    out: dict = {}
-    root = os.path.dirname(os.path.abspath(__file__))
-    ss = os.path.join(root, "SCALE_SHAPE_r5.json")
-    if not os.path.exists(ss):
-        ss = os.path.join(root, "SCALE_SHAPE_r4.json")
-    if os.path.exists(ss):
-        with open(ss) as fh:
-            d = json.load(fh)
-        out["scale_shape"] = {
-            name: {
-                lbl: row for lbl, row in scales.items()
-            }
-            for name, scales in d.get("family", {}).items()
-        }
-        out["scale_shape"]["q54_rounds"] = d.get("q54_rounds", {})
-    sc = os.path.join(root, "SCALING_r5.json")
-    if not os.path.exists(sc):
-        sc = os.path.join(root, "SCALING_r4.json")
-    if os.path.exists(sc):
-        with open(sc) as fh:
-            d = json.load(fh)
-        out["scaling"] = {
-            k: d.get(k)
-            for k in ("value", "low", "high", "trial_efficiencies",
-                      "trial_throughputs", "pass_ge_0.8", "pinned_cpus")
-            if k in d
-        }
-    return out
 
 
 def bench_level_subprocess(
@@ -602,10 +564,6 @@ def main() -> None:
             extra_conf=extra_conf, pin=args.pin,
         )
         result["pinned_cpus"] = args.pin
-        # record for _recorded_evidence() so plain bench runs carry it
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "SCALING_r5.json"), "w") as fh:
-            json.dump(result, fh, indent=1)
     else:
         result = bench_once(
             args.cpus, args.sf_dir,

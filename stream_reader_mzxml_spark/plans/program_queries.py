@@ -1,6 +1,7 @@
 """Round-2 program battery: q34 (nested Array<Struct> record model +
-entry-point-2 None-preserving gate), q35 (the CandidateIons end-to-end
-analytic), q36 (salted two-phase per-group top-K ≡ plain window).
+entry-point-2 None-preserving gate), q39 (the CandidateIons end-to-end
+analytic, checked against the relational program's oracle ``_q35_sql``),
+q36 (salted two-phase per-group top-K ≡ plain window).
 
 Same conventions as plans.entry_queries: every computed column aliased
 identically on both sides, floats rounded, constants shared between the
@@ -93,10 +94,11 @@ def q34_nested_precursor_gate(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q35 — the CandidateIons end-to-end program (libCandidateIons.sc:100-193):
-# noise filter → broadcast precursor-list interval/tolerance join →
-# head-of-list tie-break → isotope nearest-peak probes (minBy fold) →
-# double ppm gate → abundance band filters → rendered Ion rows.
+# The CandidateIons end-to-end program (libCandidateIons.sc:100-193) as SQL:
+# noise filter → precursor-list interval/tolerance join → head-of-list
+# tie-break → isotope nearest-peak probes (minBy fold) → double ppm gate →
+# abundance band filters → rendered Ion rows. The oracle of q39 and, inside
+# q47's, of the relational ``candidate.candidate_ions``.
 # ---------------------------------------------------------------------------
 def _q35_sql() -> str:
     c = candidate
@@ -163,16 +165,10 @@ def _q35_sql() -> str:
     """
 
 
-@_register("q35_candidate_ions", _q35_sql())
-def q35_candidate_ions(spark, sf_dir):
-    return candidate.candidate_ions(spark, _t(spark, sf_dir, "embeddings"))
-
-
 # ---------------------------------------------------------------------------
-# q39 — the SAME program fused into one stateless per-row projection
-# (higher-order functions only: zero shuffles, zero joins, streaming-safe) —
-# shares q35's oracle, so the driver gate itself proves the fused plan ≡ the
-# relational plan ≡ DuckDB.
+# q39 — the same program fused into one stateless per-row projection
+# (higher-order functions only: zero shuffles, zero joins, streaming-safe).
+# The relational form is proven row-for-row equal in tests/test_programs.py.
 # ---------------------------------------------------------------------------
 @_register("q39_candidate_ions_fused", _q35_sql())
 def q39_candidate_ions_fused(spark, sf_dir):
@@ -675,29 +671,6 @@ def precursor_match_scores(emb: DataFrame) -> DataFrame:
 @_register("q44_precursor_match_scores", _q44_sql())
 def q44_precursor_match_scores(spark, sf_dir):
     return precursor_match_scores(_t(spark, sf_dir, "embeddings"))
-
-
-# ---------------------------------------------------------------------------
-# q43 — sketch statistics: HyperLogLog++ distinct users and approximate
-# quantiles per event_type. Registered WITHOUT an oracle on purpose: sketches
-# are estimation algorithms whose exact outputs are implementation-defined
-# (DuckDB's approx_count_distinct uses a different HLL register layout), so
-# the driver records the weaker rows-only check here while
-# tests/test_pipeline.py pins the estimates against exact values with the
-# algorithms' published error bounds (HLL++ rsd, percentile_approx accuracy).
-# At 100 TB these ARE the production path q38's exact forms degrade to:
-# fixed-size mergeable state, partial→final aggregation, no full sort and
-# no per-group materialization.
-# ---------------------------------------------------------------------------
-@_register("q43_sketch_stats")
-def q43_sketch_stats(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
-        F.percentile_approx("value", 0.5, 10000).alias("ap50"),
-        F.percentile_approx("value", 0.99, 10000).alias("ap99"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -48,7 +48,12 @@ def _batch_writer(
         target = os.path.join(out_dir, f"batch_id={batch_id}")
         marker = os.path.join(target, "_COMMITTED")
         if os.path.exists(marker):
-            return  # replayed batch already fully committed — idempotent skip
+            # replayed batch already fully committed: skip the write, but
+            # still drain the frame — Spark validates that every state store
+            # of a stateful upstream committed for this batch, and an
+            # unconsumed frame commits none (STATE_STORE_COMMIT_VALIDATION_FAILED)
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
 
         batch_df = batch_df.withColumn("__pid", F.spark_partition_id())
         batch_df.persist()

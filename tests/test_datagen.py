@@ -143,42 +143,6 @@ def test_rechunk_tables_preserves_values(tmp_path):
     assert out2 == out and build2 == 0.0
 
 
-def test_scale_up_deterministic_and_structure_preserving(tmp_path):
-    """tools/scale_up.py is evidence-generating infrastructure: replica 0
-    must be the source byte-for-byte, rows must scale exactly Kx, doc_ids
-    must stay unique, and two runs must agree bit-for-bit."""
-    import sys
-
-    import pyarrow as pa
-
-    sys.path.insert(0, "tools")
-    from scale_up import scale_documents, scale_embeddings
-
-    src = "/root/testdata/sf0.001"
-    k = 3
-    out1, out2 = tmp_path / "a", tmp_path / "b"
-    for out in (out1, out2):
-        out.mkdir()
-        scale_documents(str(out), k, src=src)
-        scale_embeddings(str(out), k, src=src)
-
-    orig = pq.read_table(f"{src}/documents.parquet")
-    big = pq.read_table(str(out1 / "documents.parquet"))
-    assert big.num_rows == k * orig.num_rows
-    ids = big.column("doc_id").to_pylist()
-    assert len(set(ids)) == len(ids)
-    # replica 0 = the original corpus, same rows (chunked writer preserves order)
-    stride = max(orig.column("doc_id").to_pylist()) + 1
-    rep0 = big.filter(pa.compute.less(big.column("doc_id"), stride))
-    assert rep0.sort_by("doc_id").equals(orig.sort_by("doc_id"))
-    # bit-for-bit deterministic across runs
-    big2 = pq.read_table(str(out2 / "documents.parquet"))
-    assert big.equals(big2)
-    emb = pq.read_table(str(out1 / "embeddings.parquet"))
-    orig_e = pq.read_table(f"{src}/embeddings.parquet")
-    assert emb.num_rows == k * orig_e.num_rows
-
-
 @pytest.mark.spark
 class TestStdoutReportSink:
     def test_show_report_prints_all_rows(self, spark, capfd):

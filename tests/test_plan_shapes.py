@@ -24,6 +24,7 @@ NO_CARTESIAN = [
     "q30_lsh_ann_topk",
     "q42_corpus_curation",
     "q48_decontamination",
+    "q49_ivf_ann_topk",
     "q50_domain_caps",
     "q51_segment_dedup",
     "q52_context_chunks",

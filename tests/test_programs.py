@@ -192,6 +192,37 @@ class TestCandidateIons:
             assert r.int0 * candidate.BAND2_LO <= r.int2 < r.int0 * candidate.BAND2_HI
 
 
+
+@pytest.mark.spark
+class TestGlucosinolateCandidates:
+    def test_drops_rt_less_scans_and_orders_ties_by_scan(self, spark):
+        # every spectrum carries one M0 candidate at the reference defaults:
+        # int1 = int2 = 1000 sit inside the C/S bands of int0 = 10000, and M2
+        # sits exactly deltaMp0Mp2 above M0
+        def peaks(mz0):
+            return [(mz0, 10000.0), (mz0 + 1.0, 1000.0), (mz0 + 1.9958, 1000.0)]
+
+        rows = [
+            (3, 5.0, peaks(300.0)),  # ties scan 1 on M0; later scan sorts after
+            (2, None, peaks(350.0)),  # no retention time → no rows
+            (4, 30.0, peaks(400.0)),
+            (1, 10.0, peaks(300.0)),
+        ]
+        spectra = spark.createDataFrame(
+            rows,
+            "num BIGINT, rt DOUBLE, "
+            "peaks ARRAY<STRUCT<mz: DOUBLE, intensity: DOUBLE>>",
+        ).repartition(3)
+        got = [
+            (r.rt, r.m0_mz, r.m1_mz, round(r.m2_mz, 4))
+            for r in candidate.glucosinolate_candidates(spectra).collect()
+        ]
+        assert got == [
+            (30.0, 400.0, 401.0, 401.9958),
+            (10.0, 300.0, 301.0, 301.9958),
+            (5.0, 300.0, 301.0, 301.9958),
+        ]
+
 class TestPrecursorMatchStreaming:
     def test_q44_runs_on_stream(self, spark, tmp_path):
         # q44's fused precursor-match program is one stateless projection —

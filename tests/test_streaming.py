@@ -465,6 +465,43 @@ class TestStatefulKillResume:
         assert len(exp) > 100
         assert got == exp
 
+    def test_replayed_committed_batch_commits_state(
+        self, spark, small_seq_path, tmp_path
+    ):
+        """The kill window the test above hits only by timing, made
+        deterministic: the sink has written ``_COMMITTED`` for the last batch
+        but Spark's commit log has not recorded it, so resume replays that
+        batch through a stateful operator. The sink skips the write, and the
+        replayed batch must still commit every state store."""
+        out_dir = str(tmp_path / "replay_out")
+        ckpt = str(tmp_path / "replay_ckpt")
+
+        def dedup_stream():
+            stream = read_sequences_stream(
+                spark, small_seq_path, max_files_per_trigger=2
+            )
+            return windows.streaming_dedup(stream, watermark="60 seconds")
+
+        start_exactly_once(dedup_stream(), out_dir, ckpt).awaitTermination(300)
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        assert os.path.exists(
+            os.path.join(out_dir, f"batch_id={last}", "_COMMITTED")
+        )
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, f)):
+                os.remove(os.path.join(commits, f))
+
+        q = start_exactly_once(dedup_stream(), out_dir, ckpt)
+        q.awaitTermination(300)
+        assert q.exception() is None
+        assert os.path.exists(os.path.join(commits, str(last)))
+
+        got = read_output(spark, out_dir)
+        n = read_sequences(spark, small_seq_path).count()
+        assert got.count() == n
+        assert got.select("doc_id").distinct().count() == n
+
 
 @pytest.mark.spark
 class TestStreamingManifestExactlyOnce:

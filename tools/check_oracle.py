@@ -52,18 +52,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", names: list[str] | None = None):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = dict(e.queries()), dict(e.oracle_sql())
-    if names and "--retired" in names:
-        # r4 ADVICE: retirees stay locally gate-able via the secondary registry
-        from stream_reader_mzxml_spark.plans.entry_queries import (
-            RETIRED_ORACLES,
-            RETIRED_QUERIES,
-        )
-
-        names = [n for n in names if n != "--retired"]
-        qs.update(RETIRED_QUERIES)
-        oracles.update(RETIRED_ORACLES)
-        names = names or list(RETIRED_QUERIES)
+    qs, oracles = e.queries(), e.oracle_sql()
     selected = names or list(qs)
     n_fail = 0
     for name in selected:

@@ -22,14 +22,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # queries where a bounded cartesian is by design (tiny side or all-pairs op)
 ALLOWED_CARTESIAN = {
     "q04_threshold_histogram",  # 31-threshold literal array explode
-    "q28_embedding_neardup",  # all-pairs baseline (the bucketed path is q30)
     "q29_cosine_topk",  # broadcast probes × corpus with != condition
     "q12_sliding_window",
-    "q35_candidate_ions",  # 20-row broadcast ion list × peaks theta-join (J3 shape)
     "q37_unigram_perplexity",  # 1-row broadcast corpus-total cross join
     "q45_glucosinolates",  # 1-row broadcast two-pass-count (n_spectra) cross join
-    "q47_gluco_delta_stats",  # q35's ion theta-join + 1-row precursor-stats × 1-row folds
-    "q49_ivf_ann_topk",  # 1-row broadcast centroid-array cross join (corpus + probes)
+    "q47_gluco_delta_stats",  # CandidateIons ion theta-join + 1-row precursor-stats × 1-row folds
     "q53_source_drift",  # #sources × #buckets densify + 1-row corpus total (all tiny)
     "q56_tfidf",  # 1-row broadcast corpus doc-count cross join
     "q60_kmeans_step",  # 1-row broadcast centroid-array cross join
