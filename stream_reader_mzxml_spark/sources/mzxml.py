@@ -19,7 +19,7 @@ Reference parity map:
 
 Scale design (100 TB): ingest parallelism is per-FILE — the paths DataFrame
 is repartitioned so each task streams one file through ``iterparse`` with
-O(one scan) resident memory (elements are cleared as they close). Raw peak
+O(one scan) resident memory (elements are detached as they close). Raw peak
 byte-strings stay executor-side end to end: parse emits the base64 text,
 ``decode_peaks_udf`` inflates it Arrow-batch-wise, and nothing but the final
 projected columns ever moves. A directory of N mzXML files therefore scans
@@ -152,16 +152,28 @@ def parse_mzxml_file(path: str) -> Iterator[dict]:
 
     ``iterparse`` end-events fire innermost-first, so nested MS2 scans are
     emitted before their MS1 parent (same visit order as the reference's
-    fs2-data event stream, XmlStreamRequest.scala:17-27). Each scan element
-    is cleared once rowed, keeping residency at O(largest single scan).
+    fs2-data event stream, XmlStreamRequest.scala:17-27). Each scan is
+    detached from its parent once rowed, and every other element once it
+    closes outside a scan (e.g. the per-scan ``<offset>`` index entries), so
+    the tree never holds more than the open scans: residency is O(largest
+    single scan) however many scans the file has.
     """
-    for _event, elem in ET.iterparse(path, events=("end",)):
-        if _local(elem.tag) == "scan":
+    stack = []  # open elements, root first (after a pop, [-1] is the parent)
+    open_scans = 0
+    for event, elem in ET.iterparse(path, events=("start", "end")):
+        is_scan = _local(elem.tag) == "scan"
+        if event == "start":
+            stack.append(elem)
+            open_scans += is_scan
+            continue
+        stack.pop()
+        if is_scan:
+            open_scans -= 1
             yield _scan_row(path, elem)
-            # Free the scan's subtree. The element husk stays in its
-            # parent's child list, but with no attributes it can never be
-            # mistaken for payload when the parent closes.
-            elem.clear()
+        # a closed scan, or anything closing outside every scan, is no
+        # longer read: a scan reads its direct children when it closes
+        if stack and (is_scan or open_scans == 0):
+            stack[-1].remove(elem)
 
 
 def _parse_partition(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:

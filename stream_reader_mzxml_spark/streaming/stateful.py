@@ -11,10 +11,11 @@ within a ±2 s event-time interval. Two implementations:
 2. ``stateful_shard_join`` — ``applyInPandasWithState`` (per north_rule): the
    stream is keyed by the *ms1 source shard* (plus a salt on the parent doc to
    split the hot shard), so each group holds many docs and the per-group logic
-   is a vectorized ``pd.merge`` — one Arrow batch per (shard, salt), never one
-   Python call per doc. Per-key state buffers the shard's recent ms1 rows and
-   any early-arriving ms2 rows; matches emit as both sides arrive and
-   ``EventTimeTimeout`` + inline watermark purging bound the state. This is
+   is a numpy index probe — one Arrow batch per (shard, salt), never one
+   Python call per doc, and no pandas frame but the output. Per-key state
+   buffers the shard's recent ms1 rows and any early-arriving ms2 rows;
+   matches emit as both sides arrive and ``EventTimeTimeout`` + inline
+   watermark purging bound the state. This is
    the reference's "collect MS2 side then probe" (glucosinolateIons.sc:28-29)
    re-expressed with bounded per-shard state instead of a full materialization.
 
@@ -127,139 +128,107 @@ def interval_join_stream(
 _EMPTY_STATE = ([], [], [], [], [], [], [])
 
 
-def _match_and_split(ms1: pd.DataFrame, ms2: pd.DataFrame, delta_us: int):
-    """Vectorized probe: join ms2 rows to their named ms1 parent.
-
-    Returns (emit_rows, unmatched_ms2): an ms2 row whose parent is present
-    either emits (interval holds) or is dead (interval can never hold later —
-    the parent's event time is fixed), so only parent-absent rows stay
-    buffered. One ``pd.merge`` per group per batch — no per-doc Python.
-    """
-    if len(ms2) == 0:
-        return pd.DataFrame(columns=list(ms2.columns) + ["ms1_time_us"]), ms2
-    if len(ms1) == 0:
-        return pd.DataFrame(columns=list(ms2.columns) + ["ms1_time_us"]), ms2
-    # duplicate delivery can land the same parent doc twice in the buffer;
-    # a 1:N left merge would then expand rows and break the positional
-    # unmatched mask below (and double-emit matches) — keep the latest
-    ms1 = ms1.drop_duplicates("doc", keep="last")
-    merged = ms2.merge(
-        ms1.rename(columns={"doc": "ref", "t_us": "ms1_time_us"}),
-        on="ref",
-        how="left",
-    )
-    parent_known = merged["ms1_time_us"].notna()
-    ok = parent_known & (
-        (merged["t_us"] - merged["ms1_time_us"]).abs() <= delta_us
-    )
-    return merged[ok], ms2[~parent_known.to_numpy()]
-
-
 def _shard_join_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-(shard, salt) stateful join — vectorized over all docs of the group.
+    """Per-(shard, salt) stateful join — numpy arrays over all docs of the group.
 
     State holds the shard's live ms1 rows (probe side) and parent-absent ms2
-    rows (early arrivals). Both are purged by the watermark: an ms1 row older
-    than ``wm - delta`` can never match an in-watermark ms2 row again, and a
+    rows (early arrivals) as parallel columns, read straight into numpy
+    arrays. Each ms2 row (buffered + new) looks up its named parent in one
+    ``pd.Index.get_indexer`` over the ms1 doc ids: a found parent either emits
+    (interval holds) or kills the row (the parent's event time is fixed, so
+    the interval can never hold later); only parent-absent rows stay buffered.
+    Duplicate ms1 delivery keeps the last copy of a doc id.
+
+    Both buffers are purged by the watermark: an ms1 row older than
+    ``wm - delta`` can never match an in-watermark ms2 row again, and a
     buffered ms2 row older than ``wm - delta`` can only be completed by an ms1
     row that would itself be beyond-watermark late. EventTimeTimeout fires a
     final purge once the shard goes quiet (SURVEY §7: bound state via
-    watermark + event-time timeout without changing emitted rows).
+    watermark + event-time timeout without changing emitted rows). A call
+    that emits nothing yields nothing.
     """
     delta_us = DELTA_SECONDS * 1_000_000
-    cols = [f.name for f in JOIN_OUTPUT_SCHEMA.fields]
-    wm_us = state.getCurrentWatermarkMs() * 1000
+    wm_ms = state.getCurrentWatermarkMs()
+    floor_us = wm_ms * 1000 - delta_us
 
+    # state columns: ms1 (doc, t_us); ms2 (doc, t_us, source, ref, tokens)
     s = state.get if state.exists else _EMPTY_STATE
-    ms1 = pd.DataFrame({"doc": list(s[0]), "t_us": list(s[1])})
-    ms2 = pd.DataFrame(
-        {
-            "doc": list(s[2]),
-            "t_us": list(s[3]),
-            "src": list(s[4]),
-            "ref": list(s[5]),
-            "toks": list(s[6]),
-        }
-    )
+    ms1 = [np.array(s[0], dtype=object), np.array(s[1], dtype=np.int64)]
+    ms2 = [np.array(s[2], dtype=object), np.array(s[3], dtype=np.int64)]
+    ms2 += [np.array(s[4], dtype=object), np.array(s[5], dtype=object)]
+    # fromiter, not array: equal-length token lists must stay one object each
+    ms2.append(np.fromiter(s[6], dtype=object, count=len(s[6])))
 
     if state.hasTimedOut:
         # purge-only invocation: no new data; drop everything the watermark
         # has passed, keep (and re-arm) only if something may still match
-        keep1 = ms1[ms1["t_us"] >= wm_us - delta_us]
-        keep2 = ms2[ms2["t_us"] >= wm_us - delta_us]
-        if len(keep1) == 0 and len(keep2) == 0:
-            state.remove()
+        live1, live2 = ms1[1] >= floor_us, ms2[1] >= floor_us
+        if live1.any() or live2.any():
+            _save(state, [c[live1] for c in ms1], [c[live2] for c in ms2])
+            state.setTimeoutTimestamp(wm_ms + 1000)
         else:
-            _save(state, keep1, keep2)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1000)
-        yield pd.DataFrame(columns=cols)
+            state.remove()
         return
 
-    new = pd.concat(list(pdfs), ignore_index=True)
+    frames = list(pdfs)
+    new = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
     # normalize to µs regardless of pandas' ns/us datetime64 resolution
-    t_us = new["event_time"].to_numpy(dtype="datetime64[us]").astype("int64")
-    is_ms1 = new["source"].str.startswith("ms1-").to_numpy()
+    t_us = new["event_time"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+    doc, src = new["doc_id"].to_numpy(), new["source"].to_numpy()
+    # source.startswith("ms1-") as one numpy op: truncate to 4 chars, compare
+    is_ms1 = src.astype("U4") == "ms1-"
+    is_ms2 = ~is_ms1
+    ref, toks = new["precursor_ref"].to_numpy(), new["tokens"].to_numpy()
+    ms1 = [np.concatenate((c, a[is_ms1])) for c, a in zip(ms1, (doc, t_us))]
+    ms2 = [
+        np.concatenate((c, a[is_ms2]))
+        for c, a in zip(ms2, (doc, t_us, src, ref, toks))
+    ]
 
-    new_ms1 = pd.DataFrame({"doc": new["doc_id"][is_ms1], "t_us": t_us[is_ms1]})
-    new_ms2 = pd.DataFrame(
-        {
-            "doc": new["doc_id"][~is_ms1],
-            "t_us": t_us[~is_ms1],
-            "src": new["source"][~is_ms1],
-            "ref": new["precursor_ref"][~is_ms1],
-            "toks": new["tokens"][~is_ms1],
-        }
-    )
-
-    ms1 = pd.concat([ms1, new_ms1], ignore_index=True)
     # probe ALL pending ms2 (buffered + new) against the updated ms1 table
-    pending = pd.concat([ms2, new_ms2], ignore_index=True)
-    emit, ms2 = _match_and_split(ms1, pending, delta_us)
+    ms1_doc, ms1_t = ms1
+    ms2_doc, ms2_t, ms2_src, ms2_ref, ms2_toks = ms2
+    parents = pd.Index(ms1_doc)
+    last = ~parents.duplicated(keep="last")
+    pos = parents[last].get_indexer(ms2_ref)
+    known = pos >= 0
+    dt_us = ms2_t[known] - ms1_t[last][pos[known]]
+    ok = np.abs(dt_us) <= delta_us
+    emit = np.flatnonzero(known)[ok]
 
     # watermark purge (same predicate as the timeout path)
-    ms1 = ms1[ms1["t_us"] >= wm_us - delta_us]
-    ms2 = ms2[ms2["t_us"] >= wm_us - delta_us]
-    _save(state, ms1, ms2)
-    horizon_ms = int(max(int(t_us.max()), wm_us) // 1000) + (DELTA_SECONDS + 1) * 1000
-    state.setTimeoutTimestamp(max(horizon_ms, state.getCurrentWatermarkMs() + 1000))
+    pending = ~known & (ms2_t >= floor_us)
+    _save(state, [c[ms1_t >= floor_us] for c in ms1], [c[pending] for c in ms2])
+    state.setTimeoutTimestamp(
+        max(int(t_us.max()) // 1000, wm_ms) + (DELTA_SECONDS + 1) * 1000
+    )
 
     if len(emit) == 0:
-        yield pd.DataFrame(columns=cols)
         return
-    # tokens arrive pre-cleaned (JVM-side pad-drop in stateful_shard_join);
-    # just normalize None → [] and count
-    toks = list(emit["toks"])
-    clean = [t if t is not None else [] for t in toks]
-    n_clean = np.fromiter((len(t) for t in clean), dtype=np.int64, count=len(clean))
+    # tokens arrive pre-cleaned (JVM-side pad-drop in stateful_shard_join)
+    toks = ms2_toks[emit]
     yield pd.DataFrame(
         {
-            "ms1_doc_id": emit["ref"].to_numpy(),
-            "ms2_doc_id": emit["doc"].to_numpy(),
-            "ms2_source": emit["src"].to_numpy(),
-            "dt_seconds": (
-                (emit["t_us"].to_numpy() - emit["ms1_time_us"].to_numpy().astype("int64"))
-                // 1_000_000
-            ),
-            "clean_tokens": clean,
-            "n_clean": n_clean,
-        }
+            "ms1_doc_id": ms2_ref[emit],
+            "ms2_doc_id": ms2_doc[emit],
+            "ms2_source": ms2_src[emit],
+            "dt_seconds": dt_us[ok] // 1_000_000,
+            "clean_tokens": toks,
+            "n_clean": np.fromiter(map(len, toks), dtype=np.int64, count=len(toks)),
+        },
+        copy=False,  # columns are fresh arrays: skip pandas' block consolidation
     )
 
 
-def _save(state: GroupState, ms1: pd.DataFrame, ms2: pd.DataFrame) -> None:
-    # plain-python copies: numpy scalars don't survive the state round-trip
+def _save(state: GroupState, ms1: list[np.ndarray], ms2: list[np.ndarray]) -> None:
+    # plain-python values: numpy scalars don't survive the state round-trip;
+    # only tokens of ms2 rows that arrived this batch are still ndarrays
+    *cols, toks = ms1 + ms2
     state.update(
-        (
-            [str(d) for d in ms1["doc"]],
-            [int(t) for t in ms1["t_us"]],
-            [str(d) for d in ms2["doc"]],
-            [int(t) for t in ms2["t_us"]],
-            [str(x) for x in ms2["src"]],
-            [str(x) for x in ms2["ref"]],
-            [[int(v) for v in (t if t is not None else [])] for t in ms2["toks"]],
-        )
+        tuple(c.tolist() for c in cols)
+        + ([t.tolist() if isinstance(t, np.ndarray) else t for t in toks],)
     )
 
 

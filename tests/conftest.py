@@ -13,6 +13,14 @@ from stream_reader_mzxml_spark.datagen import write_sequences  # noqa: E402
 from stream_reader_mzxml_spark.session import get_spark  # noqa: E402
 
 
+def pytest_collection_modifyitems(items):
+    # every test that takes the session carries the ``spark`` marker, so
+    # ``-m "not spark"`` is a lane that never starts a JVM
+    for item in items:
+        if "spark" in getattr(item, "fixturenames", ()):
+            item.add_marker(pytest.mark.spark)
+
+
 @pytest.fixture(scope="session")
 def spark():
     conf = {"spark.sql.streaming.stateStore.stateSchemaCheck": "false"}
