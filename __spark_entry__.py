@@ -26,12 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
     explode → quantized occurrence count (A2/F7, two-phase agg) → HAVING (A4)
     → top-40 (O2).
     """
+    from stream_reader_mzxml_spark.operators.filters import drop_pad_tokens
     from stream_reader_mzxml_spark.sources import sequences_from_events
 
     seq = sequences_from_events(spark, "/root/testdata/sf0.001")
     toks = (
         seq.filter(F.col("tokens").isNotNull())
-        .select(F.explode(F.filter(F.col("tokens"), lambda x: x != 0)).alias("token"))
+        .select(F.explode(drop_pad_tokens(F.col("tokens"))).alias("token"))
     )
     return (
         toks.groupBy("token")

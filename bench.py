@@ -12,8 +12,9 @@ deterministic synthetic sequences table) and print ONE JSON line::
 ``--scaling`` mode: run the identical streaming job at two parallelism levels
 (1 and 4 cores by default — the sandbox evidence for the north_rule's N→4N
 cluster-size criterion), interleaved trials with per-trial-pair efficiency;
-``--pin`` confines each level to exactly N physical CPUs via ``taskset``
-(cgroup-faithful cluster emulation). Results land in ``BENCH/BASELINE.md``.
+each level runs in its own process confined to exactly N physical CPUs via
+``taskset`` (cgroup-faithful cluster emulation). Results land in
+``BENCH/BASELINE.md``.
 
 All prints except the final JSON line go to stderr so the driver's
 one-line-JSON parse stays clean.
@@ -36,7 +37,7 @@ CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
 
 # Headline batch queries: one per operator family (agg, quantize+topk,
 # threshold histogram, band join, as-of join, interval join, pairwise kernel,
-# sessionize, ranking window, salted agg) — SURVEY.md §2 coverage.
+# sessionize, ranking window, salted top-k) — SURVEY.md §2 coverage.
 HEADLINE = [
     "q01_pricing_summary",
     "q02_occurrence_topk",
@@ -47,7 +48,6 @@ HEADLINE = [
     "q09_pairwise_diff_topk",
     "q10_sessionize",
     "q13_topk_per_group",
-    "q16_salted_count",
     "q26_minhash_lsh",
     "q29_cosine_topk",
     "q36_salted_topk",
@@ -89,7 +89,7 @@ def ensure_sequences(n_rows: int, seed: int = SEQ_SEED) -> tuple[str, int]:
     estimates."""
     import pyarrow.parquet as pq
 
-    from stream_reader_mzxml_spark.datagen import write_sequences
+    from stream_reader_mzxml_spark.datagen import PAD_TOKEN, write_sequences
 
     path = os.path.join(CACHE_DIR, f"bench_seq_{n_rows}_{seed}")
     meta = os.path.join(path, "_meta.json")
@@ -108,10 +108,8 @@ def ensure_sequences(n_rows: int, seed: int = SEQ_SEED) -> tuple[str, int]:
         t = pq.read_table(os.path.join(path, fn), columns=["tokens"])
         col = t.column("tokens").combine_chunks()
         for chunk in col.chunks if hasattr(col, "chunks") else [col]:
-            import numpy as np
-
             flat = chunk.flatten().to_numpy(zero_copy_only=False)
-            total += int((flat != 0).sum())
+            total += int((flat != PAD_TOKEN).sum())
     with open(meta, "w") as f:
         json.dump({"clean_tokens": total, "n_rows": n_rows, "seed": seed}, f)
     return path, total
@@ -255,8 +253,7 @@ def rechunk_tables(
     streaming suite's generated input already has ≥128 files for exactly
     this reason). Re-chunking the same rows into a cluster-realistic layout
     measures the engine, not the fixture's writer settings. Values are
-    byte-identical; only file boundaries change. ``--no-rechunk`` benches
-    the original layout for cross-round continuity."""
+    byte-identical; only file boundaries change."""
     import math
 
     import pyarrow.parquet as pq
@@ -314,7 +311,6 @@ def bench_once(
     rows_mult: int = 1,
     n_batches: int = 6,
     extra_conf: dict[str, str] | None = None,
-    rechunk: bool = True,
 ) -> dict:
     from stream_reader_mzxml_spark.session import get_spark
 
@@ -323,7 +319,7 @@ def bench_once(
     seq_path, total_tokens = ensure_sequences(n_rows)
     rechunk_sec = 0.0
     batch_dir = sf_dir
-    if rechunk and not streaming_only:
+    if not streaming_only:
         batch_dir, rechunk_sec = rechunk_tables(sf_dir)
         log(f"[bench] re-chunked {sf_dir} -> {batch_dir} ({rechunk_sec}s)")
     load_before = os.getloadavg()
@@ -379,7 +375,7 @@ def bench_once(
         # from the fixture's single-row-group files into a cluster-realistic
         # many-file layout (see rechunk_tables docstring); one-time build
         # cost reported, cache reused afterwards
-        "input_layout": "rechunked" if (rechunk and not streaming_only) else "original",
+        "input_layout": "original" if streaming_only else "rechunked",
         "rechunk_sec": rechunk_sec,
     }
 
@@ -427,7 +423,6 @@ def bench_scaling(
     rows_mult: int = 20,
     n_batches: int = 3,
     extra_conf: dict[str, str] | None = None,
-    pin: bool = False,
 ) -> dict:
     """BASELINE.md protocol: same input, fresh checkpoints, two parallelism
     levels; efficiency = (thr_high / thr_low) / (high / low).
@@ -439,8 +434,9 @@ def bench_scaling(
     is 5× the default-bench size in 4 big micro-batches so per-batch serial
     driver overhead (planning, offset/commit WAL) does not dominate the
     Amdahl term. ``trials`` runs per level take the best (sandbox has noisy
-    background load). With ``pin`` each level runs in its own subprocess
-    confined to exactly N physical CPUs via ``taskset`` (cgroup-faithful)."""
+    background load). Each level runs in its own ``taskset``-pinned
+    subprocess (:func:`bench_level_subprocess`; BASELINE.md "Scaling
+    protocol v3")."""
 
     def sustained(r):
         toks = sum(v["sustained_tokens"] for v in r["streaming"].values())
@@ -464,20 +460,9 @@ def bench_scaling(
             # partitioning scheme doesn't change when executors are added,
             # and a too-coarse pin (= high) makes single-wave stragglers and
             # oversized per-task pandas frames dominate the high level
-            if pin:
-                r = bench_level_subprocess(
-                    cpus, sf_dir, 2 * high, rows_mult, n_batches, conf_args
-                )
-            else:
-                r = bench_once(
-                    cpus,
-                    sf_dir,
-                    streaming_only=True,
-                    shuffle_partitions=2 * high,
-                    rows_mult=rows_mult,
-                    n_batches=n_batches,
-                    extra_conf=extra_conf,
-                )
+            r = bench_level_subprocess(
+                cpus, sf_dir, 2 * high, rows_mult, n_batches, conf_args
+            )
             pair[cpus] = r
             log(f"[scaling] cpus={cpus} trial={t} sustained={sustained(r):.0f} tok/s")
         eff_t = (sustained(pair[high]) / sustained(pair[low])) / (high / low)
@@ -533,18 +518,8 @@ def main() -> None:
     ap.add_argument("--batches", type=int, default=None, help="micro-batch count")
     ap.add_argument("--streaming-only", action="store_true")
     ap.add_argument(
-        "--no-rechunk", action="store_true",
-        help="bench the original single-row-group fixture layout (serial "
-        "scan stages) instead of the cluster-realistic many-file re-chunk",
-    )
-    ap.add_argument(
-        "--pin", action="store_true",
-        help="scaling mode: run each level taskset-pinned to exactly N CPUs "
-        "in its own subprocess (cgroup-faithful cluster emulation)",
-    )
-    ap.add_argument(
         "--shuffle-partitions", type=int, default=None,
-        help="override shuffle/state partition count (used by --pin subprocesses)",
+        help="override shuffle/state partition count (used by --scaling subprocesses)",
     )
     ap.add_argument(
         "--conf", action="append", default=[], metavar="K=V",
@@ -561,9 +536,8 @@ def main() -> None:
         result = bench_scaling(
             args.sf_dir, args.low, args.high, trials=args.trials,
             rows_mult=args.mult or 20, n_batches=args.batches or 3,
-            extra_conf=extra_conf, pin=args.pin,
+            extra_conf=extra_conf,
         )
-        result["pinned_cpus"] = args.pin
     else:
         result = bench_once(
             args.cpus, args.sf_dir,
@@ -571,7 +545,6 @@ def main() -> None:
             shuffle_partitions=args.shuffle_partitions,
             rows_mult=args.mult or 1, n_batches=args.batches or 6,
             extra_conf=extra_conf,
-            rechunk=not args.no_rechunk,
         )
     print(json.dumps(result))
 

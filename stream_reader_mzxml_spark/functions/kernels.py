@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stream_reader_mzxml_spark.sources.readers import spread_scan
+
 # ---------------------------------------------------------------------------
 # segmented-representation helpers
 # ---------------------------------------------------------------------------
@@ -275,7 +277,7 @@ def pairwise_diffs_udf(arrays: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def pairwise_diff_counts(df, array_col: str, fix: float = 100.0, spread: bool = True):
+def pairwise_diff_counts(df, array_col: str, fix: float = 100.0):
     """J4 + A3 fused with map-side partial aggregation INSIDE the kernel.
 
     The naive plan (pairwise_diffs_udf → explode → groupBy) ships every raw
@@ -308,16 +310,9 @@ def pairwise_diff_counts(df, array_col: str, fix: float = 100.0, spread: bool = 
             vals, cnts = np.unique(q, return_counts=True)
             yield pd.DataFrame({"diff": vals, "cnt": cnts.astype(np.int64)})
 
-    src = df.select(array_col)
-    # ``spread=True`` (the few-file/local default) round-robins the rows so
-    # the O(len²) Python work covers every core — necessary when the source
-    # is a single file (one scan task). On an already well-partitioned large
-    # table this exchange of the heavy array column is pure cost (AQE can
-    # coalesce but never elide a user repartition), so callers there pass
-    # spread=False. A metadata probe (src.rdd.getNumPartitions()) is NOT a
-    # substitute: it forces a driver-side RDD conversion of the analyzed
-    # plan, which costs more than the exchange it occasionally saves.
-    if spread:
-        src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    partial = src.mapInPandas(gen, "diff double, cnt long")
+    # round-robin the rows so the O(len²) Python work covers every core —
+    # necessary when the source is a single file (one scan task)
+    partial = spread_scan(df.select(array_col)).mapInPandas(
+        gen, "diff double, cnt long"
+    )
     return partial.groupBy("diff").agg(F.sum("cnt").alias("cnt"))

@@ -1,18 +1,18 @@
-"""Aggregation operators (SURVEY.md §2.4, A1-A10) + explicit salted two-phase agg.
+"""Aggregation operators (SURVEY.md §2.4, A1-A10) + two-phase ranking.
 
 Every reference aggregation is "per-record partial map, then global fold of
 partials" — exactly Catalyst's partial→final HashAggregate, which we get for
-free by writing ``groupBy().agg()``. What Catalyst does NOT give us is skew
-handling for streaming stateful aggs — hence the explicit salting helper
-(SURVEY.md §4: AQE skew handling doesn't cover streaming state).
+free by writing ``groupBy().agg()``; a salted count would only repeat that
+map-side partial. What Catalyst does NOT split is a window partition: the
+two-phase forms here bound the per-task sort of a hot group (``salted_top_k``)
+and of a global rank (``distributed_rank``). Salting for streaming state lives
+with the stateful operators (``streaming/windows.py``, ``streaming/stateful.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from stream_reader_mzxml_spark.functions.scalars import quantize_trunc
 
 
 def threshold_histogram(
@@ -38,78 +38,6 @@ def threshold_histogram(
         )
         .groupBy("threshold")
         .agg(F.count("*").alias("cnt"))
-    )
-
-
-def occurrence_count(
-    df: DataFrame, value_col: Column, fix: float = 1e5
-) -> DataFrame:
-    """A2 — quantized value-occurrence count.
-
-    Reference: per-spectrum countByValue then global merge
-    (MainDistributionMzIons.scala:66-91). ``explode → quantize → groupBy.count``;
-    Catalyst's partial aggregation reproduces the per-record partial maps.
-    """
-    return (
-        df.select(quantize_trunc(value_col, fix).alias("value"))
-        .groupBy("value")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def inverse_histogram(counts: DataFrame, min_count: int = 2) -> DataFrame:
-    """A4 — group values by their count (count → list of values).
-
-    Reference: ``listMat.filter(_._2 > 2).groupBy(_._2)``
-    (MainDistributionMzIons.scala:100-105). ``HAVING cnt > min`` then
-    groupBy(cnt) + collect_list; the list is sorted for determinism (the
-    reference's Map iteration order is undefined — we pin ascending).
-    """
-    return (
-        counts.filter(F.col("cnt") > min_count)
-        .groupBy("cnt")
-        .agg(F.sort_array(F.collect_list("value")).alias("values"))
-    )
-
-
-def group_collect(
-    df: DataFrame, key: Column, collect: Column, key_name: str = "key"
-) -> DataFrame:
-    """A5 — group by quantized key, collect a value list (diagnosticIon.sc:37-41)."""
-    return (
-        df.groupBy(key.alias(key_name))
-        .agg(F.sort_array(F.collect_list(collect)).alias("collected"))
-    )
-
-
-def salted_two_phase_count(
-    df: DataFrame,
-    keys: list[str],
-    n_salts: int = 16,
-    agg_col: Column | None = None,
-) -> DataFrame:
-    """Explicit salt → partial agg → unsalt → final agg (SURVEY.md §4, M6).
-
-    For hot keys (the 40 %-share source in the fixture; a hot shard at 10^12
-    scale) a single-phase ``groupBy(key)`` sends the whole hot key to one
-    reducer. Salting splits it: partial count on (key, salt) — ≤ n_salts
-    partials per key, each computed map-side — then a final sum on key.
-    Used where AQE can't re-plan (streaming stateful aggs) and as the explicit
-    scale story for batch.
-
-    The salt here is ``pmod(spark_partition_id(), n_salts)`` — zero extra
-    hashing, stable under task retry (partition ids are fixed by the input
-    split), and it spreads a hot key exactly as far as its rows are spread
-    over input partitions. The streaming variants salt by a content hash
-    instead (``streaming/windows.py``, ``streaming/stateful.py``) because
-    state keys must not depend on physical partitioning.
-    """
-    cnt = agg_col if agg_col is not None else F.count(F.lit(1))
-    salted = df.withColumn("__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
-    partial = salted.groupBy(*keys, "__salt").agg(cnt.alias("__partial"))
-    return (
-        partial.groupBy(*keys)
-        .agg(F.sum("__partial").alias("cnt"))
     )
 
 
@@ -195,17 +123,3 @@ def distributed_rank(
         .withColumn(rank_col, (F.col("__off") + F.row_number().over(ww)).cast("int"))
         .drop("__b", "__off")
     )
-
-
-def stream_cardinality(df: DataFrame, name: str = "n_rows"):
-    """A6 — stream cardinality via ``observe`` (no second pass).
-
-    Reference runs the pipeline TWICE (count pass then process pass,
-    MainGlucosinolates.scala:105-130). Spark replaces pass 1 with an
-    ``observe`` metric collected by the same single execution — returns
-    (instrumented_df, observation).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias(name)), obs

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from stream_reader_mzxml_spark.functions.scalars import rt_range_predicate
+from stream_reader_mzxml_spark.datagen import PAD_TOKEN
 
 
 def shard_filter(df: DataFrame, level: int) -> DataFrame:
@@ -33,37 +33,14 @@ def defined_filter(df: DataFrame, col: str = "tokens") -> DataFrame:
     return df.filter(F.col(col).isNotNull())
 
 
-def event_time_range(df: DataFrame, start, end, col: str = "event_time") -> DataFrame:
-    """F3 — retention-time range gate with the reference's asymmetric null
-    semantics (MainDistributionIntensityIons.scala:67-68): NULL substitutes 0
-    on the lower bound and MaxValue on the upper bound.
-    """
-    return df.filter(rt_range_predicate(F.col(col), start, end))
-
-
-def min_value_elements(tokens: Column, min_value) -> Column:
-    """F4 — element-level threshold filter inside the array.
-
-    Reference: ``intensity > minIntensity`` per peak
-    (MainDistributionMzIons.scala:69 et al.). Built-in higher-order
-    ``filter()`` — stays JVM-side, no UDF.
-    """
-    return F.filter(tokens, lambda x: x > F.lit(min_value))
-
-
-def drop_pad_tokens(tokens: Column, pad=0) -> Column:
+def drop_pad_tokens(tokens: Column) -> Column:
     """S8 — zero-intensity pruning analog: drop pad tokens from the array.
 
-    Reference: ``.filter(_._2 > 0)`` at decode (MzXMLTags.scala:326).
+    Reference: ``.filter(_._2 > 0)`` at decode (MzXMLTags.scala:326). Every
+    pad drop in the engine goes through here; the pad value is the one the
+    generator embeds (``datagen.PAD_TOKEN``).
     """
-    return F.filter(tokens, lambda x: x != F.lit(pad))
-
-
-def nonempty_filter(df: DataFrame, col: str) -> DataFrame:
-    """F8 — keep rows whose collection column is non-empty
-    (MainPrecursorMzMatchingGlucosinolate.scala:119, libCandidateIons.sc:133-135).
-    """
-    return df.filter(F.size(F.col(col)) > 0)
+    return F.filter(tokens, lambda x: x != F.lit(PAD_TOKEN))
 
 
 def nonblank_lines(df: DataFrame, col: str) -> DataFrame:

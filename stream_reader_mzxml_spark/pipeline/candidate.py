@@ -37,7 +37,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from stream_reader_mzxml_spark.sources.readers import spread_scan
 
 # re-scaled tolerances (reference values in comments; the graft's value
 # density is ~10 units/σ vs the reference's ~0.01 m/z grid)
@@ -262,15 +261,14 @@ def candidate_ions_fused(df_or_stream: DataFrame) -> DataFrame:
     )
 
 
-def candidate_ions(spark, emb: DataFrame, spread: bool = False) -> DataFrame:
+def candidate_ions(spark, emb: DataFrame) -> DataFrame:
     """The end-to-end program; returns the rendered Ion rows.
 
-    ``spread`` — see :func:`sources.readers.spread_scan`. Default False:
-    measured on the single-file local table, the peaks projection is cheap
-    enough that the round-robin exchange costs more than it parallelizes
-    (3.2s vs 5.4s at sf0.1 once the codegen cache is sized); the flag stays
-    for corpora whose per-row probe work dominates."""
-    spectra = spectra_from_embeddings(spread_scan(emb, spread))
+    The scan is not spread (:func:`sources.readers.spread_scan`): measured on
+    the single-file local table, the peaks projection is cheap enough that
+    the round-robin exchange costs more than it parallelizes (3.2s vs 5.4s
+    at sf0.1 once the codegen cache is sized)."""
+    spectra = spectra_from_embeddings(emb)
     winners = match_winners(spark, spectra)
 
     # stage 5: isotope probes over the FULL peak array (noise included)

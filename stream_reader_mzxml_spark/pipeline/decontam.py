@@ -52,7 +52,6 @@ def ngram_decontaminate(
     text_col: str = "text",
     n: int = 3,
     threshold: float = CONTAM_THRESHOLD,
-    spread: bool = True,
 ) -> DataFrame:
     """Per-doc benchmark-overlap verdict for every training doc.
 
@@ -64,7 +63,7 @@ def ngram_decontaminate(
     probe is a broadcast left join with a hit indicator — not a semi-join
     plus a join-back, which would shuffle twice.
     """
-    ex = spread_scan(docs, spread).select(
+    ex = spread_scan(docs).select(
         "doc_id",
         F.explode_outer(shingle_hashes(F.col(text_col), n)).alias("g"),
     )

@@ -90,7 +90,7 @@ NGRAM_MAX_DF = 50  # shingles present in > this many docs are pruned (skew cap)
 
 
 def _pair_jaccard(
-    df: DataFrame, text_col: str, n: int, max_df: int | None, spread: bool = True
+    df: DataFrame, text_col: str, n: int, max_df: int | None
 ) -> DataFrame:
     """(a_id, b_id, n_int, n_a, n_b) for every doc pair sharing ≥1 shingle.
 
@@ -104,7 +104,7 @@ def _pair_jaccard(
     fall below threshold (recall loss on boilerplate-only matches — usually
     the desired behavior for near-dup mining); no false positives are added.
     """
-    sh = spread_scan(df, spread).select(
+    sh = spread_scan(df).select(
         F.col("doc_id"), shingle_hashes(F.col(text_col), n).alias("shingles")
     )
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -139,14 +139,13 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     max_df: int | None = NGRAM_MAX_DF,
-    spread: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via the inverted-index join,
     with frequent-shingle pruning (df > ``max_df``) bounding hot-key skew.
     ``max_df=None`` disables pruning (exact over the full shingle space).
-    ``spread`` — see :func:`sources.readers.spread_scan` (md5 shingling is
-    interpreted; a single-split local scan serializes it on one core)."""
-    p = _pair_jaccard(df, text_col, n, max_df, spread)
+    The scan is spread (:func:`sources.readers.spread_scan`): md5 shingling
+    is interpreted, and a single-split local scan serializes it on one core."""
+    p = _pair_jaccard(df, text_col, n, max_df)
     jac = F.col("n_int") / (F.col("n_a") + F.col("n_b") - F.col("n_int"))
     return p.select(
         "a_id", "b_id", F.round(jac, 6).alias("jaccard")
@@ -169,7 +168,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
-    spread: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: banded candidate join, then estimated
     Jaccard = matching-signature-component fraction, filtered at threshold.
@@ -182,7 +180,7 @@ def minhash_lsh_pairs(
     # exactly once per doc; the k permutation mins are trivial aggregates.
     # The array-expression form (minhash_signature) duplicates the shingle
     # subtree k times — k× the work and k× the generated code.
-    ex = spread_scan(df, spread).select(
+    ex = spread_scan(df).select(
         "doc_id", F.explode(shingle_hashes(F.col(text_col))).alias("h")
     )
     sig = ex.groupBy("doc_id").agg(
@@ -299,7 +297,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
     bands: int = SIMHASH_BANDS,
-    spread: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ ``max_hamming`` (< ``bands``).
 
@@ -321,7 +318,7 @@ def simhash_neardup_pairs(
     # aggregates — vs the expression form which duplicates the O(words²) tf
     # subtree per bit
     tf = (
-        spread_scan(df, spread)
+        spread_scan(df)
         .select("doc_id", F.explode(words(F.col(text_col))).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -402,7 +399,6 @@ def segment_dedup(
     df: DataFrame,
     text_col: str = "text",
     width: int = SEGMENT_WIDTH,
-    spread: bool = True,
 ) -> DataFrame:
     """Cross-doc duplicated-segment fractions (line-/substring-level dedup).
 
@@ -434,7 +430,7 @@ def segment_dedup(
             )
         ),
     )
-    ex = spread_scan(df, spread).select(
+    ex = spread_scan(df).select(
         "doc_id",
         F.explode_outer(
             F.when(n_seg > 0, F.array_distinct(segs)).otherwise(

@@ -348,7 +348,6 @@ def source_drift(
     df: DataFrame,
     text_col: str = "text",
     n_buckets: int = DRIFT_BUCKETS,
-    spread: bool = True,
 ) -> DataFrame:
     """Per-source token-distribution drift vs the whole corpus — the
     data-mixture QA step: KL(source ‖ corpus) and total-variation distance
@@ -373,7 +372,7 @@ def source_drift(
     """
     from stream_reader_mzxml_spark.sources.readers import spread_scan
 
-    ex = spread_scan(df, spread).select(
+    ex = spread_scan(df).select(
         F.col("source"), F.explode(words(F.col(text_col))).alias("w")
     ).select("source", (h32(F.col("w")) % n_buckets).alias("bucket"))
     sb = ex.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("c_sb"))

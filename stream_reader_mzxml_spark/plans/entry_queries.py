@@ -23,17 +23,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stream_reader_mzxml_spark.functions.kernels import pairwise_diffs_udf
 from stream_reader_mzxml_spark.functions.scalars import (
     LONG_MAX,
     iso_duration_seconds,
     ppm_ok,
     quantize_trunc,
 )
-from stream_reader_mzxml_spark.operators.aggregates import (
-    salted_two_phase_count,
-    threshold_histogram,
-)
+from stream_reader_mzxml_spark.operators.aggregates import threshold_histogram
 from stream_reader_mzxml_spark.operators.joins import (
     asof_nearest_join,
     band_semi_join,
@@ -533,19 +529,6 @@ def q15_minmax_by(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q16 — explicit salted two-phase aggregation == plain count (M6 skew story;
-# the oracle proves salting is semantics-preserving).
-# ---------------------------------------------------------------------------
-@_register(
-    "q16_salted_count",
-    "SELECT l_returnflag, count(*) AS cnt FROM lineitem GROUP BY l_returnflag",
-)
-def q16_salted_count(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return salted_two_phase_count(li, ["l_returnflag"], n_salts=16)
-
-
-# ---------------------------------------------------------------------------
 # q17 — group-and-collect (A5 diagnosticIon.sc:37-41), list rendered sorted
 # (C10) for hash-stable comparison.
 # ---------------------------------------------------------------------------
@@ -698,7 +681,7 @@ _DRIVER_PRIORITY = [
     "q07_asof_nearest", "q08_interval_join", "q09_pairwise_diff_topk",
     "q10_sessionize", "q11_tumbling_window", "q12_sliding_window",
     "q13_topk_per_group", "q14_corr_r2", "q15_minmax_by",
-    "q16_salted_count", "q17_group_collect",
+    "q17_group_collect",
     "q32_isotope_match", "q33_band_score",
     # tier 3 — new in r05, checked once
     "q71_png_codec", "q72_mzxml_ingest", "q73_ingest_manifest",

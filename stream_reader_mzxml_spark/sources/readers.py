@@ -88,7 +88,7 @@ def sequences_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def spread_scan(df: DataFrame, enabled: bool = True) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin a narrow scan across ``defaultParallelism`` tasks before a
     per-row-heavy projection.
 
@@ -101,12 +101,9 @@ def spread_scan(df: DataFrame, enabled: bool = True) -> DataFrame:
     the expensive projection that follows.
 
     On a real 100-TB table the scan already arrives in thousands of splits
-    and the exchange is pure cost — callers there pass ``enabled=False``.
-    The flag mirrors ``functions.kernels.pairwise_diff_counts(spread=...)``;
-    a metadata probe (``df.rdd.getNumPartitions()``) is deliberately NOT used
-    (it forces a driver-side conversion of the analyzed plan, costing more
-    than the exchange it would occasionally save).
+    and the exchange is pure cost (AQE can coalesce but never elide a user
+    repartition). A metadata probe (``df.rdd.getNumPartitions()``) is
+    deliberately NOT used to decide: it forces a driver-side conversion of
+    the analyzed plan, costing more than the exchange it would save.
     """
-    if not enabled:
-        return df
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -26,13 +26,26 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "batch_id long, partition_id int, n_rows long, n_tokens long, "
     "min_doc_id string, max_doc_id string"
 )
+
+
+def _token_count(token_col: str | None) -> Column:
+    """Sum of token-array sizes, null-guarded in BOTH ANSI modes: with ANSI
+    off size(NULL) = -1 (coalesce wouldn't catch it and the sum would
+    undercount by 1 per null-token row); with ANSI on it's NULL.
+    when(isNotNull, size).otherwise(0) counts null-token rows as 0 either
+    way. (datagen emits ~0.5% null-token rows.) No token column → 0."""
+    if not token_col:
+        return F.lit(0).cast("long")
+    return F.sum(
+        F.when(F.col(token_col).isNotNull(), F.size(token_col)).otherwise(F.lit(0))
+    )
 
 
 def _batch_writer(
@@ -58,25 +71,11 @@ def _batch_writer(
         batch_df = batch_df.withColumn("__pid", F.spark_partition_id())
         batch_df.persist()
         try:
-            # explicit null guard, correct in BOTH ANSI modes: with ANSI off
-            # size(NULL) = -1 (coalesce wouldn't catch it and the sum would
-            # undercount by 1 per null-token row); with ANSI on it's NULL.
-            # when(isNotNull, size).otherwise(0) counts null-token rows as 0
-            # either way. (datagen emits ~0.5% null-token rows.)
-            n_tok_expr = (
-                F.sum(
-                    F.when(
-                        F.col(token_col).isNotNull(), F.size(token_col)
-                    ).otherwise(F.lit(0))
-                ).alias("n_tokens")
-                if token_col
-                else F.lit(0).cast("long").alias("n_tokens")
-            )
             lineage = (
                 batch_df.groupBy(F.col("__pid").alias("partition_id"))
                 .agg(
                     F.count(F.lit(1)).alias("n_rows"),
-                    n_tok_expr,
+                    _token_count(token_col).alias("n_tokens"),
                     F.min(id_col).alias("min_doc_id"),
                     F.max(id_col).alias("max_doc_id"),
                 )
@@ -126,16 +125,7 @@ def start_exactly_once(
     observed = stream_df.observe(
         "rates",
         F.count(F.lit(1)).alias("n_rows"),
-        (
-            # same both-ANSI-modes null guard as _batch_writer
-            F.sum(
-                F.when(F.col(token_col).isNotNull(), F.size(token_col)).otherwise(
-                    F.lit(0)
-                )
-            )
-            if token_col
-            else F.lit(0)
-        ).alias("n_tokens"),
+        _token_count(token_col).alias("n_tokens"),
     )
     writer = observed.writeStream.outputMode(output_mode).foreachBatch(
         _batch_writer(out_dir, lineage_dir, token_col, id_col=id_col)

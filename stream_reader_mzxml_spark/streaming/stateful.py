@@ -2,31 +2,28 @@
 
 Reproduces the reference's MS1⋈MS2 precursor join (libCandidateIons.sc:124-137):
 each ms2 record names its parent ms1 record (``precursor_ref``) and must match
-within a ±2 s event-time interval. Two implementations:
+within a ±2 s event-time interval.
 
-1. ``interval_join_stream`` — Spark's native watermarked stream-stream join
-   with an event-time range condition (the idiomatic path; state eviction is
-   driven by the watermark + time bound, Catalyst handles symmetric hash join).
+``stateful_shard_join`` runs it with ``applyInPandasWithState`` (per
+north_rule): the stream is keyed by the *ms1 source shard* (plus a salt on
+the parent doc to split the hot shard), so each group holds many docs and the
+per-group logic is a numpy index probe — one Arrow batch per (shard, salt),
+never one Python call per doc, and no pandas frame but the output. Per-key
+state buffers the shard's recent ms1 rows and any early-arriving ms2 rows;
+matches emit as both sides arrive and ``EventTimeTimeout`` + inline
+watermark purging bound the state. This is the reference's "collect MS2 side
+then probe" (glucosinolateIons.sc:28-29) re-expressed with bounded per-shard
+state instead of a full materialization.
 
-2. ``stateful_shard_join`` — ``applyInPandasWithState`` (per north_rule): the
-   stream is keyed by the *ms1 source shard* (plus a salt on the parent doc to
-   split the hot shard), so each group holds many docs and the per-group logic
-   is a numpy index probe — one Arrow batch per (shard, salt), never one
-   Python call per doc, and no pandas frame but the output. Per-key state
-   buffers the shard's recent ms1 rows and any early-arriving ms2 rows;
-   matches emit as both sides arrive and ``EventTimeTimeout`` + inline
-   watermark purging bound the state. This is
-   the reference's "collect MS2 side then probe" (glucosinolateIons.sc:28-29)
-   re-expressed with bounded per-shard state instead of a full materialization.
-
-Both emit the same rows for in-watermark data; the per-row token-array
-invariant is carried by ``clean_tokens`` (pad-dropped ms2 tokens — the S8
-kernel applied on the streaming path).
+``shard_join_batch_oracle`` re-states the same semantics as Spark's native
+batch interval join; for in-watermark data both emit the same rows. The
+per-row token-array invariant is carried by ``clean_tokens`` (pad-dropped ms2
+tokens — the S8 kernel applied on the streaming path).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -74,55 +71,6 @@ def split_shards(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
     from stream_reader_mzxml_spark.operators.filters import shard_filter
 
     return shard_filter(stream, 1), shard_filter(stream, 2)
-
-
-def interval_join_stream(
-    stream: DataFrame,
-    watermark: str = "30 seconds",
-    delta_seconds: int = DELTA_SECONDS,
-) -> DataFrame:
-    """Native watermarked stream-stream join, equi on precursor_ref + interval.
-
-    State on both sides is bounded by (watermark + delta): Spark derives
-    eviction from the time-range condition — exactly the "state sizing"
-    requirement of SURVEY §7 (J3 buffers the whole MS2 side in the reference;
-    here state is O(keys within the watermark horizon)).
-    """
-    ms1, ms2 = split_shards(stream)
-    ms1 = (
-        ms1.filter(F.col("tokens").isNotNull())
-        .select(
-            F.col("doc_id").alias("ms1_doc_id"),
-            F.col("event_time").alias("ms1_time"),
-        )
-        .withWatermark("ms1_time", watermark)
-    )
-    ms2 = (
-        ms2.filter(F.col("tokens").isNotNull() & F.col("precursor_ref").isNotNull())
-        .select(
-            F.col("doc_id").alias("ms2_doc_id"),
-            F.col("source").alias("ms2_source"),
-            F.col("precursor_ref"),
-            F.col("event_time").alias("ms2_time"),
-            F.filter("tokens", lambda x: x != F.lit(0)).alias("clean_tokens"),
-        )
-        .withWatermark("ms2_time", watermark)
-    )
-    cond = (
-        (ms2["precursor_ref"] == ms1["ms1_doc_id"])
-        & (ms2["ms2_time"] >= ms1["ms1_time"] - F.expr(f"INTERVAL {delta_seconds} SECONDS"))
-        & (ms2["ms2_time"] <= ms1["ms1_time"] + F.expr(f"INTERVAL {delta_seconds} SECONDS"))
-    )
-    return ms2.join(ms1, cond, "inner").select(
-        "ms1_doc_id",
-        "ms2_doc_id",
-        "ms2_source",
-        (
-            F.unix_timestamp("ms2_time") - F.unix_timestamp("ms1_time")
-        ).alias("dt_seconds"),
-        "clean_tokens",
-        F.size("clean_tokens").alias("n_clean"),
-    )
 
 
 _EMPTY_STATE = ([], [], [], [], [], [], [])
@@ -245,6 +193,10 @@ def stateful_shard_join(
     partitions: the explicit skew handling the north_rule requires where AQE
     cannot help (stateful streaming).
     """
+    # driver-side imports: Python workers import this module for
+    # _shard_join_fn and need none of the plan-building helpers
+    from stream_reader_mzxml_spark.operators.filters import drop_pad_tokens
+
     parent = F.coalesce("precursor_ref", "doc_id")
     keyed = (
         stream.filter(F.col("tokens").isNotNull())
@@ -265,7 +217,7 @@ def stateful_shard_join(
             "event_time",
             F.when(
                 F.col("precursor_ref").isNotNull(),
-                F.filter("tokens", lambda x: x != F.lit(0)),
+                drop_pad_tokens(F.col("tokens")),
             ).alias("tokens"),
             "precursor_ref",
         )
@@ -282,6 +234,8 @@ def stateful_shard_join(
 def shard_join_batch_oracle(df: DataFrame, delta_seconds: int = DELTA_SECONDS) -> DataFrame:
     """Batch re-statement of the same semantics (the test oracle): ms2 rows
     joined to their named ms1 parent within ±delta, pad-dropped tokens."""
+    from stream_reader_mzxml_spark.operators.filters import drop_pad_tokens
+
     ms1, ms2 = split_shards(df)
     ms1 = ms1.filter(F.col("tokens").isNotNull()).select(
         F.col("doc_id").alias("ms1_doc_id"), F.col("event_time").alias("ms1_time")
@@ -293,7 +247,7 @@ def shard_join_batch_oracle(df: DataFrame, delta_seconds: int = DELTA_SECONDS) -
         F.col("source").alias("ms2_source"),
         "precursor_ref",
         F.col("event_time").alias("ms2_time"),
-        F.filter("tokens", lambda x: x != F.lit(0)).alias("clean_tokens"),
+        drop_pad_tokens(F.col("tokens")).alias("clean_tokens"),
     )
     j = ms2.join(ms1, ms2["precursor_ref"] == ms1["ms1_doc_id"], "inner").filter(
         F.abs(F.unix_timestamp("ms2_time") - F.unix_timestamp("ms1_time"))

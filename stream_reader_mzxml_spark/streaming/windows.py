@@ -20,15 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PAD_TOKEN = 0
-
-
-def _clean_tokens(col=None):
-    """F2+S8 composition: non-null arrays, pad tokens dropped (JVM-side)."""
-    from stream_reader_mzxml_spark.operators.filters import drop_pad_tokens
-
-    c = col if col is not None else F.col("tokens")
-    return drop_pad_tokens(c, PAD_TOKEN)
+from stream_reader_mzxml_spark.operators.filters import defined_filter, drop_pad_tokens
 
 
 def token_stats_columns() -> list:
@@ -52,11 +44,9 @@ def prepare(stream: DataFrame, watermark: str = "30 seconds") -> DataFrame:
     All expressions are Catalyst built-ins — the scan-side filter pushes down;
     nothing leaves the JVM.
     """
-    from stream_reader_mzxml_spark.operators.filters import defined_filter
-
     return (
         defined_filter(stream, "tokens")
-        .withColumn("clean_tokens", _clean_tokens())
+        .withColumn("clean_tokens", drop_pad_tokens(F.col("tokens")))
         .withWatermark("event_time", watermark)
     )
 

@@ -46,7 +46,6 @@ class TestWindows:
         got = spark.sql(f"SELECT * FROM {name}")
 
         batch = read_sequences(spark, small_seq_path)
-        expected = windows.tumbling_token_stats.__wrapped__(batch) if False else None
         # batch oracle: same plan on the batch frame (watermark is a no-op in batch)
         oracle = windows.tumbling_token_stats(batch, "10 seconds", "30 seconds")
         # append mode only emits windows closed by the final watermark:
@@ -57,6 +56,23 @@ class TestWindows:
         cols = ["ws", "source", "n_rows", "n_tokens", "sum_tokens", "min_doc_id", "max_doc_id"]
         assert _sorted_rows(got, cols) == _sorted_rows(oracle, cols)
         assert got.count() > 50  # real work happened
+
+    def test_sliding_matches_batch(self, spark, small_seq_path):
+        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
+        out = windows.sliding_token_stats(stream, "4 seconds", "1 second", "30 seconds")
+        name = f"slide_{uuid.uuid4().hex[:8]}"
+        _run_to_memory(out, name)
+        got = spark.sql(f"SELECT * FROM {name}")
+
+        batch = read_sequences(spark, small_seq_path)
+        oracle = windows.sliding_token_stats(batch, "4 seconds", "1 second", "30 seconds")
+        # every row lands in 4 overlapping windows; append mode emits a
+        # window once the final watermark (max(event_time) - 30 s) passes its end
+        max_et = batch.agg(F.max(F.unix_timestamp("event_time"))).collect()[0][0]
+        oracle = oracle.filter(F.col("ws") + 4 <= max_et - 30)
+        cols = ["ws", "source", "n_rows", "n_tokens_raw"]
+        assert _sorted_rows(got, cols) == _sorted_rows(oracle, cols)
+        assert got.count() > 200  # real work happened
 
     def test_session_windows_emit(self, spark, small_seq_path):
         stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=5)
@@ -172,16 +188,45 @@ class TestStatefulJoin:
             for r in oracle.collect()
         )
 
-    def test_native_interval_join(self, spark, small_seq_path):
-        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
-        out = stateful.interval_join_stream(stream, watermark="30 seconds")
-        name = f"nij_{uuid.uuid4().hex[:8]}"
-        _run_to_memory(out, name)
-        got = sorted(
-            (r.ms1_doc_id, r.ms2_doc_id, r.ms2_source, r.dt_seconds, tuple(r.clean_tokens), r.n_clean)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
+    def test_native_interval_join(self, spark, small_seq_path, tmp_path):
+        """The batch oracle (Spark's native interval join), which every J3
+        test and the join benchmark trust, against the ±2 s parent join
+        computed in pandas straight from the parquet data. The fixture's
+        parents sit 0-1 s away, so ms2 rows are shifted by -3..+3 s first:
+        the ±2 s bound then both keeps and drops pairs, edges included."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(small_seq_path)
+        is_ms2 = pc.starts_with(t["source"], "ms2-").to_numpy(zero_copy_only=False)
+        shift_us = np.where(is_ms2, np.arange(t.num_rows) % 7 - 3, 0) * 1_000_000
+        t = t.set_column(
+            t.schema.get_field_index("event_time"),
+            "event_time",
+            pc.add(t["event_time"], pa.array(shift_us, pa.duration("us"))),
         )
-        exp = self._oracle_rows(spark, small_seq_path)
+        path = str(tmp_path / "shifted_seq")
+        os.makedirs(path)
+        pq.write_table(t, os.path.join(path, "part-00000.parquet"))
+
+        df = t.to_pandas()
+        df = df[df["tokens"].notna()]
+        df = df.assign(t=df["event_time"].to_numpy(dtype="datetime64[s]").astype(np.int64))
+        ms1 = df[df["source"].str.startswith("ms1-")]
+        ms2 = df[df["source"].str.startswith("ms2-") & df["precursor_ref"].notna()]
+        j = ms2.merge(ms1, left_on="precursor_ref", right_on="doc_id", suffixes=("", "_p"))
+        dt = j["t"] - j["t_p"]
+        assert dt.abs().max() > stateful.DELTA_SECONDS  # some pairs fall outside
+        j = j[dt.abs() <= stateful.DELTA_SECONDS]
+        assert set(j["t"] - j["t_p"]) >= {-stateful.DELTA_SECONDS, stateful.DELTA_SECONDS}
+        exp = sorted(
+            (r.doc_id_p, r.doc_id, r.source, r.t - r.t_p, clean, len(clean))
+            for r in j.itertuples()
+            for clean in [tuple(int(x) for x in r.tokens if x != 0)]
+        )
+        got = self._oracle_rows(spark, path)
         assert len(exp) > 100
         assert got == exp  # per-row token-array equality (BASELINE invariant)
 
@@ -233,7 +278,7 @@ class TestStatefulJoin:
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         )
         exp = self._oracle_rows(spark, small_seq_path)
-        assert got == exp  # same rows as the native join and the batch oracle
+        assert got == exp  # same rows as the batch oracle (native interval join)
 
 
 @pytest.mark.spark
