@@ -173,6 +173,9 @@ def seg_pairwise_diffs(
 # ---------------------------------------------------------------------------
 
 
+_ASCII_WS = str.maketrans("", "", " \t\n\r\f\v")
+
+
 def decode_packed_pairs(
     b64: str, precision: int = 32, compressed: bool = True
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -183,11 +186,21 @@ def decode_packed_pairs(
     branches (:310-325), even indices = m/z, odd = intensity (:315-316,322-323),
     zero-intensity pairs dropped (:326). NumPy ``frombuffer`` + reshape replaces
     the reference's byte loop.
+
+    ASCII whitespace is stripped (line-wrapped ``<peaks>`` text is valid
+    mzXML); any other non-alphabet byte, bad padding, a corrupt or truncated
+    zlib stream, or a payload that is not whole (m/z, intensity) pairs
+    raises ``ValueError`` / ``zlib.error`` instead of decoding to garbage.
     """
-    raw = base64.b64decode(b64)
+    raw = base64.b64decode(b64.translate(_ASCII_WS), validate=True)
     if compressed:
         raw = zlib.decompress(raw)
-    dt = ">f4" if precision == 32 else ">f8"
+    dt = np.dtype(">f4" if precision == 32 else ">f8")
+    if len(raw) % (2 * dt.itemsize):
+        raise ValueError(
+            f"{len(raw)} payload bytes are not a whole number of "
+            f"{8 * dt.itemsize}-bit pairs"
+        )
     arr = np.frombuffer(raw, dtype=dt).astype(np.float64).reshape(-1, 2)
     keep = arr[:, 1] > 0  # zero-intensity pruning at decode (MzXMLTags.scala:326)
     return arr[keep, 0], arr[keep, 1]

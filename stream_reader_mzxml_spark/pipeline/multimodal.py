@@ -347,12 +347,27 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
+# Average and Paeth run left to right, byte by byte, on Python ints: a numpy
+# call per byte (or per pixel, across its bpp bytes) costs more than the
+# arithmetic it does.
+def _unfilter_average(filt: list, up: list, bpp: int) -> list:
+    for x in range(bpp):
+        filt[x] = (filt[x] + (up[x] >> 1)) & 255
+    for x in range(bpp, len(filt)):
+        filt[x] = (filt[x] + ((filt[x - bpp] + up[x]) >> 1)) & 255
+    return filt
+
+
+def _unfilter_paeth(filt: list, up: list, bpp: int) -> list:
+    for x in range(bpp):  # left = up-left = 0: the predictor is up
+        filt[x] = (filt[x] + up[x]) & 255
+    for x in range(bpp, len(filt)):
+        a, b, c = filt[x - bpp], up[x], up[x - bpp]
+        # distances of p = a + b - c to a, b and c
+        pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+        pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+        filt[x] = (filt[x] + pred) & 255
+    return filt
 
 
 def decode_png(buf: bytes) -> tuple[np.ndarray, int, int]:
@@ -427,16 +442,9 @@ def decode_png(buf: bytes) -> tuple[np.ndarray, int, int]:
         elif f == 2:  # Up
             recon = (filt + prev) % 256
         elif f == 3:  # Average — sequential in x
-            recon = filt.copy()
-            for x in range(stride):
-                a = recon[x - bpp] if x >= bpp else 0
-                recon[x] = (recon[x] + (a + prev[x]) // 2) % 256
+            recon = np.array(_unfilter_average(filt.tolist(), prev.tolist(), bpp))
         elif f == 4:  # Paeth — sequential in x
-            recon = filt.copy()
-            for x in range(stride):
-                a = int(recon[x - bpp]) if x >= bpp else 0
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                recon[x] = (recon[x] + _paeth(a, int(prev[x]), c)) % 256
+            recon = np.array(_unfilter_paeth(filt.tolist(), prev.tolist(), bpp))
         else:
             raise ValueError(f"unknown PNG filter type {f}")
         out[r] = recon

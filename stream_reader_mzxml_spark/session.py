@@ -10,6 +10,11 @@ One place to pin every config that matters for correctness and scale:
 - ``spark.sql.shuffle.partitions`` defaults to the core count, not 200 — on a
   real cluster this is set per-deploy (≈2-3× total cores); locally 200 partitions
   over tiny data is pure scheduling overhead.
+- ``spark.python.daemon.module`` — Python workers fork from
+  :mod:`.worker_daemon`, which stops each call's ``importlib.invalidate_caches()``
+  from re-reading ``pyspark.zip`` and the spark-core jar. The package must be
+  importable from the driver's cwd or ``PYTHONPATH`` (it already must be, to
+  unpickle the engine's UDFs).
 """
 
 from __future__ import annotations
@@ -65,6 +70,8 @@ def get_spark(
         # processing. 10k entries ≈ a few hundred MB of class metadata, cheap
         # vs recompilation; same conf applies executor-side on a cluster.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # Python workers fork from worker_daemon.py (see the module docstring)
+        .config("spark.python.daemon.module", "stream_reader_mzxml_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,11 +3,14 @@
 from __future__ import annotations
 
 import base64
+import string
 import zlib
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import assume, given, settings
+from hypothesis import strategies as st
 
 from stream_reader_mzxml_spark.functions.kernels import (
     decode_packed_pairs,
@@ -53,6 +56,93 @@ class TestDecode:
         pairs = np.column_stack([rng.random(50) * 1000, rng.random(50) + 0.1])
         mz, it = decode_packed_pairs(_pack(pairs, 64, True), 64, True)
         assert len(mz) == len(it) == 50
+
+
+_B64_ALPHABET = frozenset(string.ascii_letters + string.digits + "+/=")
+_DECODE_ERRORS = (ValueError, zlib.error)
+_adv = settings(max_examples=150, deadline=None)
+_peaks = st.lists(
+    st.tuples(
+        st.floats(0.0, 2000.0, width=32), st.floats(0.0, 1e6, width=32)
+    ),
+    min_size=1,
+    max_size=24,
+)
+_precision = st.sampled_from([32, 64])
+
+
+class TestDecodeAdversarial:
+    """Malformed ``<peaks>`` payloads (ROADMAP Direction 4): every one raises,
+    none decodes to arrays."""
+
+    @_adv
+    @given(_peaks, _precision, st.booleans(), st.data())
+    def test_ascii_whitespace_is_ignored(self, pairs, precision, compress, data):
+        text = _pack(pairs, precision, compress)
+        wrapped = text
+        for _ in range(data.draw(st.integers(1, 6))):
+            i = data.draw(st.integers(0, len(wrapped)))
+            ws = data.draw(st.sampled_from(" \t\n\r\f\v"))
+            wrapped = wrapped[:i] + ws + wrapped[i:]
+        want = decode_packed_pairs(text, precision, compress)
+        got = decode_packed_pairs(wrapped, precision, compress)
+        assert all(np.array_equal(w, g) for w, g in zip(want, got))
+
+    @_adv
+    @given(
+        _peaks, _precision, st.booleans(), st.data(),
+        st.characters(
+            exclude_characters=list(_B64_ALPHABET) + list(" \t\n\r\f\v")
+        ),
+    )
+    def test_non_alphabet_character_raises(
+        self, pairs, precision, compress, data, bad
+    ):
+        text = _pack(pairs, precision, compress)
+        i = data.draw(st.integers(0, len(text)))
+        with pytest.raises(ValueError):
+            decode_packed_pairs(text[:i] + bad + text[i:], precision, compress)
+
+    @_adv
+    @given(_peaks, _precision, st.booleans(), st.data())
+    def test_truncated_base64_raises(self, pairs, precision, compress, data):
+        text = _pack(pairs, precision, compress)
+        cut = data.draw(st.integers(1, len(text) - 1))
+        # a raw payload cut on a 4-char quantum (3 bytes each) AND a whole
+        # pair is a valid shorter array (only peaksCount can tell)
+        assume(compress or cut % 4 or (3 * cut // 4) % (2 * precision // 8))
+        with pytest.raises(_DECODE_ERRORS):
+            decode_packed_pairs(text[:cut], precision, compress)
+
+    @_adv
+    @given(_peaks, _precision, st.data())
+    def test_corrupt_zlib_stream_raises(self, pairs, precision, data):
+        raw = np.asarray(pairs, dtype=np.float64).reshape(-1)
+        raw = raw.astype(">f4" if precision == 32 else ">f8").tobytes()
+        blob = bytearray(zlib.compress(raw))
+        i = data.draw(st.integers(0, len(blob) - 1))
+        blob[i] ^= data.draw(st.integers(1, 255))
+        # a flip in the 2-byte header or the deflate body can land on bits
+        # inflate never reads (a stored block's alignment padding, or another
+        # valid header): then the stream still means ``raw``, and there is
+        # nothing to detect; a flip in the Adler-32 trailer always counts
+        try:
+            inflated = zlib.decompressobj(-15).decompress(bytes(blob[2:-4]))
+        except zlib.error:
+            inflated = None
+        assume(i >= len(blob) - 4 or inflated != raw)
+        text = base64.b64encode(bytes(blob)).decode("ascii")
+        with pytest.raises(_DECODE_ERRORS):
+            decode_packed_pairs(text, precision, True)
+
+    @_adv
+    @given(_precision, st.booleans(), st.binary(min_size=1, max_size=200))
+    def test_partial_pair_payload_raises(self, precision, compress, payload):
+        assume(len(payload) % (2 * precision // 8))
+        raw = zlib.compress(payload) if compress else payload
+        text = base64.b64encode(raw).decode("ascii")
+        with pytest.raises(ValueError, match="whole number"):
+            decode_packed_pairs(text, precision, compress)
 
 
 class TestNearest:

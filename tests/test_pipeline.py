@@ -1523,6 +1523,46 @@ class TestPngCodec:
         assert np.array_equal(px[1, 1], [9.0, 8.0, 7.0])  # idx row1 = [2, 3]
         assert np.array_equal(px[3, 0], [0.0, 255.0, 0.0])  # idx row3 = [1, 0]
 
+    @staticmethod
+    def _byte_loop_unfilter(scan, height, stride, bpp):
+        """Reference unfilter: one PNG-spec step per byte (all five types)."""
+
+        def paeth(a, b, c):
+            p = a + b - c
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            if pa <= pb and pa <= pc:
+                return a
+            return b if pb <= pc else c
+
+        out = [[0] * stride for _ in range(height + 1)]  # out[0]: zero row
+        for r in range(height):
+            f = scan[r * (stride + 1)]
+            row = scan[r * (stride + 1) + 1 : (r + 1) * (stride + 1)]
+            up, cur = out[r], out[r + 1]
+            for x in range(stride):
+                a = cur[x - bpp] if x >= bpp else 0
+                c = up[x - bpp] if x >= bpp else 0
+                pred = [0, a, up[x], (a + up[x]) // 2, paeth(a, up[x], c)][f]
+                cur[x] = (row[x] + pred) % 256
+        return np.array(out[1:], dtype=np.uint8)
+
+    @pytest.mark.parametrize("channels", [3, 4])
+    @pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4])
+    def test_unfilter_matches_byte_loop(self, channels, ftype):
+        # any byte string is a valid filtered scanline: random rows, one type
+        w = h = 64
+        stride = w * channels
+        rng = np.random.default_rng(100 * ftype + channels)
+        rows = rng.integers(0, 256, size=(h, stride), dtype=np.uint8)
+        scan = bytearray(
+            np.hstack([np.full((h, 1), ftype, dtype=np.uint8), rows]).tobytes()
+        )
+        color = {3: 2, 4: 6}[channels]
+        ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, color, 0, 0, 0])
+        px, W, H = multimodal.decode_png(self._chunked(ihdr, scan))
+        want = self._byte_loop_unfilter(bytes(scan), h, stride, channels)
+        assert np.array_equal(px.astype(np.uint8).reshape(h, stride), want)
+
     def test_crc_corruption_detected(self):
         buf = bytearray(
             multimodal.png_encode(np.zeros(16 * 8 * 3, dtype=np.uint8), 16, 8, 3)
