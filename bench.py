@@ -349,6 +349,8 @@ def bench_once(
         streaming = run_streaming_suite(spark, seq_path, total_tokens, n_batches)
     finally:
         spark.stop()
+    # stderr, not the JSON line: consumers may keep only its last 2,000 chars
+    log(f"[bench] loadavg_by_query {json.dumps(query_loads)}")
 
     batch_total = round(sum(queries.values()), 3)
     stream_total = round(sum(v["sec"] for v in streaming.values()), 3)
@@ -370,7 +372,6 @@ def bench_once(
         # adjudicated as clean or contended without external context
         "loadavg_before": round(load_before[0], 2),
         "loadavg_after": round(os.getloadavg()[0], 2),
-        "loadavg_by_query": query_loads,
         # transparent input-layout note: "rechunked" = same rows rewritten
         # from the fixture's single-row-group files into a cluster-realistic
         # many-file layout (see rechunk_tables docstring); one-time build

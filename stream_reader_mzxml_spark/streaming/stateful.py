@@ -5,15 +5,15 @@ each ms2 record names its parent ms1 record (``precursor_ref``) and must match
 within a ±2 s event-time interval.
 
 ``stateful_shard_join`` runs it with ``applyInPandasWithState`` (per
-north_rule): the stream is keyed by the *ms1 source shard* (plus a salt on
-the parent doc to split the hot shard), so each group holds many docs and the
-per-group logic is a numpy index probe — one Arrow batch per (shard, salt),
-never one Python call per doc, and no pandas frame but the output. Per-key
-state buffers the shard's recent ms1 rows and any early-arriving ms2 rows;
-matches emit as both sides arrive and ``EventTimeTimeout`` + inline
-watermark purging bound the state. This is the reference's "collect MS2 side
-then probe" (glucosinolateIons.sc:28-29) re-expressed with bounded per-shard
-state instead of a full materialization.
+north_rule): the stream is keyed by a salt on the parent doc id alone, so
+each group holds many docs from every source shard and the per-group logic is
+a numpy index probe — one Arrow batch per salt, never one Python call per
+doc, and no pandas frame but the output. Per-key state buffers the group's
+recent ms1 rows and any early-arriving ms2 rows; matches emit as both sides
+arrive and ``EventTimeTimeout`` + inline watermark purging bound the state.
+This is the reference's "collect MS2 side then probe"
+(glucosinolateIons.sc:28-29) re-expressed with bounded per-group state
+instead of a full materialization.
 
 ``shard_join_batch_oracle`` re-states the same semantics as Spark's native
 batch interval join; for in-watermark data both emit the same rows. The
@@ -52,7 +52,7 @@ JOIN_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# state: the shard's buffered ms1 rows + early ms2 arrivals, per (shard, salt)
+# state: the group's buffered ms1 rows + early ms2 arrivals, per salt
 STATE_SCHEMA = StructType(
     [
         StructField("ms1_docs", ArrayType(StringType())),
@@ -79,9 +79,9 @@ _EMPTY_STATE = ([], [], [], [], [], [], [])
 def _shard_join_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-(shard, salt) stateful join — numpy arrays over all docs of the group.
+    """Per-salt stateful join — numpy arrays over all docs of the group.
 
-    State holds the shard's live ms1 rows (probe side) and parent-absent ms2
+    State holds the group's live ms1 rows (probe side) and parent-absent ms2
     rows (early arrivals) as parallel columns, read straight into numpy
     arrays. Each ms2 row (buffered + new) looks up its named parent in one
     ``pd.Index.get_indexer`` over the ms1 doc ids: a found parent either emits
@@ -93,7 +93,7 @@ def _shard_join_fn(
     ``wm - delta`` can never match an in-watermark ms2 row again, and a
     buffered ms2 row older than ``wm - delta`` can only be completed by an ms1
     row that would itself be beyond-watermark late. EventTimeTimeout fires a
-    final purge once the shard goes quiet (SURVEY §7: bound state via
+    final purge once the group goes quiet (SURVEY §7: bound state via
     watermark + event-time timeout without changing emitted rows). A call
     that emits nothing yields nothing.
     """
@@ -181,17 +181,17 @@ def _save(state: GroupState, ms1: list[np.ndarray], ms2: list[np.ndarray]) -> No
 
 
 def stateful_shard_join(
-    stream: DataFrame, watermark: str = "30 seconds", n_salts: int = 8
+    stream: DataFrame, watermark: str = "30 seconds", n_salts: int = 64
 ) -> DataFrame:
     """J3 via ``applyInPandasWithState``: one pass over the unified stream.
 
-    Group key = (ms1 source shard, salt). The shard is the parent doc's source
-    — for ms1 rows their own ``source``, for ms2 rows the source prefix of
-    ``precursor_ref`` (doc_id layout ``{source}-{seq:09d}``) — so a parent and
-    its children always co-locate. The salt is a pure function of the parent
-    doc id, splitting the hot shard (~40 % of rows) across ``n_salts`` state
-    partitions: the explicit skew handling the north_rule requires where AQE
-    cannot help (stateful streaming).
+    Group key = salt, a pure function of the parent doc id (an ms1 row's
+    ``doc_id``, an ms2 row's ``precursor_ref``), so a parent and its children
+    always co-locate; a doc id carries its source, so no shard key is needed.
+    All sources' parents (the hot one's ~40 % of rows too) spread over the
+    ``n_salts`` groups: the explicit skew handling AQE cannot give stateful
+    streaming. ``n_salts`` counts all state groups, so it caps the operator's
+    parallelism; the default 64 is 8 ms1 sources × 8.
     """
     # driver-side imports: Python workers import this module for
     # _shard_join_fn and need none of the plan-building helpers
@@ -201,7 +201,6 @@ def stateful_shard_join(
     keyed = (
         stream.filter(F.col("tokens").isNotNull())
         .filter(F.col("source").startswith("ms1-") | F.col("precursor_ref").isNotNull())
-        .withColumn("shard", F.substring_index(parent, "-", 2))
         .withColumn("salt", F.pmod(F.hash(parent), F.lit(n_salts)))
         .withWatermark("event_time", watermark)
         # probe-side (ms1) rows never use their tokens — null them out so
@@ -210,7 +209,6 @@ def stateful_shard_join(
         # so the Python operator only routes already-clean arrays instead of
         # re-cleaning them per batch (codegen'd filter vs numpy reduceat)
         .select(
-            "shard",
             "salt",
             "doc_id",
             "source",
@@ -222,7 +220,7 @@ def stateful_shard_join(
             "precursor_ref",
         )
     )
-    return keyed.groupBy("shard", "salt").applyInPandasWithState(
+    return keyed.groupBy("salt").applyInPandasWithState(
         _shard_join_fn,
         outputStructType=JOIN_OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

@@ -1,7 +1,7 @@
 """Spark-free tests of the shard-join group function (``_shard_join_fn``).
 
-The function is driven directly with ``GroupState`` objects over three
-simulated triggers and two timeout passes of one (shard, salt) group. Every
+The function is driven directly with ``GroupState`` objects over simulated
+triggers and timeout passes of one salt group. Every
 saved state takes the serializer's round trip
 (``CPickleSerializer().dumps(STATE_SCHEMA.toInternal(...))``) and is read back
 by an unpickler that, like the JVM's, knows no Python classes: a numpy
@@ -28,7 +28,7 @@ from stream_reader_mzxml_spark.streaming.stateful import (
     _shard_join_fn,
 )
 
-KEY = ("ms1-00", 3)
+KEY = (3,)
 T0_MS = int(pd.Timestamp("2026-01-01", tz="UTC").timestamp() * 1000)
 
 
@@ -65,17 +65,24 @@ def _state(value: Row | None, wm_ms: int, timed_out: bool = False) -> GroupState
     )
 
 
-def _ms1(doc: str, t: float) -> dict:
-    return {"doc_id": f"ms1-00-{doc}", "source": "ms1-00", "t": t, "tokens": None, "ref": None}
+def _ms1(doc: str, t: float, src: str = "ms1-00") -> dict:
+    return {"doc_id": f"{src}-{doc}", "source": src, "t": t, "tokens": None, "ref": None}
 
 
-def _ms2(doc: str, t: float, parent: str, tokens: list[int]) -> dict:
+def _ms2(
+    doc: str,
+    t: float,
+    parent: str,
+    tokens: list[int],
+    src: str = "ms2-01",
+    parent_src: str = "ms1-00",
+) -> dict:
     return {
-        "doc_id": f"ms2-01-{doc}",
-        "source": "ms2-01",
+        "doc_id": f"{src}-{doc}",
+        "source": src,
         "t": t,
         "tokens": np.array(tokens, dtype=np.int32),
-        "ref": f"ms1-00-{parent}",
+        "ref": f"{parent_src}-{parent}",
     }
 
 
@@ -83,8 +90,7 @@ def _frame(rows: list[dict]) -> pd.DataFrame:
     """One input batch shaped as pyspark hands it to the group function."""
     return pd.DataFrame(
         {
-            "shard": KEY[0],
-            "salt": np.int32(KEY[1]),
+            "salt": np.int32(KEY[0]),
             "doc_id": [r["doc_id"] for r in rows],
             "source": [r["source"] for r in rows],
             "event_time": pd.to_datetime([_ms(r["t"]) for r in rows], unit="ms"),
@@ -224,3 +230,61 @@ class TestShardJoinFn:
             assert all(type(d) is str for c in (0, 2, 4, 5) for d in saved[c])
             assert all(type(t) is int for c in (1, 3) for t in saved[c])
             assert all(type(v) is int for toks in saved[6] for v in toks)
+
+
+class TestMixedShardGroup:
+    """One salt group holds parents from two ms1 sources (ms1-00, ms1-02)
+    and children of both: the group function never assumes one source."""
+
+    @pytest.fixture(scope="class")
+    def run(self):
+        calls = {}
+        calls[1] = _call(
+            None,
+            0,
+            [
+                _ms1("P", 10),
+                _ms1("Q", 10, src="ms1-02"),
+                _ms2("a", 11, "P", [1]),
+                _ms2("b", 9, "Q", [2, 3], src="ms2-03", parent_src="ms1-02"),
+                _ms2("c", 20, "R", [4]),  # early: ms1-00-R not here yet
+                _ms2("d", 21, "S", [5], src="ms2-03", parent_src="ms1-02"),
+                # parent in a third source that never arrives
+                _ms2("e", 20, "X", [6], src="ms2-05", parent_src="ms1-04"),
+            ],
+        )
+        calls[2] = _call(
+            calls[1][2],
+            _ms(5),
+            [_ms1("R", 19), _ms1("S", 22, src="ms1-02")],
+        )
+        # wm − 2 s = 18 s keeps e (20 s); 28 s purges it and everything else
+        calls["t_live"] = _call(calls[2][2], _ms(20), None)
+        calls["t_stale"] = _call(calls["t_live"][2], _ms(30), None)
+        return calls
+
+    def test_first_call_emits_both_sources(self, run):
+        out, _, saved = run[1]
+        assert out == [
+            ("ms1-00-P", "ms2-01-a", "ms2-01", 1, (1,), 1),
+            ("ms1-02-Q", "ms2-03-b", "ms2-03", -1, (2, 3), 2),
+        ]
+        assert _ms1_docs(saved) == {"ms1-00-P", "ms1-02-Q"}
+        assert _ms2_docs(saved) == ["ms2-01-c", "ms2-03-d", "ms2-05-e"]
+
+    def test_early_children_complete_later(self, run):
+        out, _, saved = run[2]
+        assert out == [
+            ("ms1-00-R", "ms2-01-c", "ms2-01", 1, (4,), 1),
+            ("ms1-02-S", "ms2-03-d", "ms2-03", -1, (5,), 1),
+        ]
+        assert _ms2_docs(saved) == ["ms2-05-e"]
+
+    def test_absent_parent_buffered_until_purged(self, run):
+        out, state, saved = run["t_live"]
+        assert out == []
+        assert _ms2_docs(saved) == ["ms2-05-e"]
+        assert state.exists and not state._removed
+        out, state, saved = run["t_stale"]
+        assert out == []
+        assert state._removed and saved is None

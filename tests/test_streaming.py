@@ -280,6 +280,22 @@ class TestStatefulJoin:
         exp = self._oracle_rows(spark, small_seq_path)
         assert got == exp  # same rows as the batch oracle (native interval join)
 
+    def test_state_groups_bounded_by_salts(self, spark, small_seq_path):
+        """The state key is the parent-hash salt alone: with 8 ms1 shards in
+        the stream, 4 salts still mean at most 4 state rows at any trigger."""
+        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
+        out = stateful.stateful_shard_join(stream, watermark="30 seconds", n_salts=4)
+        name = f"ssj4_{uuid.uuid4().hex[:8]}"
+        q = _run_to_memory(out, name)
+        got = sorted(
+            (r.ms1_doc_id, r.ms2_doc_id, r.ms2_source, r.dt_seconds, tuple(r.clean_tokens), r.n_clean)
+            for r in spark.sql(f"SELECT * FROM {name}").collect()
+        )
+        assert got == self._oracle_rows(spark, small_seq_path)
+        state_rows = [p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress]
+        assert state_rows and max(state_rows) <= 4
+        assert max(state_rows) > 0  # the groups really held state
+
 
 @pytest.mark.spark
 class TestStreamingDedup:
