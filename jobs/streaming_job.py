@@ -53,9 +53,9 @@ def main() -> int:
     # ForeachBatch sinks and AvailableNow triggers, i.e. both modes this
     # job runs. The exactly-once contract here rests on the batch-id-
     # idempotent foreachBatch commits instead.)
-    # Not session.get_spark: its spark.python.daemon.module must be
-    # importable when the daemon starts, but --py-files deps.zip reaches a
-    # worker's path only per task, so this job keeps Spark's default daemon.
+    # Not session.get_spark: its daemon module must be importable when the
+    # daemon starts, but --py-files deps.zip reaches a worker's path only per
+    # task, so this job keeps Spark's default daemon (no zip patch, no freeze).
     spark = (
         SparkSession.builder.appName(f"token-stream-{args.suite}")
         .config("spark.sql.session.timeZone", "UTC")

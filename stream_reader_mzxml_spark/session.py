@@ -12,9 +12,9 @@ One place to pin every config that matters for correctness and scale:
   over tiny data is pure scheduling overhead.
 - ``spark.python.daemon.module`` — Python workers fork from
   :mod:`.worker_daemon`, which stops each call's ``importlib.invalidate_caches()``
-  from re-reading ``pyspark.zip`` and the spark-core jar. The package must be
-  importable from the driver's cwd or ``PYTHONPATH`` (it already must be, to
-  unpickle the engine's UDFs).
+  from re-reading ``pyspark.zip`` and the spark-core jar and freezes the
+  imported heap the workers fork from. The package must be importable from
+  the driver's cwd or ``PYTHONPATH`` (as it must be to unpickle the UDFs).
 """
 
 from __future__ import annotations

@@ -18,6 +18,12 @@ adopts the directory already in ``zipimport._zip_directory_cache``.
 CPython 3.13 invalidates lazily (``_get_files`` re-reads on demand), so the
 patch is applied only below 3.13.
 
+It also freezes the heap the workers fork from. A reused worker's full
+``gc.collect()`` after each task (``pyspark/daemon.py:244``) walked ~70 k
+import-time objects of pandas, pyarrow and ``pyspark.worker``: 20–45 ms CPU
+a task (BASELINE.md, "Frozen daemon heap"). :func:`prepare` imports them,
+then calls ``gc.freeze()`` before the fork; task garbage is still collected.
+
 Workers start as ``python -m stream_reader_mzxml_spark.worker_daemon``: the
 package must be importable from the driver's cwd or ``PYTHONPATH``, as it
 already must be to unpickle the engine's UDFs.
@@ -25,6 +31,7 @@ already must be to unpickle the engine's UDFs.
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import sys
@@ -66,10 +73,18 @@ def install() -> None:
         zipimport.zipimporter.invalidate_caches = _invalidate_caches
 
 
-if __name__ == "__main__":
+def prepare() -> None:
+    """Patch, import what every pandas UDF worker imports, and freeze."""
     install()
     # one stamped read of every archive here, so forked workers start current
     importlib.invalidate_caches()
+    import pandas, pyarrow, pyspark.daemon  # noqa: E401, F401
+    gc.collect()
+    gc.freeze()
+
+
+if __name__ == "__main__":
+    prepare()
     from pyspark.daemon import manager
 
     manager()
