@@ -10,25 +10,32 @@ Cluster launch (the master/executors come from spark-submit, not the code):
         --checkpoint <checkpoint dir> \\
         --suite windowed_agg|stateful_join|sink --continuous
 
-Local smoke: spark-submit --master 'local[8]' --py-files deps.zip ...
+Local smoke (Spark's default of 200 shuffle partitions is slow for small
+stateful runs): spark-submit --master 'local[8]' --conf
+spark.sql.shuffle.partitions=8 --py-files deps.zip ...
+
+The session is ``session.get_spark``'s (topology stays spark-submit's), and
+every suite writes through the exactly-once sink, so each one leaves
+``batch_id=N`` output with ``_COMMITTED`` markers and ``_lineage`` tables.
 
 ``--continuous`` uses a processingTime trigger (long-running service);
 default is availableNow (drain pending input, then exit 0) — the mode the
 kill/resume contract is tested under. Resuming after a kill is just
-re-running the same command with the same --checkpoint.
+re-running the same command with the same --checkpoint. (Async progress
+tracking is not offered: in OSS Spark 4.1 it is Kafka-sink-only and rejects
+ForeachBatch sinks and AvailableNow triggers.)
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-from pyspark.sql import SparkSession
+from stream_reader_mzxml_spark.session import get_spark
+from stream_reader_mzxml_spark.sources.readers import read_sequences_stream
+from stream_reader_mzxml_spark.streaming.sink import start_exactly_once
+from stream_reader_mzxml_spark.streaming.stateful import stateful_shard_join
+from stream_reader_mzxml_spark.streaming.windows import salted_tumbling_token_stats
 
 
 def main() -> int:
@@ -47,29 +54,7 @@ def main() -> int:
     ap.add_argument("--trigger-interval", default="10 seconds")
     args = ap.parse_args()
 
-    # master / executor topology comes from spark-submit; only pin the
-    # semantics-critical session configs here. (Async progress tracking is
-    # NOT offered: in OSS Spark 4.1 it is Kafka-sink-only — it rejects
-    # ForeachBatch sinks and AvailableNow triggers, i.e. both modes this
-    # job runs. The exactly-once contract here rests on the batch-id-
-    # idempotent foreachBatch commits instead.)
-    # Not session.get_spark: its daemon module must be importable when the
-    # daemon starts, but --py-files deps.zip reaches a worker's path only per
-    # task, so this job keeps Spark's default daemon (no zip patch, no freeze).
-    spark = (
-        SparkSession.builder.appName(f"token-stream-{args.suite}")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-
-    from stream_reader_mzxml_spark.sources.readers import read_sequences_stream
-    from stream_reader_mzxml_spark.streaming.sink import start_exactly_once
-    from stream_reader_mzxml_spark.streaming.stateful import stateful_shard_join
-    from stream_reader_mzxml_spark.streaming.windows import (
-        salted_tumbling_token_stats,
-    )
-
+    spark = get_spark(app_name=f"token-stream-{args.suite}")
     stream = read_sequences_stream(
         spark, args.input, max_files_per_trigger=args.max_files_per_trigger
     )
@@ -80,23 +65,16 @@ def main() -> int:
     )
 
     if args.suite == "sink":
-        q = start_exactly_once(
-            stream, args.output, args.checkpoint, trigger=trigger
-        )
+        df, sink_cols = stream, {}
+    elif args.suite == "windowed_agg":
+        df = salted_tumbling_token_stats(stream, watermark=args.watermark)
+        sink_cols = {"token_col": None, "id_col": "source"}
     else:
-        df = (
-            salted_tumbling_token_stats(stream, watermark=args.watermark)
-            if args.suite == "windowed_agg"
-            else stateful_shard_join(stream, watermark=args.watermark)
-        )
-        q = (
-            df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", args.output)
-            .option("checkpointLocation", args.checkpoint)
-            .trigger(**trigger)
-            .start()
-        )
+        df = stateful_shard_join(stream, watermark=args.watermark)
+        sink_cols = {"token_col": "clean_tokens", "id_col": "ms2_doc_id"}
+    q = start_exactly_once(
+        df, args.output, args.checkpoint, trigger=trigger, **sink_cols
+    )
     q.awaitTermination()
     return 0
 

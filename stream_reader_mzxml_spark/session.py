@@ -13,8 +13,14 @@ One place to pin every config that matters for correctness and scale:
 - ``spark.python.daemon.module`` — Python workers fork from
   :mod:`.worker_daemon`, which stops each call's ``importlib.invalidate_caches()``
   from re-reading ``pyspark.zip`` and the spark-core jar and freezes the
-  imported heap the workers fork from. The package must be importable from
-  the driver's cwd or ``PYTHONPATH`` (as it must be to unpickle the UDFs).
+  imported heap the workers fork from.
+- ``spark.executorEnv.PYTHONPATH`` — the directory or zip this package was
+  imported from, so the daemon imports the driver's copy from any cwd
+  (``--py-files deps.zip`` reaches a worker's path only per task).
+
+Topology (``master``, shuffle partitions, ``spark.driver.memory``) is set only
+when this call launches the JVM; under spark-submit (``PYSPARK_GATEWAY_PORT``
+set) it is spark-submit's, and ``cpus``/``shuffle_partitions`` are ignored.
 """
 
 from __future__ import annotations
@@ -22,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the sys.path entry this package was imported from: a directory or a zip
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -32,32 +41,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all cores.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all cores;
+    it and ``shuffle_partitions`` apply only when this call starts the JVM.
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # 12g, not "as much as the box has": GC logs across the full bench
-        # suite show ~1.6g live / 11.6g peak committed. An oversized max
-        # lets G1 grow the heap in large increments, and each expansion is
-        # a page-commit + THP-compaction storm (observed: 4-5 cores of
-        # kernel time for tens of seconds, stalling whichever query
-        # triggered it — the round-3 "random mid-suite stall"). A bounded
-        # max caps expansion size; pre-touch was measured WORSE (one giant
-        # storm at startup, ~240MB/s under kcompactd on this kernel).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
         # The generated-class cache defaults to 100 entries — a query battery
@@ -72,7 +66,24 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         # Python workers fork from worker_daemon.py (see the module docstring)
         .config("spark.python.daemon.module", "stream_reader_mzxml_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
     )
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        if cpus is None:
+            cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+            # 12g, not "as much as the box has": GC logs across the full bench
+            # suite show ~1.6g live / 11.6g peak committed. An oversized max
+            # lets G1 grow the heap in large increments, and each expansion is
+            # a page-commit + THP-compaction storm (observed: 4-5 cores of
+            # kernel time for tens of seconds, stalling whichever query
+            # triggered it — the round-3 "random mid-suite stall"). A bounded
+            # max caps expansion size; pre-touch was measured WORSE (one giant
+            # storm at startup, ~240MB/s under kcompactd on this kernel).
+            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

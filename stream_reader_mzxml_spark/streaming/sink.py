@@ -19,14 +19,14 @@ Main.scala:97-98) and its only "index" is the byte-offset table per scan
 
 At scale: the lineage aggregation groups on ``spark_partition_id()`` — a
 map-side-only shuffle of one row per partition, negligible vs the data write.
+
+Markers and the batch listing go through the driver's Hadoop ``FileSystem``,
+so a ``file://``, ``hdfs://`` or ``s3a://`` output dir works like a local one.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -48,19 +48,24 @@ def _token_count(token_col: str | None) -> Column:
     )
 
 
+def _hadoop_path(spark: SparkSession, path: str, *children: str):
+    """``(FileSystem, Path)`` for ``path/child/...`` on the driver's Hadoop conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    for child in children:
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(hpath, child)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _batch_writer(
     out_dir: str,
     lineage_dir: str,
     token_col: str | None,
     id_col: str = "doc_id",
 ):
-    os.makedirs(out_dir, exist_ok=True)
-    os.makedirs(lineage_dir, exist_ok=True)
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(out_dir, f"batch_id={batch_id}")
-        marker = os.path.join(target, "_COMMITTED")
-        if os.path.exists(marker):
+        target = f"batch_id={batch_id}"
+        fs, marker = _hadoop_path(batch_df.sparkSession, out_dir, target, "_COMMITTED")
+        if fs.exists(marker):
             # replayed batch already fully committed: skip the write, but
             # still drain the frame — Spark validates that every state store
             # of a stateful upstream committed for this batch, and an
@@ -89,12 +94,13 @@ def _batch_writer(
                     "max_doc_id",
                 )
             )
-            batch_df.drop("__pid").write.mode("overwrite").parquet(target)
-            lineage.write.mode("overwrite").parquet(
-                os.path.join(lineage_dir, f"batch_id={batch_id}")
+            batch_df.drop("__pid").write.mode("overwrite").parquet(
+                marker.getParent().toString()
             )
-            with open(marker, "w") as fh:
-                json.dump({"batch_id": batch_id}, fh)
+            lineage.write.mode("overwrite").parquet(
+                _hadoop_path(batch_df.sparkSession, lineage_dir, target)[1].toString()
+            )
+            fs.create(marker, True).close()
         finally:
             batch_df.unpersist()
 
@@ -121,7 +127,7 @@ def start_exactly_once(
     row and token counts with zero extra passes — the replacement for the
     reference's two-pass count-then-process shape
     (MainGlucosinolates.scala:105-130)."""
-    lineage_dir = lineage_dir or os.path.join(out_dir, "_lineage")
+    lineage_dir = lineage_dir or f"{out_dir}/_lineage"
     observed = stream_df.observe(
         "rates",
         F.count(F.lit(1)).alias("n_rows"),
@@ -138,12 +144,11 @@ def start_exactly_once(
 
 def read_output(spark, out_dir: str) -> DataFrame:
     """Read back everything committed by the exactly-once sink."""
-    import glob
-
+    fs, pattern = _hadoop_path(spark, out_dir, "batch_id=*")
     dirs = [
-        d
-        for d in glob.glob(os.path.join(out_dir, "batch_id=*"))
-        if os.path.exists(os.path.join(d, "_COMMITTED"))
+        st.getPath().toString()
+        for st in fs.globStatus(pattern) or []
+        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_COMMITTED"))
     ]
     if not dirs:
         raise FileNotFoundError(f"no committed batches under {out_dir}")
@@ -152,5 +157,5 @@ def read_output(spark, out_dir: str) -> DataFrame:
 
 def read_lineage(spark, lineage_dir: str) -> DataFrame:
     return spark.read.schema(LINEAGE_SCHEMA).option("basePath", lineage_dir).parquet(
-        os.path.join(lineage_dir, "batch_id=*")
+        _hadoop_path(spark, lineage_dir, "batch_id=*")[1].toString()
     )

@@ -2,22 +2,28 @@
 
 from __future__ import annotations
 
+import glob
+import itertools
 import os
+import subprocess
 import sys
+import zipfile
 
+import pyspark
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from stream_reader_mzxml_spark.datagen import write_sequences  # noqa: E402
 from stream_reader_mzxml_spark.session import get_spark  # noqa: E402
 
 
 def pytest_collection_modifyitems(items):
-    # every test that takes the session carries the ``spark`` marker, so
-    # ``-m "not spark"`` is a lane that never starts a JVM
+    # every test that takes the session or spark-submit carries the ``spark``
+    # marker, so ``-m "not spark"`` is a lane that never starts a JVM
     for item in items:
-        if "spark" in getattr(item, "fixturenames", ()):
+        if {"spark", "spark_submit"} & set(getattr(item, "fixturenames", ())):
             item.add_marker(pytest.mark.spark)
 
 
@@ -58,3 +64,52 @@ def small_seq_path(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def spark_submit(tmp_path):
+    """Run ``spark-submit --py-files deps.zip <argv>`` as a cluster user would.
+
+    pyspark's bundled ``bin/spark-submit`` (its own ``SPARK_HOME``), the cwd
+    ``tmp_path`` outside the repo, no ``PYTHONPATH``, and ``deps.zip`` zipped
+    there from the package. ``run(*argvs)`` starts one run per argv at once,
+    waits for all, fails the test on a non-zero exit with the run's log
+    tail, and returns their stdouts.
+    """
+    with zipfile.ZipFile(tmp_path / "deps.zip", "w") as z:
+        pattern = os.path.join(REPO, "stream_reader_mzxml_spark", "**", "*.py")
+        for path in sorted(glob.glob(pattern, recursive=True)):
+            z.write(path, os.path.relpath(path, REPO))
+    home = os.path.dirname(pyspark.__file__)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_HOME=home, PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+    )
+    n_logs = itertools.count()
+
+    def run(*argvs):
+        procs = []
+        try:
+            for argv in argvs:
+                log = tmp_path / f"spark-submit-{next(n_logs)}.log"
+                with open(log, "w") as err:
+                    procs.append((log, subprocess.Popen(
+                        [os.path.join(home, "bin", "spark-submit"),
+                         "--py-files", "deps.zip", *argv],
+                        cwd=tmp_path, env=env, stdout=subprocess.PIPE,
+                        stderr=err, text=True,
+                    )))
+            outs = [p.communicate(timeout=600)[0] for _, p in procs]
+        finally:
+            for _, p in procs:
+                if p.poll() is None:
+                    p.kill()
+                    p.wait()
+        for (log, p), argv in zip(procs, argvs):
+            if p.returncode:
+                pytest.fail(f"spark-submit {argv} exited {p.returncode}:\n"
+                            + log.read_text()[-4000:])
+        return outs
+
+    return run

@@ -179,3 +179,72 @@ def test_session_workers_inherit_frozen_heap(spark):
         frozen, tracked = map(int, r.c.split(","))
         assert frozen > 0, "workers fork from an unfrozen daemon"
         assert frozen > tracked
+
+
+# A driver that runs one pandas UDF and prints what its Python worker saw.
+# argv[1], when given, is put on the driver's sys.path (and nowhere else).
+_PROBE = """
+import json, sys
+if len(sys.argv) > 1:
+    sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from pyspark.sql import functions as F
+from stream_reader_mzxml_spark.session import get_spark
+
+spark = get_spark(app_name="probe")
+
+
+@F.pandas_udf("string")
+def probe(s: pd.Series) -> pd.Series:
+    import gc, json, zipimport
+    import stream_reader_mzxml_spark as pkg
+
+    stamps = getattr(zipimport.zipimporter.invalidate_caches, "stamps", None)
+    seen = json.dumps({
+        "frozen": gc.get_freeze_count(),
+        "stamps": "stock" if stamps is None else sorted(stamps),
+        "pkg": pkg.__file__,
+    })
+    return s.map(lambda _: seen)
+
+
+print(json.dumps({
+    "task": json.loads(spark.range(1).select(probe("id")).first()[0]),
+    "master": spark.sparkContext.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+}))
+"""
+
+
+def test_spark_submit_workers_run_engine_daemon(spark_submit, tmp_path):
+    """``get_spark`` under ``spark-submit --py-files deps.zip``: the workers
+    fork from the engine daemon, which imports the shipped zip, and
+    spark-submit's topology flags survive."""
+    (tmp_path / "probe.py").write_text(_PROBE)
+    (out,) = spark_submit([
+        "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7",
+        "probe.py",
+    ])
+    r = json.loads(out.splitlines()[-1])
+    assert r["master"] == "local[2]"
+    assert r["shuffle_partitions"] == "7"
+    assert r["task"]["frozen"] > 0, "workers fork from an unfrozen daemon"
+    if sys.version_info < (3, 13):
+        assert r["task"]["stamps"] not in ("stock", [])
+    assert os.path.join("deps.zip", "stream_reader_mzxml_spark") in r["task"]["pkg"]
+
+
+@pytest.mark.spark
+def test_driver_outside_repo_gets_python_workers(tmp_path):
+    """A plain driver whose cwd is outside the repo, with no ``PYTHONPATH``
+    and only a ``sys.path`` entry for the package, still starts the daemon."""
+    (tmp_path / "probe.py").write_text(_PROBE)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, "probe.py", REPO], cwd=tmp_path, env=env,
+        check=True, capture_output=True, text=True, timeout=300,
+    )
+    r = json.loads(out.stdout.splitlines()[-1])
+    assert r["task"]["frozen"] > 0
+    assert r["task"]["pkg"].startswith(os.path.join(REPO, "stream_reader_mzxml_spark"))
