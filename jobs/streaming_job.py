@@ -17,6 +17,8 @@ spark.sql.shuffle.partitions=8 --py-files deps.zip ...
 The session is ``session.get_spark``'s (topology stays spark-submit's), and
 every suite writes through the exactly-once sink, so each one leaves
 ``batch_id=N`` output with ``_COMMITTED`` markers and ``_lineage`` tables.
+On a cluster, ship the package as a zip on ``--py-files`` or install it on
+the executors: their Python workers fork from its daemon (``session.py``).
 
 ``--continuous`` uses a processingTime trigger (long-running service);
 default is availableNow (drain pending input, then exit 0) — the mode the

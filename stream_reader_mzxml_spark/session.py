@@ -14,9 +14,10 @@ One place to pin every config that matters for correctness and scale:
   :mod:`.worker_daemon`, which stops each call's ``importlib.invalidate_caches()``
   from re-reading ``pyspark.zip`` and the spark-core jar and freezes the
   imported heap the workers fork from.
-- ``spark.executorEnv.PYTHONPATH`` — the directory or zip this package was
-  imported from, so the daemon imports the driver's copy from any cwd
-  (``--py-files deps.zip`` reaches a worker's path only per task).
+- ``spark.executorEnv.PYTHONPATH`` — any spark-submit value, then the dir or
+  zip this package was imported from, so the daemon imports it from any cwd
+  (``--py-files`` reach a worker's path only per task). A zip is also listed
+  by basename: a cluster executor fetches ``--py-files`` into its cwd.
 
 Topology (``master``, shuffle partitions, ``spark.driver.memory``) is set only
 when this call launches the JVM; under spark-submit (``PYSPARK_GATEWAY_PORT``
@@ -27,10 +28,22 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # the sys.path entry this package was imported from: a directory or a zip
 _IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath() -> str:
+    """The daemon's ``PYTHONPATH``: spark-submit's value, then this package."""
+    paths = [_IMPORT_ROOT]
+    if os.path.isfile(_IMPORT_ROOT):  # a zip, also where an executor fetches it
+        paths.append(os.path.basename(_IMPORT_ROOT))
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # read spark-submit's --conf
+        SparkContext._ensure_initialized()
+        paths.insert(0, SparkConf().get("spark.executorEnv.PYTHONPATH", ""))
+    return os.pathsep.join(filter(None, paths))
 
 
 def get_spark(
@@ -54,19 +67,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-        # The generated-class cache defaults to 100 entries — a query battery
-        # (or any workload with many distinct projections) thrashes it, and a
-        # miss re-runs Janino PER TASK: measured 4-10× wall-time inflation on
-        # the md5/higher-order-heavy queries once an earlier query had filled
-        # the cache (q26 42s -> 9.8s, q35 26s -> 6.2s with the cache sized).
-        # Thread dumps show the signature: executor threads in
-        # GenerateUnsafeProjection$.create / CodeFormatter instead of data
-        # processing. 10k entries ≈ a few hundred MB of class metadata, cheap
-        # vs recompilation; same conf applies executor-side on a cluster.
+        # The generated-class cache defaults to 100 entries; a query battery
+        # thrashes it and each miss re-runs Janino per task (q26 42 -> 9.8 s,
+        # q35 26 -> 6.2 s once sized; thread dumps sit in
+        # GenerateUnsafeProjection$.create). 10k entries ≈ a few hundred MB.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         # Python workers fork from worker_daemon.py (see the module docstring)
         .config("spark.python.daemon.module", "stream_reader_mzxml_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         if cpus is None:
@@ -74,14 +82,10 @@ def get_spark(
         builder = (
             builder.master(f"local[{cpus}]")
             .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-            # 12g, not "as much as the box has": GC logs across the full bench
-            # suite show ~1.6g live / 11.6g peak committed. An oversized max
-            # lets G1 grow the heap in large increments, and each expansion is
-            # a page-commit + THP-compaction storm (observed: 4-5 cores of
-            # kernel time for tens of seconds, stalling whichever query
-            # triggered it — the round-3 "random mid-suite stall"). A bounded
-            # max caps expansion size; pre-touch was measured WORSE (one giant
-            # storm at startup, ~240MB/s under kcompactd on this kernel).
+            # 12g, not the whole box: the bench suite peaks at ~1.6g live /
+            # 11.6g committed. A larger max lets G1 grow in big steps, each a
+            # page-commit + THP-compaction storm (4-5 cores of kernel time for
+            # tens of seconds); pre-touch was worse (one storm at startup).
             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         )
     for k, v in (extra_conf or {}).items():

@@ -95,11 +95,9 @@ def _batch_writer(
                 )
             )
             batch_df.drop("__pid").write.mode("overwrite").parquet(
-                marker.getParent().toString()
+                f"{out_dir}/{target}"
             )
-            lineage.write.mode("overwrite").parquet(
-                _hadoop_path(batch_df.sparkSession, lineage_dir, target)[1].toString()
-            )
+            lineage.write.mode("overwrite").parquet(f"{lineage_dir}/{target}")
             fs.create(marker, True).close()
         finally:
             batch_df.unpersist()
@@ -157,5 +155,5 @@ def read_output(spark, out_dir: str) -> DataFrame:
 
 def read_lineage(spark, lineage_dir: str) -> DataFrame:
     return spark.read.schema(LINEAGE_SCHEMA).option("basePath", lineage_dir).parquet(
-        _hadoop_path(spark, lineage_dir, "batch_id=*")[1].toString()
+        f"{lineage_dir}/batch_id=*"
     )

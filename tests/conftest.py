@@ -70,20 +70,24 @@ def sf_dir():
 def spark_submit(tmp_path):
     """Run ``spark-submit --py-files deps.zip <argv>`` as a cluster user would.
 
-    pyspark's bundled ``bin/spark-submit`` (its own ``SPARK_HOME``), the cwd
-    ``tmp_path`` outside the repo, no ``PYTHONPATH``, and ``deps.zip`` zipped
-    there from the package. ``run(*argvs)`` starts one run per argv at once,
-    waits for all, fails the test on a non-zero exit with the run's log
-    tail, and returns their stdouts.
+    pyspark's bundled ``bin/spark-submit``, the cwd ``tmp_path`` outside the
+    repo, no ``PYTHONPATH``, and ``deps.zip`` zipped there from the package.
+    ``SPARK_HOME`` is ``tmp_path/spark`` of links to pyspark's, so a
+    ``local-cluster`` worker's ``work/`` dir lands in ``tmp_path``.
+    ``run(*argvs)`` starts one run per argv at once, waits for all, fails the
+    test on a non-zero exit with the run's log tail, and returns their stdouts.
     """
     with zipfile.ZipFile(tmp_path / "deps.zip", "w") as z:
         pattern = os.path.join(REPO, "stream_reader_mzxml_spark", "**", "*.py")
         for path in sorted(glob.glob(pattern, recursive=True)):
             z.write(path, os.path.relpath(path, REPO))
-    home = os.path.dirname(pyspark.__file__)
+    home = tmp_path / "spark"
+    home.mkdir()
+    for name in ("bin", "jars", "python", "sbin"):
+        (home / name).symlink_to(os.path.join(os.path.dirname(pyspark.__file__), name))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(
-        SPARK_HOME=home, PYSPARK_PYTHON=sys.executable,
+        SPARK_HOME=str(home), PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
     )
     n_logs = itertools.count()

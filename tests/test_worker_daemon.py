@@ -12,6 +12,7 @@ from __future__ import annotations
 import importlib
 import json
 import os
+import shutil
 import subprocess
 import sys
 import zipfile
@@ -182,9 +183,10 @@ def test_session_workers_inherit_frozen_heap(spark):
 
 
 # A driver that runs one pandas UDF and prints what its Python worker saw.
-# argv[1], when given, is put on the driver's sys.path (and nowhere else).
+# argv[1], when given, is put on the driver's sys.path (and nowhere else);
+# argv[2], when given, is deleted once the session is up.
 _PROBE = """
-import json, sys
+import json, os, sys
 if len(sys.argv) > 1:
     sys.path.insert(0, sys.argv[1])
 import pandas as pd
@@ -192,6 +194,8 @@ from pyspark.sql import functions as F
 from stream_reader_mzxml_spark.session import get_spark
 
 spark = get_spark(app_name="probe")
+if len(sys.argv) > 2:
+    os.remove(sys.argv[2])
 
 
 @F.pandas_udf("string")
@@ -212,6 +216,7 @@ print(json.dumps({
     "task": json.loads(spark.range(1).select(probe("id")).first()[0]),
     "master": spark.sparkContext.master,
     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    "pythonpath": spark.sparkContext.environment["PYTHONPATH"],
 }))
 """
 
@@ -219,19 +224,40 @@ print(json.dumps({
 def test_spark_submit_workers_run_engine_daemon(spark_submit, tmp_path):
     """``get_spark`` under ``spark-submit --py-files deps.zip``: the workers
     fork from the engine daemon, which imports the shipped zip, and
-    spark-submit's topology flags survive."""
+    spark-submit's topology flags and worker ``PYTHONPATH`` survive."""
     (tmp_path / "probe.py").write_text(_PROBE)
     (out,) = spark_submit([
         "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7",
-        "probe.py",
+        "--conf", "spark.executorEnv.PYTHONPATH=extra", "probe.py",
     ])
     r = json.loads(out.splitlines()[-1])
     assert r["master"] == "local[2]"
     assert r["shuffle_partitions"] == "7"
+    assert r["pythonpath"].split(os.pathsep) == [
+        "extra", str(tmp_path / "deps.zip"), "deps.zip"
+    ]
     assert r["task"]["frozen"] > 0, "workers fork from an unfrozen daemon"
     if sys.version_info < (3, 13):
         assert r["task"]["stamps"] not in ("stock", [])
     assert os.path.join("deps.zip", "stream_reader_mzxml_spark") in r["task"]["pkg"]
+
+
+def test_cluster_executor_finds_shipped_zip(spark_submit, tmp_path):
+    """On a ``local-cluster`` master the executor is its own JVM whose cwd
+    is its work dir. With the driver's copy of the package gone (as on
+    another host), its daemon imports the ``--py-files`` zip it fetched."""
+    (tmp_path / "probe.py").write_text(_PROBE)
+    (tmp_path / "driver").mkdir()
+    shutil.copy(tmp_path / "deps.zip", tmp_path / "driver" / "deps.zip")
+    (out,) = spark_submit([
+        "--master", "local-cluster[1,1,1024]",
+        "probe.py", "driver/deps.zip", "driver/deps.zip",
+    ])
+    task = json.loads(out.splitlines()[-1])["task"]
+    assert task["frozen"] > 0, "workers fork from an unfrozen daemon"
+    work = os.path.realpath(tmp_path / "spark" / "work")
+    assert os.path.realpath(task["pkg"]).startswith(work + os.sep), task["pkg"]
+    assert os.path.join("deps.zip", "stream_reader_mzxml_spark") in task["pkg"]
 
 
 @pytest.mark.spark
