@@ -164,9 +164,9 @@ def run_streaming_suite(
 
     out = {}
     # join salts pinned (identical job at every parallelism level) and sized
-    # so groups (8 shards × 32 salts = 256) spread evenly over the state
-    # partitions — too few groups leaves straggler partitions at high core
-    # counts (hot shard = 40 % of rows)
+    # so the 32 state groups (``n_salts`` counts them all) spread evenly over
+    # the state partitions — too few groups leaves straggler partitions at
+    # high core counts (hot shard = 40 % of rows)
     jobs = (
         ("windowed_agg", lambda s: salted_tumbling_token_stats(s)),
         ("stateful_join", lambda s: stateful_shard_join(s, n_salts=32)),
@@ -507,7 +507,10 @@ def bench_scaling(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+    )
     ap.add_argument("--scaling", action="store_true", help="run N vs 4N cores scaling evidence")
     # N=1 → 4N=4: both levels fit the sandbox's ~9.5 effective cores even
     # when Python-UDF stages double per-task CPU demand (JVM task thread +

@@ -8,7 +8,8 @@ over rows — plus a thin ``pandas_udf`` wrapper.
 
 The segmented-flatten trick: a Series of variable-length arrays is concatenated
 into one flat vector plus a lengths vector; per-row reductions become
-``np.minimum.reduceat`` / boolean-mask + first-occurrence-per-segment ops.
+``np.maximum.reduceat`` over segment starts, and per-row expansions become
+index arithmetic over the flat vector.
 """
 
 from __future__ import annotations
@@ -43,39 +44,6 @@ def _segment_starts(lens: np.ndarray) -> np.ndarray:
     starts = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
     return starts
-
-
-def seg_nearest(
-    flat: np.ndarray, lens: np.ndarray, probes: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-segment nearest value to its probe: (index, value) per segment.
-
-    The as-of/argmin kernel (J1): reference ``findClosestValueMz(mz) =
-    peaks.minBy(abs(peak.mz - mz))`` — Spectrum.scala:39-41. Scala ``minBy``
-    takes the FIRST minimum in order; reproduced via first-occurrence-per-
-    segment tie-break. Fully vectorized (no per-row Python loop).
-    """
-    n = len(lens)
-    idx_out = np.full(n, -1, dtype=np.int64)
-    val_out = np.full(n, np.nan, dtype=np.float64)
-    nonempty = lens > 0
-    if not nonempty.any():
-        return idx_out, val_out
-    starts = _segment_starts(lens)
-    row_of = np.repeat(np.arange(n), lens)
-    absdiff = np.abs(flat - probes[row_of])
-    seg_min = np.minimum.reduceat(absdiff, starts[nonempty])
-    # broadcast each segment's min back over its positions
-    min_of_pos = np.empty(len(flat), dtype=np.float64)
-    seg_min_full = np.full(n, np.inf)
-    seg_min_full[nonempty] = seg_min
-    min_of_pos = seg_min_full[row_of]
-    hit = absdiff == min_of_pos
-    rows_hit, first_pos = np.unique(row_of[hit], return_index=True)
-    pos = np.flatnonzero(hit)[first_pos]
-    idx_out[rows_hit] = pos - starts[rows_hit]
-    val_out[rows_hit] = flat[pos]
-    return idx_out, val_out
 
 
 def seg_band_score(
@@ -234,28 +202,6 @@ def decode_peaks_udf(
 # ---------------------------------------------------------------------------
 # pandas UDF wrappers over the segmented kernels
 # ---------------------------------------------------------------------------
-
-_NEAREST_SCHEMA = T.StructType(
-    [
-        T.StructField("idx", T.IntegerType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_NEAREST_SCHEMA)
-def nearest_value_udf(arrays: pd.Series, probes: pd.Series) -> pd.DataFrame:
-    """J1 as-of kernel: per row, the array element nearest to the probe."""
-    flat, lens, isnull = _flatten(arrays)
-    probe_np = probes.to_numpy(dtype=np.float64, na_value=np.nan)
-    idx, val = seg_nearest(flat.astype(np.float64), lens, probe_np)
-    idx_o = pd.array(
-        [None if (n or i < 0) else int(i) for i, n in zip(idx, isnull)],
-        dtype="Int32",
-    )
-    val_o = [None if (n or not np.isfinite(v)) else float(v) for v, n in zip(val, isnull)]
-    return pd.DataFrame({"idx": idx_o, "value": val_o})
-
 
 def make_band_score_udf(refs: list[float], tol: float):
     """A10/J2: count of ``refs`` entries with an array element within ``tol``.

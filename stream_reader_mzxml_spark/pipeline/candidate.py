@@ -1,40 +1,41 @@
 """The reference's flagship end-to-end analytic — ``CandidateIons``
 (libCandidateIons.sc:100-193) — recomposed Spark-first over the driver's
-``embeddings`` table.
+``embeddings`` table as ONE stateless per-row projection.
 
-Reference stages → graft stages:
+Reference stages → graft stages (all inside :func:`candidate_ions`):
 
 1. MS1 scan + rt gate (libCandidateIons.sc:112-117)    → derived spectra
    table (rt, peak structs) in the scan's project.
-2. noise filter ``intensity > noise`` (:121-123)       → relational filter
-   on the exploded peak table.
+2. noise filter ``intensity > noise`` (:121-123)       → ``F.filter``
+   predicate over the row's candidate peaks.
 3. precursor-list match (:125-131): spectrum rt within ``ion.rt ± window``
-   AND ``|ion.m0 − mz| < tol``                         → theta-join against
-   the BROADCAST ion list (the reference materializes the MS2-derived list
-   fully in memory; broadcast is the faithful-and-scalable analog).
+   AND ``|ion.m0 − mz| < tol``                         → ``F.filter`` over
+   the ion list, held as an in-plan literal array (the reference closes
+   over the MS2-derived list in memory; a literal is the analog).
 4. ``l.head.fragments`` (:137) — the FIRST matching ion in **list order**
-   wins                                                → ``row_number()``
-   over (spectrum, peak) ordered by ion index; rank 1. Stream-order
-   tie-break, proven by a hand golden in tests.
+   wins                                                → element 1 of that
+   order-preserving filter. Stream-order tie-break, proven by a hand golden
+   in tests.
 5. isotope probes ``findClosestValueMz(mz+Δ1), (mz+Δ2)`` (:142-147;
    Spectrum.scala:39-41 ``minBy`` = first minimal in traversal order) →
-   ordered ``F.aggregate`` fold over the FULL peak array (noise peaks
-   included, exactly as the reference probes the unfiltered list) with a
-   strict ``<`` comparator, which keeps the earlier element on ties —
-   ``minBy`` semantics, bit-identical to the DuckDB ``list_reduce`` oracle.
+   :func:`nearest_peak`, an ordered ``F.aggregate`` fold over the FULL peak
+   array (noise peaks included, exactly as the reference probes the
+   unfiltered list) with a strict ``<`` comparator, which keeps the earlier
+   element on ties — ``minBy`` semantics, bit-identical to the DuckDB
+   ``list_reduce`` oracle.
 6. double ppm gate (:146-152) and the four isotope-abundance band filters
-   (:162-180, the C/S abundance envelope) → plain column predicates.
-7. Ion record render (:180-190)                        → final select with
-   rounded m/z columns + the ';'-joined fragment string (C10).
+   (:162-180, the C/S abundance envelope) → plain predicates.
+7. Ion record render (:180-190)                        → explode of the
+   survivors + final select with rounded m/z columns and the ';'-joined
+   fragment string (C10).
 
-Scale: one explode (no shuffle), one broadcast theta-join, one window whose
-key (vec_id, pos) is high-cardinality, one hash join back to the spectra
-arrays for the few winners. No cartesian, no driver collection.
+Scale: scan → project → generate. No shuffle, no join, no driver
+collection; stateless, so it runs unchanged on a streaming DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,7 +55,8 @@ PEAK_DIM = 64
 
 def ion_list() -> list[tuple[int, float, float, str]]:
     """The ``listPrecMz`` analog: a deterministic literal precursor-ion list
-    (ion_id, rt0, m0, fragments). Small — the broadcast side.
+    (ion_id, rt0, m0, fragments). Small — held in the plan as a literal
+    array.
 
     Ions ``p`` and ``p + N_IONS/2`` share m0 with rt windows offset by only
     50 s (heavily overlapping): real precursor lists carry the same compound
@@ -101,47 +103,18 @@ def spectra_from_embeddings(emb: DataFrame, keep_embedding: bool = False) -> Dat
     return emb.select(*cols)
 
 
-def _nearest(peaks_col, d):
+def nearest_peak(peaks, d):
     """``findClosestValueMz`` (Spectrum.scala:39-41): first argmin of
-    |peak.mz − d| in list order, as an ordered left fold."""
+    |peak.mz − d| in list order, as an ordered left fold.
+
+    The strict ``<`` keeps the earlier peak on ties — ``minBy`` semantics,
+    bit-identical to the DuckDB ``list_reduce`` oracles."""
     return F.aggregate(
-        peaks_col,
-        F.element_at(peaks_col, 1),
+        peaks,
+        F.element_at(peaks, 1),
         lambda acc, p: F.when(
             F.abs(p["mz"] - d) < F.abs(acc["mz"] - d), p
         ).otherwise(acc),
-    )
-
-
-def match_winners(spark, spectra: DataFrame) -> DataFrame:
-    """Stages 2-4: noise filter → broadcast ion theta-join → head tie-break.
-    Exposed separately so tests can pin the stream-order tie-break golden."""
-    ions = spark.createDataFrame(
-        ion_list(), "ion_id INT, rt0 DOUBLE, m0 DOUBLE, fragments STRING"
-    )
-
-    pk = spectra.select(
-        "vec_id", "rt", F.posexplode("peaks").alias("j", "peak")
-    ).select(
-        "vec_id",
-        "rt",
-        (F.col("j") + 1).alias("pos"),
-        F.col("peak.mz").alias("mz0"),
-        F.col("peak.intensity").alias("int0"),
-    ).filter(F.col("int0") > NOISE_INTENSITY)
-
-    cand = pk.join(
-        F.broadcast(ions),
-        (F.col("rt") >= F.col("rt0") - RT_WINDOW)
-        & (F.col("rt") <= F.col("rt0") + RT_WINDOW)
-        & (F.abs(F.col("m0") - F.col("mz0")) < MZ_TOL),
-    )
-    # stage 4: head-of-list tie-break — first matching ion in list order
-    w = Window.partitionBy("vec_id", "pos").orderBy("ion_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "rt", "pos", "mz0", "int0", "ion_id", "fragments")
     )
 
 
@@ -162,36 +135,27 @@ def _ion_array():
     )
 
 
-def candidate_ions_fused(df_or_stream: DataFrame) -> DataFrame:
-    """The SAME program as ``candidate_ions``, fused into a single stateless
-    per-row projection — the shape of the reference itself, which runs the
-    whole chain inside one per-spectrum closure (libCandidateIons.sc:119-191).
+def candidate_ions(df_or_stream: DataFrame) -> DataFrame:
+    """The end-to-end program; returns the rendered Ion rows.
 
-    Every stage is a JVM higher-order function over the row's own arrays:
-    ion match + ``head`` = ``element_at(filter(ION_LITERALS, ...), 1)`` (F.filter
-    preserves list order, so element 1 IS the stream-order head), isotope
-    probes = ordered ``aggregate`` folds, gates = plain predicates, and only
-    the surviving candidates are exploded at the end.
+    One stateless per-row projection — the shape of the reference itself,
+    which runs the whole chain inside one per-spectrum closure
+    (libCandidateIons.sc:119-191). Every stage is a JVM higher-order
+    function over the row's own arrays: ion match + ``head`` =
+    ``element_at(filter(ION_LITERALS, ...), 1)`` (F.filter preserves list
+    order, so element 1 IS the stream-order head), isotope probes =
+    :func:`nearest_peak`, gates = plain predicates, and only the surviving
+    candidates are exploded at the end.
 
     Scale consequences: ZERO shuffles and no joins — the plan is
     scan → project → generate, trivially parallel at any cluster size, and
     because it is stateless it runs unchanged on a STREAMING DataFrame (no
-    watermark needed). The relational form (``candidate_ions``) remains the
-    reference plan the oracle checks both against; equality is enforced by
-    q39 sharing q35's oracle and by ``test_fused_equals_relational``."""
+    watermark needed). q39 checks it against the DuckDB oracle ``_q35_sql``."""
     spectra = spectra_from_embeddings(df_or_stream)
+    peaks = F.col("peaks")
     ions = _ion_array()
     d0 = lambda mz: mz + F.lit(DELTA_MP0_MP1)  # noqa: E731
     d1 = lambda mz: mz + F.lit(DELTA_MP0_MP2)  # noqa: E731
-
-    def nearest(d):
-        return F.aggregate(
-            F.col("peaks"),
-            F.element_at(F.col("peaks"), 1),
-            lambda acc, p: F.when(
-                F.abs(p["mz"] - d) < F.abs(acc["mz"] - d), p
-            ).otherwise(acc),
-        )
 
     def ion_match(peak):
         # try_element_at: NULL (no match) instead of an error on empty lists
@@ -210,8 +174,8 @@ def candidate_ions_fused(df_or_stream: DataFrame) -> DataFrame:
         idx,
         lambda i: F.struct(
             i.alias("pos"),
-            F.element_at(F.col("peaks"), i.cast("int")).alias("peak"),
-            ion_match(F.element_at(F.col("peaks"), i.cast("int"))).alias("ion"),
+            F.element_at(peaks, i.cast("int")).alias("peak"),
+            ion_match(F.element_at(peaks, i.cast("int"))).alias("ion"),
         ),
     )
     kept = F.filter(
@@ -225,8 +189,8 @@ def candidate_ions_fused(df_or_stream: DataFrame) -> DataFrame:
             c["pos"].alias("pos"),
             c["peak"].alias("peak"),
             c["ion"].alias("ion"),
-            nearest(d0(c["peak"]["mz"])).alias("near1"),
-            nearest(d1(c["peak"]["mz"])).alias("near2"),
+            nearest_peak(peaks, d0(c["peak"]["mz"])).alias("near1"),
+            nearest_peak(peaks, d1(c["peak"]["mz"])).alias("near2"),
         ),
     )
 
@@ -258,57 +222,6 @@ def candidate_ions_fused(df_or_stream: DataFrame) -> DataFrame:
         F.col("c.near2.intensity").alias("int2"),
         F.col("c.ion.ion_id").alias("ion_id"),
         F.col("c.ion.fragments").alias("fragments"),
-    )
-
-
-def candidate_ions(spark, emb: DataFrame) -> DataFrame:
-    """The end-to-end program; returns the rendered Ion rows.
-
-    The scan is not spread (:func:`sources.readers.spread_scan`): measured on
-    the single-file local table, the peaks projection is cheap enough that
-    the round-robin exchange costs more than it parallelizes (3.2s vs 5.4s
-    at sf0.1 once the codegen cache is sized)."""
-    spectra = spectra_from_embeddings(emb)
-    winners = match_winners(spark, spectra)
-
-    # stage 5: isotope probes over the FULL peak array (noise included)
-    probed = winners.join(spectra.select("vec_id", "peaks"), ["vec_id"])
-    d0 = F.col("mz0") + F.lit(DELTA_MP0_MP1)
-    d1 = F.col("mz0") + F.lit(DELTA_MP0_MP2)
-    probed = (
-        probed.withColumn("near1", _nearest(F.col("peaks"), d0))
-        .withColumn("near2", _nearest(F.col("peaks"), d1))
-        .select(
-            "vec_id", "rt", "pos", "mz0", "int0", "ion_id", "fragments",
-            F.col("near1.mz").alias("mz1"),
-            F.col("near1.intensity").alias("int1"),
-            F.col("near2.mz").alias("mz2"),
-            F.col("near2.intensity").alias("int2"),
-        )
-    )
-
-    ppm0 = F.abs((F.col("mz1") - d0) / d0) * 1e6
-    ppm1 = F.abs((F.col("mz2") - d1) / d1) * 1e6
-    out = probed.filter(
-        (ppm0 < PPM_PRECISION)
-        & (ppm1 < PPM_PRECISION)
-        & (F.col("int1") >= F.col("int0") * BAND1_LO)
-        & (F.col("int1") < F.col("int0") * BAND1_HI)
-        & (F.col("int2") >= F.col("int0") * BAND2_LO)
-        & (F.col("int2") < F.col("int0") * BAND2_HI)
-    )
-    return out.select(
-        F.col("vec_id").alias("num"),
-        "rt",
-        "pos",
-        F.round("mz0", 6).alias("mz0"),
-        "int0",
-        F.round("mz1", 6).alias("mz1"),
-        "int1",
-        F.round("mz2", 6).alias("mz2"),
-        "int2",
-        "ion_id",
-        "fragments",
     )
 
 
@@ -353,21 +266,12 @@ def glucosinolate_candidates(
     peaks = F.col("peaks")
     kept = F.filter(peaks, lambda p: p["intensity"] > F.lit(min_intensity))
 
-    def nearest(d):
-        return F.aggregate(
-            peaks,
-            F.element_at(peaks, 1),
-            lambda acc, p: F.when(
-                F.abs(p["mz"] - d) < F.abs(acc["mz"] - d), p
-            ).otherwise(acc),
-        )
-
     probed = F.transform(
         kept,
         lambda x: F.struct(
             x.alias("p0"),
-            nearest(x["mz"] + F.lit(1.0)).alias("p1"),
-            nearest(x["mz"] + F.lit(delta_mp0_mp2)).alias("p2"),
+            nearest_peak(peaks, x["mz"] + F.lit(1.0)).alias("p1"),
+            nearest_peak(peaks, x["mz"] + F.lit(delta_mp0_mp2)).alias("p2"),
         ),
     )
 

@@ -234,40 +234,6 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 — fits signed int64 in both engines
 SIMHASH_BANDS = 4  # 15-bit bands → 4 × 2^15 ≈ 131k distinct join-key values
 
 
-def simhash_sig(text_col, bits: int = SIMHASH_BITS):
-    """``bits``-bit SimHash over term-frequency-weighted word hashes.
-
-    bit_j = 1 iff Σ_w tf(w) · (2·bit_j(h(w)) − 1) ≥ 0. Computed as a pure
-    column expression: fold words into per-bit sums via aggregate over the
-    distinct-word tf map. Expression form for tests/small inputs — the
-    operator path (``simhash_neardup_pairs``) uses the explode+groupBy form
-    which evaluates the O(words²) tf subtree once, not ``bits`` times."""
-    ws = words(text_col)
-    uniq = F.array_distinct(ws)
-    pairs = F.transform(
-        uniq,
-        lambda w: F.struct(
-            h60(w).alias("h"),
-            F.size(F.filter(ws, lambda x: x == w)).alias("tf"),
-        ),
-    )
-
-    def _bit_sum(j: int):
-        return F.aggregate(
-            pairs,
-            F.lit(0).cast("long"),
-            lambda acc, p: acc
-            + p["tf"] * (F.shiftright(p["h"], j).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(_bit_sum(j) >= 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0)
-        )
-    return out
-
-
 def simhash_signatures(tf, bits: int) -> DataFrame:
     """(doc_id, tf, h) → (doc_id, sim): the per-doc simhash signature.
 
@@ -315,8 +281,8 @@ def simhash_neardup_pairs(
     width = bits // bands
     mask = (1 << width) - 1
     # explode + two-level groupBy: tf per (doc, word) once, then the bit-sum
-    # aggregates — vs the expression form which duplicates the O(words²) tf
-    # subtree per bit
+    # aggregates — a per-row expression would rebuild the O(words²) tf
+    # subtree once per bit
     tf = (
         spread_scan(df)
         .select("doc_id", F.explode(words(F.col(text_col))).alias("w"))

@@ -35,6 +35,7 @@ from stream_reader_mzxml_spark.operators.joins import (
     band_semi_join,
     interval_join,
 )
+from stream_reader_mzxml_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -48,10 +49,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +70,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q01_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -104,7 +101,7 @@ def q01_pricing_summary(spark, sf_dir):
     """,
 )
 def q02_occurrence_topk(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.select(quantize_trunc(F.col("l_extendedprice"), 0.01).alias("value"))
         .groupBy("value")
@@ -132,7 +129,7 @@ def q02_occurrence_topk(spark, sf_dir):
     """,
 )
 def q03_inverse_histogram(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     counts = (
         li.select(quantize_trunc(F.col("l_extendedprice"), 0.001).alias("value"))
         .groupBy("value")
@@ -163,7 +160,7 @@ _THRESHOLDS = [float(t) for t in range(0, 620, 20)]  # 31 thresholds
     """,
 )
 def q04_threshold_histogram(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return threshold_histogram(ev, _THRESHOLDS, value_col="value")
 
 
@@ -182,7 +179,7 @@ def q04_threshold_histogram(spark, sf_dir):
     """,
 )
 def q05_rt_gate_asymmetric(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     from stream_reader_mzxml_spark.functions.scalars import rt_range_predicate
 
     rt = F.nullif(F.col("user_id") % 100, F.lit(7))
@@ -206,8 +203,8 @@ def q05_rt_gate_asymmetric(spark, sf_dir):
     """,
 )
 def q06_band_semi_join(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part").select("p_retailprice")
+    li = read_table(spark, sf_dir, "lineitem")
+    pt = read_table(spark, sf_dir, "part").select("p_retailprice")
     out = band_semi_join(li, pt, "l_extendedprice", "p_retailprice", 0.5)
     return out.select(
         "l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price")
@@ -237,8 +234,8 @@ def q06_band_semi_join(spark, sf_dir):
     """,
 )
 def q07_asof_nearest(spark, sf_dir):
-    pt = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    li = _t(spark, sf_dir, "lineitem").select(
+    pt = read_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
     cand = asof_nearest_join(
@@ -275,7 +272,7 @@ def q07_asof_nearest(spark, sf_dir):
     """,
 )
 def q08_interval_join(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
         F.col("ts").alias("p_ts"),
@@ -318,7 +315,7 @@ def q08_interval_join(spark, sf_dir):
     """,
 )
 def q09_pairwise_diff_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     from stream_reader_mzxml_spark.functions.kernels import pairwise_diff_counts
 
     counts = pairwise_diff_counts(emb, "embedding", fix=100.0)
@@ -353,7 +350,7 @@ def q09_pairwise_diff_topk(spark, sf_dir):
     """,
 )
 def q10_sessionize(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     t = F.unix_micros(F.col("ts").cast("timestamp"))
     g = ev.select(
@@ -391,7 +388,7 @@ def q10_sessionize(spark, sf_dir):
     """,
 )
 def q11_tumbling_window(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -422,7 +419,7 @@ def q11_tumbling_window(spark, sf_dir):
     """,
 )
 def q12_sliding_window(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "2 hours", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -454,7 +451,7 @@ def q13_topk_per_group(spark, sf_dir):
     # a full-table single-task funnel. The explicitly salted two-phase
     # operator (salted_top_k, q36) is the variant for engines/versions
     # without that optimization and for very large k.
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_returnflag").orderBy(
         F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
     )
@@ -484,7 +481,7 @@ def q13_topk_per_group(spark, sf_dir):
     """,
 )
 def q14_corr_r2(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.pow(F.corr("l_quantity", "l_extendedprice"), 2), 6).alias("r2"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -511,7 +508,7 @@ def q14_corr_r2(spark, sf_dir):
     """,
 )
 def q15_minmax_by(spark, sf_dir):
-    od = _t(spark, sf_dir, "orders")
+    od = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority")
     od2 = od.withColumn("mn", F.min("o_totalprice").over(w)).withColumn(
         "mx", F.max("o_totalprice").over(w)
@@ -545,7 +542,7 @@ def q15_minmax_by(spark, sf_dir):
     """,
 )
 def q17_group_collect(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 480)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("value") > 480)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.array_join(
@@ -575,7 +572,7 @@ def q17_group_collect(spark, sf_dir):
     """,
 )
 def q18_ppm_filter(spark, sf_dir):
-    pt = _t(spark, sf_dir, "part")
+    pt = read_table(spark, sf_dir, "part")
     return pt.filter(ppm_ok(F.lit(950.0), F.col("p_retailprice"), 50000.0)).select(
         "p_partkey", F.round("p_retailprice", 2).alias("price")
     )
@@ -600,7 +597,7 @@ def q18_ppm_filter(spark, sf_dir):
     """,
 )
 def q19_duration_seconds(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
     dur = F.concat(
         F.lit("PT"),
         (F.col("user_id") % 90).cast("string"),

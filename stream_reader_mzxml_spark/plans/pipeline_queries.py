@@ -26,6 +26,7 @@ from stream_reader_mzxml_spark.pipeline import (
     similarity,
     text,
 )
+from stream_reader_mzxml_spark.sources.readers import read_table
 
 PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 PIPELINE_ORACLES: dict[str, str] = {}
@@ -39,10 +40,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # shared SQL fragments -------------------------------------------------------
@@ -80,7 +77,7 @@ _FOLD_NORM = (
     """,
 )
 def q20_token_counts(spark, sf_dir):
-    return text.token_counts(_t(spark, sf_dir, "documents"))
+    return text.token_counts(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +111,7 @@ _SW_EN = ", ".join(f"'{s}'" for s in text.LANG_STOPWORDS["en"])
     """,
 )
 def q21_quality_scores(spark, sf_dir):
-    return text.quality_features(_t(spark, sf_dir, "documents"))
+    return text.quality_features(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -146,7 +143,7 @@ def _lang_sql() -> str:
 
 @_register("q22_lang_id", _lang_sql())
 def q22_lang_id(spark, sf_dir):
-    return text.lang_id(_t(spark, sf_dir, "documents"))
+    return text.lang_id(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -167,7 +164,7 @@ def q22_lang_id(spark, sf_dir):
     """,
 )
 def q23_fingerprint(spark, sf_dir):
-    return text.fingerprint(_t(spark, sf_dir, "documents"))
+    return text.fingerprint(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -182,7 +179,7 @@ def q23_fingerprint(spark, sf_dir):
     """,
 )
 def q24_exact_dedup(spark, sf_dir):
-    return dedup.exact_dedup(_t(spark, sf_dir, "documents"))
+    return dedup.exact_dedup(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +209,9 @@ def q24_exact_dedup(spark, sf_dir):
     """,
 )
 def q25_ngram_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
+    return dedup.ngram_jaccard_pairs(
+        read_table(spark, sf_dir, "documents"), threshold=0.8
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -257,7 +256,9 @@ def _minhash_sql(src: str = "documents") -> str:
 
 @_register("q26_minhash_lsh", _minhash_sql())
 def q26_minhash_lsh(spark, sf_dir):
-    return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return dedup.minhash_lsh_pairs(
+        read_table(spark, sf_dir, "documents"), threshold=0.5
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -301,7 +302,9 @@ _H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
     """,
 )
 def q27_simhash(spark, sf_dir):
-    return dedup.simhash_neardup_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
+    return dedup.simhash_neardup_pairs(
+        read_table(spark, sf_dir, "documents"), max_hamming=3
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -329,7 +332,9 @@ def q27_simhash(spark, sf_dir):
     """,
 )
 def q29_cosine_topk(spark, sf_dir):
-    return similarity.cosine_topk(_t(spark, sf_dir, "embeddings"), n_probes=5, k=10)
+    return similarity.cosine_topk(
+        read_table(spark, sf_dir, "embeddings"), n_probes=5, k=10
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +390,9 @@ def _lsh_ann_sql() -> str:
 
 @_register("q30_lsh_ann_topk", _lsh_ann_sql())
 def q30_lsh_ann_topk(spark, sf_dir):
-    return similarity.lsh_ann_topk(_t(spark, sf_dir, "embeddings"), n_probes=5, k=10)
+    return similarity.lsh_ann_topk(
+        read_table(spark, sf_dir, "embeddings"), n_probes=5, k=10
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -436,7 +443,7 @@ def q30_lsh_ann_topk(spark, sf_dir):
     """,
 )
 def q31_multimodal_features(spark, sf_dir):
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.documents_as_media(read_table(spark, sf_dir, "documents"))
     feat = multimodal.featurize(media, decode_stub=True)
     return feat.select(
         "doc_id",
@@ -489,7 +496,7 @@ _Q31B_HDR_LEN = len(
     """,
 )
 def q31b_pnm_codec(spark, sf_dir):
-    media = multimodal.pnm_fixture_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.pnm_fixture_media(read_table(spark, sf_dir, "documents"))
     feat = multimodal.featurize(media, decode_stub=False)
     return feat.select(
         "doc_id",
@@ -528,7 +535,7 @@ _ISO_LO, _ISO_HI = -10.0, 10.0
     """,
 )
 def q32_isotope_match(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     matched = F.size(
         F.filter(
@@ -574,7 +581,7 @@ _SCORE_TOL = 0.02
 def q33_band_score(spark, sf_dir):
     from stream_reader_mzxml_spark.functions.kernels import make_band_score_udf
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     udf = make_band_score_udf(_SCORE_REFS, _SCORE_TOL)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return (
@@ -614,7 +621,7 @@ def q33_band_score(spark, sf_dir):
     """,
 )
 def q48_decontamination(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return decontam.ngram_decontaminate(
         docs.filter(F.col("doc_id") % 97 != 0),
         docs.filter(F.col("doc_id") % 97 == 0),
@@ -673,7 +680,9 @@ def q48_decontamination(spark, sf_dir):
     """,
 )
 def q49_ivf_ann_topk(spark, sf_dir):
-    return similarity.ivf_topk(_t(spark, sf_dir, "embeddings"), n_probes=5, k=10)
+    return similarity.ivf_topk(
+        read_table(spark, sf_dir, "embeddings"), n_probes=5, k=10
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -695,7 +704,7 @@ def q49_ivf_ann_topk(spark, sf_dir):
     """,
 )
 def q50_domain_caps(spark, sf_dir):
-    return curation.domain_caps(_t(spark, sf_dir, "documents"), cap=10)
+    return curation.domain_caps(read_table(spark, sf_dir, "documents"), cap=10)
 
 
 # ---------------------------------------------------------------------------
@@ -736,7 +745,7 @@ _SEGS = f"""
     """,
 )
 def q51_segment_dedup(spark, sf_dir):
-    return dedup.segment_dedup(_t(spark, sf_dir, "documents"), width=_SEG_W)
+    return dedup.segment_dedup(read_table(spark, sf_dir, "documents"), width=_SEG_W)
 
 
 # ---------------------------------------------------------------------------
@@ -778,7 +787,7 @@ _CHK = (
     """,
 )
 def q52_context_chunks(spark, sf_dir):
-    return text.context_chunks(_t(spark, sf_dir, "documents"))
+    return text.context_chunks(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -822,7 +831,7 @@ def q52_context_chunks(spark, sf_dir):
     """,
 )
 def q53_source_drift(spark, sf_dir):
-    return text.source_drift(_t(spark, sf_dir, "documents"))
+    return text.source_drift(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -856,7 +865,9 @@ def q53_source_drift(spark, sf_dir):
     """,
 )
 def q54_dedup_clusters(spark, sf_dir):
-    pairs = dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    pairs = dedup.minhash_lsh_pairs(
+        read_table(spark, sf_dir, "documents"), threshold=0.5
+    )
     return dedup.connected_components(pairs)
 
 
@@ -889,7 +900,7 @@ def q54_dedup_clusters(spark, sf_dir):
     """,
 )
 def q55_dedup_apply(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     comps = dedup.connected_components(
         dedup.minhash_lsh_pairs(docs, threshold=0.5)
     )
@@ -919,7 +930,7 @@ def q55_dedup_apply(spark, sf_dir):
     """,
 )
 def q56_tfidf(spark, sf_dir):
-    return text.tfidf_scores(_t(spark, sf_dir, "documents"))
+    return text.tfidf_scores(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -949,7 +960,7 @@ _WS_TOKS = "length(regexp_extract_all(text, '\\S+'))"
     """,
 )
 def q57_mixture_sample(spark, sf_dir):
-    return mixing.mixture_sample(_t(spark, sf_dir, "documents"))
+    return mixing.mixture_sample(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -984,7 +995,7 @@ def q57_mixture_sample(spark, sf_dir):
     """,
 )
 def q58_sequence_packing(spark, sf_dir):
-    return mixing.sequence_packing(_t(spark, sf_dir, "documents"))
+    return mixing.sequence_packing(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1014,7 +1025,7 @@ def q58_sequence_packing(spark, sf_dir):
     """,
 )
 def q59_pii_redact(spark, sf_dir):
-    return text.pii_redact(_t(spark, sf_dir, "documents"))
+    return text.pii_redact(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1065,7 +1076,7 @@ def q59_pii_redact(spark, sf_dir):
     """,
 )
 def q60_kmeans_step(spark, sf_dir):
-    return similarity.kmeans_step(_t(spark, sf_dir, "embeddings"))
+    return similarity.kmeans_step(read_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -1089,7 +1100,7 @@ def q60_kmeans_step(spark, sf_dir):
     """,
 )
 def q61_bpe_pair_counts(spark, sf_dir):
-    return text.bpe_pair_counts(_t(spark, sf_dir, "documents"))
+    return text.bpe_pair_counts(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1170,7 +1181,9 @@ def _q63_sql() -> str:
 
 @_register("q63_kmeans_iterated", _q63_sql())
 def q63_kmeans_iterated(spark, sf_dir):
-    return similarity.kmeans_iterate(_t(spark, sf_dir, "embeddings"), n_iters=2)
+    return similarity.kmeans_iterate(
+        read_table(spark, sf_dir, "embeddings"), n_iters=2
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1220,7 +1233,7 @@ def q63_kmeans_iterated(spark, sf_dir):
     """,
 )
 def q64_segment_dedup_apply(spark, sf_dir):
-    return dedup.segment_dedup_apply(_t(spark, sf_dir, "documents"))
+    return dedup.segment_dedup_apply(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1244,7 +1257,7 @@ def q64_segment_dedup_apply(spark, sf_dir):
     """,
 )
 def q65_epoch_order(spark, sf_dir):
-    return mixing.epoch_order(_t(spark, sf_dir, "documents"))
+    return mixing.epoch_order(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1287,7 +1300,7 @@ def q65_epoch_order(spark, sf_dir):
     """,
 )
 def q66_sequence_manifest(spark, sf_dir):
-    return mixing.sequence_manifest(_t(spark, sf_dir, "documents"))
+    return mixing.sequence_manifest(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1313,7 +1326,7 @@ def q66_sequence_manifest(spark, sf_dir):
     """,
 )
 def q69_holdout_split(spark, sf_dir):
-    return curation.holdout_split(_t(spark, sf_dir, "documents"))
+    return curation.holdout_split(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1354,7 +1367,7 @@ _Q70_SAMPLES = multimodal.WAV_FIX_FRAMES * multimodal.WAV_FIX_CH
     """,
 )
 def q70_wav_codec(spark, sf_dir):
-    media = multimodal.wav_fixture_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.wav_fixture_media(read_table(spark, sf_dir, "documents"))
     feat = multimodal.featurize(media, decode_stub=False)
     return feat.select(
         "doc_id",
@@ -1402,7 +1415,7 @@ def q70_wav_codec(spark, sf_dir):
     """,
 )
 def q71_png_codec(spark, sf_dir):
-    media = multimodal.png_fixture_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.png_fixture_media(read_table(spark, sf_dir, "documents"))
     feat = multimodal.featurize(media, decode_stub=False)
     return feat.select(
         "doc_id",
@@ -1571,7 +1584,7 @@ def _q73_sql() -> str:
 def q73_ingest_manifest(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline import curation, mixing
 
-    docs = _t(spark, sf_dir, "documents").withColumn(
+    docs = read_table(spark, sf_dir, "documents").withColumn(
         "event_time",
         F.timestamp_seconds(F.lit(1704067200) + F.pmod("doc_id", F.lit(86400))),
     )
@@ -1644,7 +1657,7 @@ _RZ_W, _RZ_H = multimodal.PNM_FIX_W // 2, multimodal.PNM_FIX_H // 2
     """,
 )
 def q74_image_resize(spark, sf_dir):
-    media = multimodal.pnm_fixture_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.pnm_fixture_media(read_table(spark, sf_dir, "documents"))
     rz = multimodal.resize_images(media, _RZ_W, _RZ_H, method="box")
     fmt = lambda col: F.array_join(
         F.transform(col, lambda x: F.format_string("%.6f", x)), ";"
@@ -1700,7 +1713,7 @@ _VID_SAMPLES = multimodal.VID_FIX_W * multimodal.VID_FIX_H * 3
     """,
 )
 def q75_frame_sample(spark, sf_dir):
-    media = multimodal.avi_fixture_media(_t(spark, sf_dir, "documents"))
+    media = multimodal.avi_fixture_media(read_table(spark, sf_dir, "documents"))
     sampled = multimodal.frame_sample(media, every_k=3)
     return sampled.select(
         "doc_id",

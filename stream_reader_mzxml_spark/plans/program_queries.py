@@ -1,6 +1,6 @@
 """Round-2 program battery: q34 (nested Array<Struct> record model +
 entry-point-2 None-preserving gate), q39 (the CandidateIons end-to-end
-analytic, checked against the relational program's oracle ``_q35_sql``),
+analytic, checked against the SQL program ``_q35_sql``),
 q36 (salted two-phase per-group top-K ≡ plain window).
 
 Same conventions as plans.entry_queries: every computed column aliased
@@ -22,6 +22,7 @@ from stream_reader_mzxml_spark.operators.nested import (
     with_precursors,
 )
 from stream_reader_mzxml_spark.pipeline import candidate
+from stream_reader_mzxml_spark.sources.readers import read_table
 
 PROGRAM_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 PROGRAM_ORACLES: dict[str, str] = {}
@@ -35,10 +36,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +84,9 @@ _Q34_MIN_INT = 500.0
     """,
 )
 def q34_nested_precursor_gate(spark, sf_dir):
-    nested = with_precursors(_t(spark, sf_dir, "embeddings"), base_value=_Q34_MZ)
+    nested = with_precursors(
+        read_table(spark, sf_dir, "embeddings"), base_value=_Q34_MZ
+    )
     return precursor_request_gate(
         nested, mz=_Q34_MZ, min_intensity=_Q34_MIN_INT, ppm=_Q34_PPM
     )
@@ -98,7 +97,7 @@ def q34_nested_precursor_gate(spark, sf_dir):
 # noise filter → precursor-list interval/tolerance join → head-of-list
 # tie-break → isotope nearest-peak probes (minBy fold) → double ppm gate →
 # abundance band filters → rendered Ion rows. The oracle of q39 and, inside
-# q47's, of the relational ``candidate.candidate_ions``.
+# q47's, of ``candidate.candidate_ions``.
 # ---------------------------------------------------------------------------
 def _q35_sql() -> str:
     c = candidate
@@ -166,13 +165,13 @@ def _q35_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# q39 — the same program fused into one stateless per-row projection
-# (higher-order functions only: zero shuffles, zero joins, streaming-safe).
-# The relational form is proven row-for-row equal in tests/test_programs.py.
+# q39 — the program as ``candidate.candidate_ions`` runs it: one stateless
+# per-row projection (higher-order functions only: zero shuffles, zero joins,
+# streaming-safe).
 # ---------------------------------------------------------------------------
 @_register("q39_candidate_ions_fused", _q35_sql())
 def q39_candidate_ions_fused(spark, sf_dir):
-    return candidate.candidate_ions_fused(_t(spark, sf_dir, "embeddings"))
+    return candidate.candidate_ions(read_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -197,7 +196,7 @@ def q39_candidate_ions_fused(spark, sf_dir):
     """,
 )
 def q36_salted_topk(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"
     )
     top = salted_top_k(
@@ -262,7 +261,7 @@ def q36_salted_topk(spark, sf_dir):
 def q37_unigram_perplexity(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.text import words
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     ex = docs.select(
         "doc_id",
         F.posexplode(words(F.col("text"))).alias("pos0", "word"),
@@ -327,7 +326,7 @@ def q37_unigram_perplexity(spark, sf_dir):
     """,
 )
 def q38_quantiles(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
@@ -364,7 +363,7 @@ def q38_quantiles(spark, sf_dir):
 def q40_repetition(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.text import repetition_features
 
-    return repetition_features(_t(spark, sf_dir, "documents"))
+    return repetition_features(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +384,7 @@ def q40_repetition(spark, sf_dir):
 def q41_pii_patterns(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.text import pii_pattern_counts
 
-    return pii_pattern_counts(_t(spark, sf_dir, "documents"))
+    return pii_pattern_counts(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -486,7 +485,7 @@ def _q42_sql(src: str = "documents") -> str:
 def q42_corpus_curation(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.curation import curate
 
-    return curate(_t(spark, sf_dir, "documents"))
+    return curate(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -670,7 +669,7 @@ def precursor_match_scores(emb: DataFrame) -> DataFrame:
 
 @_register("q44_precursor_match_scores", _q44_sql())
 def q44_precursor_match_scores(spark, sf_dir):
-    return precursor_match_scores(_t(spark, sf_dir, "embeddings"))
+    return precursor_match_scores(read_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -765,4 +764,4 @@ def _q62_sql() -> str:
 def q62_training_manifest(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.curation import training_manifest
 
-    return training_manifest(_t(spark, sf_dir, "documents"))
+    return training_manifest(read_table(spark, sf_dir, "documents"))

@@ -20,11 +20,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.functions.chem import ABUNDANCE_ISOTOPE
 from stream_reader_mzxml_spark.pipeline import candidate
+from stream_reader_mzxml_spark.sources.readers import read_table
 
 REPORT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 REPORT_ORACLES: dict[str, str] = {}
@@ -38,10 +39,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +66,7 @@ _Q43B_RANK_SLOP = 0.005
     """,
 )
 def q43b_sketch_bounds(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     sk = ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=_Q43B_RSD).alias("approx_users"),
         F.countDistinct("user_id").alias("exact_users"),
@@ -203,27 +200,19 @@ def _q45_sql() -> str:
 @_register("q45_glucosinolates", _q45_sql())
 def q45_glucosinolates(spark, sf_dir):
     c = candidate
-    sp = c.spectra_from_embeddings(_t(spark, sf_dir, "embeddings")).filter(
+    sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).filter(
         (F.col("rt") >= _Q45_RT_LO) & (F.col("rt") <= _Q45_RT_HI)
     )
     # two-pass count (MainGlucosinolates.scala:105-113): 1-row agg broadcast
     tot = sp.agg(F.count(F.lit(1)).alias("n_spectra"))
 
-    def nearest(d):
-        return F.aggregate(
-            F.col("peaks"),
-            F.element_at(F.col("peaks"), 1),
-            lambda acc, p: F.when(
-                F.abs(p["mz"] - d) < F.abs(acc["mz"] - d), p
-            ).otherwise(acc),
-        )
-
+    peaks = F.col("peaks")
     idx = F.sequence(F.lit(1), F.lit(c.PEAK_DIM))
     cands = F.transform(
         idx,
         lambda i: F.struct(
             i.alias("pos"),
-            F.element_at(F.col("peaks"), i.cast("int")).alias("peak"),
+            F.element_at(peaks, i.cast("int")).alias("peak"),
         ),
     )
     kept = F.filter(cands, lambda x: x["peak"]["intensity"] > F.lit(_Q45_MIN_INT))
@@ -232,8 +221,10 @@ def q45_glucosinolates(spark, sf_dir):
         lambda x: F.struct(
             x["pos"].alias("pos"),
             x["peak"].alias("peak"),
-            nearest(x["peak"]["mz"] + F.lit(1.0)).alias("near1"),
-            nearest(x["peak"]["mz"] + F.lit(_Q45_DELTA)).alias("near2"),
+            c.nearest_peak(peaks, x["peak"]["mz"] + F.lit(1.0)).alias("near1"),
+            c.nearest_peak(peaks, x["peak"]["mz"] + F.lit(_Q45_DELTA)).alias(
+                "near2"
+            ),
         ),
     )
 
@@ -354,7 +345,7 @@ def _q46_sql() -> str:
 @_register("q46_database_ions", _q46_sql())
 def q46_database_ions(spark, sf_dir):
     c = candidate
-    sp = c.spectra_from_embeddings(_t(spark, sf_dir, "embeddings")).withColumn(
+    sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).withColumn(
         "rt", F.col("rt").cast("long")
     )
     db_arr = F.array(
@@ -530,7 +521,7 @@ def q47_gluco_delta_stats(spark, sf_dir):
         F.round(F.max("m0"), 6).alias("max_m0"),
     )
 
-    out = candidate.candidate_ions(spark, _t(spark, sf_dir, "embeddings"))
+    out = candidate.candidate_ions(read_table(spark, sf_dir, "embeddings"))
     frags = F.transform(
         F.split(F.col("fragments"), ";"), lambda s: s.cast("double")
     )
@@ -715,32 +706,23 @@ def _q67_sql() -> str:
 @_register("q67_isotope_envelope", _q67_sql())
 def q67_isotope_envelope(spark, sf_dir):
     c = candidate
-    sp = c.spectra_from_embeddings(_t(spark, sf_dir, "embeddings")).filter(
+    sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).filter(
         (F.col("rt") >= _Q67_RT_LO) & (F.col("rt") <= _Q67_RT_HI)
     )
 
-    def nearest(d):
-        return F.aggregate(
-            F.col("peaks"),
-            F.element_at(F.col("peaks"), 1),
-            lambda acc, p: F.when(
-                F.abs(p["mz"] - d) < F.abs(acc["mz"] - d), p
-            ).otherwise(acc),
-        )
-
+    peaks = F.col("peaks")
     idx = F.sequence(F.lit(1), F.lit(c.PEAK_DIM))
     # every peak — Main.scala probes the full peak list (no noise floor)
     probed = F.transform(
         idx,
         lambda i: F.struct(
             i.alias("pos"),
-            F.element_at(F.col("peaks"), i.cast("int")).alias("peak"),
-            nearest(
-                F.element_at(F.col("peaks"), i.cast("int"))["mz"] + F.lit(1.0)
+            F.element_at(peaks, i.cast("int")).alias("peak"),
+            c.nearest_peak(
+                peaks, F.element_at(peaks, i.cast("int"))["mz"] + F.lit(1.0)
             ).alias("near1"),
-            nearest(
-                F.element_at(F.col("peaks"), i.cast("int"))["mz"]
-                + F.lit(_Q67_DELTA)
+            c.nearest_peak(
+                peaks, F.element_at(peaks, i.cast("int"))["mz"] + F.lit(_Q67_DELTA)
             ).alias("near2"),
         ),
     )
@@ -881,7 +863,7 @@ def q68_diagnostic_report(spark, sf_dir):
 
     c = candidate
     sp = c.spectra_from_embeddings(
-        _t(spark, sf_dir, "embeddings"), keep_embedding=True
+        read_table(spark, sf_dir, "embeddings"), keep_embedding=True
     ).select(
         "vec_id",
         F.col("rt").cast("long").alias("rt"),

@@ -4,7 +4,9 @@ The same comparison ``tools/check_oracle.py`` runs over the whole battery:
 Spark result and ``oracle_sql()`` result must agree on column names, row
 count and order-insensitive normalized values. Covers the queries whose
 operator has a single form kept in sync with a hand-written oracle: q27
-(SimHash), q30 (LSH ±2-bit multi-probe) and q49 (IVF Arrow assignment).
+(SimHash), q30 (LSH ±2-bit multi-probe), q49 (IVF Arrow assignment), and
+the four programs built on ``candidate.nearest_peak`` (q39 and q47 through
+``candidate.candidate_ions``, q45, q67).
 """
 
 from __future__ import annotations
@@ -30,7 +32,16 @@ def duck(sf_dir):
 
 @pytest.mark.spark
 @pytest.mark.parametrize(
-    "name", ["q27_simhash", "q30_lsh_ann_topk", "q49_ivf_ann_topk"]
+    "name",
+    [
+        "q27_simhash",
+        "q30_lsh_ann_topk",
+        "q49_ivf_ann_topk",
+        "q39_candidate_ions_fused",
+        "q45_glucosinolates",
+        "q47_gluco_delta_stats",
+        "q67_isotope_envelope",
+    ],
 )
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     import __spark_entry__ as e

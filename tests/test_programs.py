@@ -84,52 +84,55 @@ class TestCandidateIons:
         ]
         assert both == [0, 10]  # the golden premise: two ions really match
 
-        # vec_id=10 → rt=(10*7)%3600=70; component 0 → mz=100+v*10=80.2;
-        # peak intensity ((640)*37)%1000=680 > noise
+        # vec_id=10 → rt=(10*7)%3600=70; component 0 → mz=100+v*10=80.2,
+        # intensity ((640)*37)%1000=680 > noise. Components 1 and 2 are its
+        # isotope peaks: mz 81.2 (int 717) and ≈82.196 (int 754) sit on the
+        # probes mz0+1.0 and mz0+1.996, inside the ppm and abundance gates,
+        # and match no ion themselves.
         v = [200.0] * 64  # other peaks far away (mz=2100), no ion match
         v[0] = -1.98
-        emb = _emb(spark, [(10, v)])
-        winners = candidate.match_winners(
-            spark, candidate.spectra_from_embeddings(emb)
-        ).collect()
-        assert len(winners) == 1
-        w = winners[0]
-        assert (w.vec_id, w.pos) == (10, 1)
+        v[1] = -1.88
+        v[2] = -1.7804
+        out = candidate.candidate_ions(_emb(spark, [(10, v)])).collect()
+        assert len(out) == 1
+        w = out[0]
+        assert (w.num, w.pos) == (10, 1)
         assert w.ion_id == 0  # stream-order head, not ion 10
         assert w.fragments == ions[0][3]
         assert w.mz0 == pytest.approx(80.2, abs=1e-5)
+        assert (w.int1, w.int2) == (717.0, 754.0)
 
     def test_nearest_fold_is_first_argmin(self, spark):
         # findClosestValueMz = minBy = FIRST minimal element in list order:
         # two peaks equidistant from the probe → the earlier one wins.
-        df = spark.createDataFrame(
-            [(1, [(99.0, 1.0), (101.0, 2.0)])],
-            "vec_id INT, peaks ARRAY<STRUCT<mz: DOUBLE, intensity: DOUBLE>>",
-        )
+        schema = "probe DOUBLE, peaks ARRAY<STRUCT<mz: DOUBLE, intensity: DOUBLE>>"
+        df = spark.createDataFrame([(100.0, [(99.0, 1.0), (101.0, 2.0)])], schema)
         got = df.select(
-            candidate._nearest(F.col("peaks"), F.lit(100.0)).alias("n")
+            candidate.nearest_peak(F.col("peaks"), F.col("probe")).alias("n")
         ).collect()[0].n
         assert got.mz == 99.0 and got.intensity == 1.0
 
-    def test_fused_equals_relational(self, spark):
-        # the zero-shuffle higher-order form must emit exactly the relational
-        # pipeline's rows (same head tie-break, same probes, same gates)
+        # random integer-valued peaks (many ties) against numpy's first argmin;
+        # each peak's intensity carries its list position
         import numpy as np
 
-        rng = np.random.RandomState(23)
-        rows = [
-            (int(i), [float(x) for x in rng.standard_normal(64)])
-            for i in range(150)
+        rng = np.random.default_rng(11)
+        arrays = [
+            rng.integers(0, 1000, size=rng.integers(1, 30)).astype(float)
+            for _ in range(200)
         ]
-        emb = _emb(spark, rows)
-        cols = ["num", "rt", "pos", "mz0", "int0", "mz1", "int1",
-                "mz2", "int2", "ion_id", "fragments"]
-        rel = sorted(map(tuple, candidate.candidate_ions(spark, emb)
-                         .select(cols).collect()))
-        fus = sorted(map(tuple, candidate.candidate_ions_fused(emb)
-                         .select(cols).collect()))
-        assert len(rel) > 0
-        assert rel == fus
+        probes = rng.random(200) * 1000
+        rows = [
+            (float(p), [(float(x), float(j)) for j, x in enumerate(a)])
+            for a, p in zip(arrays, probes)
+        ]
+        got = [
+            r.n.intensity
+            for r in spark.createDataFrame(rows, schema)
+            .select(candidate.nearest_peak(F.col("peaks"), F.col("probe")).alias("n"))
+            .collect()
+        ]
+        assert got == [float(np.argmin(np.abs(a - p))) for a, p in zip(arrays, probes)]
 
     def test_fused_runs_on_stream(self, spark, tmp_path):
         # stateless projection → runs unchanged as a streaming query; output
@@ -152,7 +155,7 @@ class TestCandidateIons:
             .option("maxFilesPerTrigger", "2")
             .parquet(src)
         )
-        out = candidate.candidate_ions_fused(stream)
+        out = candidate.candidate_ions(stream)
         name = f"fused_{uuid.uuid4().hex[:8]}"
         q = (
             out.writeStream.format("memory")
@@ -166,7 +169,7 @@ class TestCandidateIons:
                 "mz2", "int2", "ion_id", "fragments"]
         got = sorted(map(tuple, spark.sql(f"SELECT * FROM {name}")
                          .select(cols).collect()))
-        exp = sorted(map(tuple, candidate.candidate_ions_fused(emb)
+        exp = sorted(map(tuple, candidate.candidate_ions(emb)
                          .select(cols).collect()))
         assert len(exp) > 0
         assert got == exp
@@ -181,7 +184,7 @@ class TestCandidateIons:
             (int(i), [float(x) for x in rng.standard_normal(64)])
             for i in range(200)
         ]
-        out = candidate.candidate_ions(spark, _emb(spark, rows))
+        out = candidate.candidate_ions(_emb(spark, rows))
         rows_out = out.collect()
         for r in rows_out:
             d0 = r.mz0 + candidate.DELTA_MP0_MP1

@@ -26,7 +26,7 @@ ALLOWED_CARTESIAN = {
     "q12_sliding_window",
     "q37_unigram_perplexity",  # 1-row broadcast corpus-total cross join
     "q45_glucosinolates",  # 1-row broadcast two-pass-count (n_spectra) cross join
-    "q47_gluco_delta_stats",  # CandidateIons ion theta-join + 1-row precursor-stats × 1-row folds
+    "q47_gluco_delta_stats",  # 1-row precursor-stats × 1-row folds
     "q53_source_drift",  # #sources × #buckets densify + 1-row corpus total (all tiny)
     "q56_tfidf",  # 1-row broadcast corpus doc-count cross join
     "q60_kmeans_step",  # 1-row broadcast centroid-array cross join
