@@ -11,12 +11,14 @@ import pandas as pd
 import pytest
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.functions.kernels import (
     decode_packed_pairs,
     seg_band_score,
     seg_pairwise_diffs,
 )
+from stream_reader_mzxml_spark.pipeline.candidate import nearest_peak
 
 
 def _pack(pairs, precision=32, compress=True):
@@ -160,6 +162,42 @@ class TestBandScore:
         lens = np.array([len(a) for a in arrays])
         got = seg_band_score(flat, lens, refs, 0.5)
         assert got.tolist() == self._oracle(arrays, refs, 0.5)
+
+
+class TestNearest:
+    """J1 — Spectrum.scala:39-41 minBy(abs) with first-min tie-break, as the
+    ``nearest_peak`` fold."""
+
+    SCHEMA = "probe DOUBLE, peaks ARRAY<STRUCT<mz: DOUBLE, intensity: DOUBLE>>"
+
+    def _nearest(self, spark, rows):
+        return [
+            r.n
+            for r in spark.createDataFrame(rows, self.SCHEMA)
+            .select(nearest_peak(F.col("peaks"), F.col("probe")).alias("n"))
+            .collect()
+        ]
+
+    def test_vs_oracle_random(self, spark):
+        # integer-valued peaks (many ties) against numpy's first argmin; each
+        # peak's intensity carries its list position
+        rng = np.random.default_rng(11)
+        arrays = [rng.integers(0, 1000, size=rng.integers(1, 30)).astype(float) for _ in range(200)]
+        probes = rng.random(200) * 1000
+        rows = [
+            (float(p), [(float(x), float(j)) for j, x in enumerate(a)])
+            for a, p in zip(arrays, probes)
+        ]
+        got = self._nearest(spark, rows)
+        for a, p, n in zip(arrays, probes, got):
+            i = int(np.argmin(np.abs(a - p)))  # np.argmin = first min, like minBy
+            assert n.intensity == i
+            assert n.mz == a[i]
+
+    def test_tie_break_first(self, spark):
+        # probe 5.0 equidistant from 6 and 4 → minBy returns the FIRST (6)
+        (n,) = self._nearest(spark, [(5.0, [(6.0, 0.0), (4.0, 1.0), (9.0, 2.0)])])
+        assert n.intensity == 0.0 and n.mz == 6.0  # first in array order
 
 
 class TestPairwiseDiffs:

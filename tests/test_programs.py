@@ -112,28 +112,6 @@ class TestCandidateIons:
         ).collect()[0].n
         assert got.mz == 99.0 and got.intensity == 1.0
 
-        # random integer-valued peaks (many ties) against numpy's first argmin;
-        # each peak's intensity carries its list position
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        arrays = [
-            rng.integers(0, 1000, size=rng.integers(1, 30)).astype(float)
-            for _ in range(200)
-        ]
-        probes = rng.random(200) * 1000
-        rows = [
-            (float(p), [(float(x), float(j)) for j, x in enumerate(a)])
-            for a, p in zip(arrays, probes)
-        ]
-        got = [
-            r.n.intensity
-            for r in spark.createDataFrame(rows, schema)
-            .select(candidate.nearest_peak(F.col("peaks"), F.col("probe")).alias("n"))
-            .collect()
-        ]
-        assert got == [float(np.argmin(np.abs(a - p))) for a, p in zip(arrays, probes)]
-
     def test_fused_runs_on_stream(self, spark, tmp_path):
         # stateless projection → runs unchanged as a streaming query; output
         # must equal the batch run row-for-row
