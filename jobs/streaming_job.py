@@ -13,6 +13,11 @@ Cluster launch (the master/executors come from spark-submit, not the code):
 Local smoke (Spark's default of 200 shuffle partitions is slow for small
 stateful runs): spark-submit --master 'local[8]' --conf
 spark.sql.shuffle.partitions=8 --py-files deps.zip ...
+With a local ``--checkpoint`` it may also pass the checkpoint manager that a
+launched session uses (``session.py``; it renames without forking
+``readlink``):
+
+    --conf spark.sql.streaming.checkpointFileManagerClass=org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 The session is ``session.get_spark``'s (topology stays spark-submit's), and
 every suite writes through the exactly-once sink, so each one leaves

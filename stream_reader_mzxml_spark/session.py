@@ -18,10 +18,19 @@ One place to pin every config that matters for correctness and scale:
   zip this package was imported from, so the daemon imports it from any cwd
   (``--py-files`` reach a worker's path only per task). A zip is also listed
   by basename: a cluster executor fetches ``--py-files`` into its cwd.
+- ``spark.sql.streaming.checkpointFileManagerClass`` — a launched (``local[N]``)
+  session renames checkpoint and state-store files with ``FileSystem.rename``,
+  one ``rename(2)`` on a local disk. Spark's FileContext default calls
+  Hadoop's ``getFileLinkStatus`` 4× per side of each rename, and without
+  libhadoop each call forks ``readlink`` (BASELINE.md "Local checkpoint
+  manager"). Under spark-submit the checkpoint may sit on HDFS or S3, so the
+  default and its atomic overwrite-rename stay.
 
-Topology (``master``, shuffle partitions, ``spark.driver.memory``) is set only
-when this call launches the JVM; under spark-submit (``PYSPARK_GATEWAY_PORT``
-set) it is spark-submit's, and ``cpus``/``shuffle_partitions`` are ignored.
+Topology (``master``, shuffle partitions, ``spark.driver.memory``) and the
+checkpoint manager are set only when this call launches the JVM; under
+spark-submit (``PYSPARK_GATEWAY_PORT`` set) they are spark-submit's, and
+``cpus``/``shuffle_partitions`` are ignored. ``extra_conf`` overrides any of
+them.
 """
 
 from __future__ import annotations
@@ -87,6 +96,12 @@ def get_spark(
             # page-commit + THP-compaction storm (4-5 cores of kernel time for
             # tens of seconds); pre-touch was worse (one storm at startup).
             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+            # local checkpoints: rename without forking readlink (docstring)
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -217,6 +217,9 @@ print(json.dumps({
     "master": spark.sparkContext.master,
     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     "pythonpath": spark.sparkContext.environment["PYTHONPATH"],
+    "checkpoint_manager": spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass", None
+    ),
 }))
 """
 
@@ -224,7 +227,9 @@ print(json.dumps({
 def test_spark_submit_workers_run_engine_daemon(spark_submit, tmp_path):
     """``get_spark`` under ``spark-submit --py-files deps.zip``: the workers
     fork from the engine daemon, which imports the shipped zip, and
-    spark-submit's topology flags and worker ``PYTHONPATH`` survive."""
+    spark-submit's topology flags and worker ``PYTHONPATH`` survive. The
+    checkpoint manager stays Spark's default (the checkpoint may not be
+    local)."""
     (tmp_path / "probe.py").write_text(_PROBE)
     (out,) = spark_submit([
         "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7",
@@ -233,6 +238,7 @@ def test_spark_submit_workers_run_engine_daemon(spark_submit, tmp_path):
     r = json.loads(out.splitlines()[-1])
     assert r["master"] == "local[2]"
     assert r["shuffle_partitions"] == "7"
+    assert r["checkpoint_manager"] is None
     assert r["pythonpath"].split(os.pathsep) == [
         "extra", str(tmp_path / "deps.zip"), "deps.zip"
     ]
@@ -272,5 +278,6 @@ def test_driver_outside_repo_gets_python_workers(tmp_path):
         check=True, capture_output=True, text=True, timeout=300,
     )
     r = json.loads(out.stdout.splitlines()[-1])
+    assert r["checkpoint_manager"].endswith(".FileSystemBasedCheckpointFileManager")
     assert r["task"]["frozen"] > 0
     assert r["task"]["pkg"].startswith(os.path.join(REPO, "stream_reader_mzxml_spark"))
