@@ -6,8 +6,9 @@ Reference stages → graft stages (all inside :func:`candidate_ions`):
 
 1. MS1 scan + rt gate (libCandidateIons.sc:112-117)    → derived spectra
    table (rt, peak structs) in the scan's project.
-2. noise filter ``intensity > noise`` (:121-123)       → ``F.filter``
-   predicate over the row's candidate peaks.
+2. noise filter ``intensity > noise`` (:121-123)       → the ``keep``
+   predicate of :func:`peak_candidates`, over the row's positional
+   ``(pos, peak, ion)`` candidates.
 3. precursor-list match (:125-131): spectrum rt within ``ion.rt ± window``
    AND ``|ion.m0 − mz| < tol``                         → ``F.filter`` over
    the ion list, held as an in-plan literal array (the reference closes
@@ -18,16 +19,21 @@ Reference stages → graft stages (all inside :func:`candidate_ions`):
    in tests.
 5. isotope probes ``findClosestValueMz(mz+Δ1), (mz+Δ2)`` (:142-147;
    Spectrum.scala:39-41 ``minBy`` = first minimal in traversal order) →
-   :func:`nearest_peak`, an ordered ``F.aggregate`` fold over the FULL peak
-   array (noise peaks included, exactly as the reference probes the
-   unfiltered list) with a strict ``<`` comparator, which keeps the earlier
-   element on ties — ``minBy`` semantics, bit-identical to the DuckDB
-   ``list_reduce`` oracle.
+   the ``near1``/``near2`` fields :func:`peak_candidates` adds to each kept
+   candidate with :func:`nearest_peak`, an ordered ``F.aggregate`` fold over
+   the FULL peak array (noise peaks included, exactly as the reference
+   probes the unfiltered list) with a strict ``<`` comparator, which keeps
+   the earlier element on ties — ``minBy`` semantics, bit-identical to the
+   DuckDB ``list_reduce`` oracle.
 6. double ppm gate (:146-152) and the four isotope-abundance band filters
    (:162-180, the C/S abundance envelope) → plain predicates.
 7. Ion record render (:180-190)                        → explode of the
-   survivors + final select with rounded m/z columns and the ';'-joined
-   fragment string (C10).
+   survivors (:func:`candidate_rows`) + rounded m/z columns and the
+   ';'-joined fragment string (C10).
+
+:func:`peak_candidates` and :func:`candidate_rows` are also the per-peak
+loop of MainGlucosinolates (:func:`glucosinolate_candidates`, q45), Main.scala
+(q67) and databaseIons.sc (q46); each caller keeps its own gates.
 
 Scale: scan → project → generate. No shuffle, no join, no driver
 collection; stateless, so it runs unchanged on a streaming DataFrame.
@@ -118,6 +124,62 @@ def nearest_peak(peaks, d):
     )
 
 
+def peak_candidates(peaks, keep=None, fields=None, deltas=None):
+    """A row's positional candidate list: ``array<struct<pos, peak, …fields
+    [, near1, near2]>>`` over ``peaks``, in list order.
+
+    ``pos`` is the peak's 1-based position, taken from ``F.transform``'s
+    index, so fixed and variable-length arrays work alike and an empty or
+    NULL array yields no candidates. ``fields`` maps extra field names to
+    functions of the peak, evaluated once per peak before ``keep`` (a
+    predicate over the candidate struct; None keeps every peak). With
+    ``deltas=(d1, d2)`` each kept candidate also gets the isotope probes
+    ``near1``/``near2`` = :func:`nearest_peak` over the FULL ``peaks`` at
+    ``mz + d1`` and ``mz + d2``."""
+    fields = fields or {}
+    cands = F.transform(
+        peaks,
+        lambda p, i: F.struct(
+            (i + 1).alias("pos"),
+            p.alias("peak"),
+            *[f(p).alias(name) for name, f in fields.items()],
+        ),
+    )
+    if keep is not None:
+        cands = F.filter(cands, keep)
+    if deltas is None:
+        return cands
+    d1, d2 = deltas
+    return F.transform(
+        cands,
+        lambda c: F.struct(
+            *[c[name].alias(name) for name in ("pos", "peak", *fields)],
+            nearest_peak(peaks, c["peak"]["mz"] + F.lit(d1)).alias("near1"),
+            nearest_peak(peaks, c["peak"]["mz"] + F.lit(d2)).alias("near2"),
+        ),
+    )
+
+
+def candidate_rows(spectra: DataFrame, num, rt, cands, *extra) -> DataFrame:
+    """One row per probed candidate in ``cands`` (a :func:`peak_candidates`
+    array with ``deltas``): ``num, rt, pos, mz0, int0, mz1, int1, mz2, int2``
+    with m/z unrounded, then the ``extra`` columns over the exploded
+    candidate ``c`` (a name ``spectra`` must not use). ``num`` and ``rt``
+    are expressions over ``spectra``'s own columns."""
+    return spectra.select("*", F.explode(cands).alias("c")).select(
+        num.alias("num"),
+        rt.alias("rt"),
+        F.col("c.pos").alias("pos"),
+        F.col("c.peak.mz").alias("mz0"),
+        F.col("c.peak.intensity").alias("int0"),
+        F.col("c.near1.mz").alias("mz1"),
+        F.col("c.near1.intensity").alias("int1"),
+        F.col("c.near2.mz").alias("mz2"),
+        F.col("c.near2.intensity").alias("int2"),
+        *extra,
+    )
+
+
 def _ion_array():
     """The ion list as an in-plan literal array<struct> (broadcast-free: the
     constants live inside the expression tree, like the reference's closed-over
@@ -151,8 +213,6 @@ def candidate_ions(df_or_stream: DataFrame) -> DataFrame:
     scan → project → generate, trivially parallel at any cluster size, and
     because it is stateless it runs unchanged on a STREAMING DataFrame (no
     watermark needed). q39 checks it against the DuckDB oracle ``_q35_sql``."""
-    spectra = spectra_from_embeddings(df_or_stream)
-    peaks = F.col("peaks")
     ions = _ion_array()
     d0 = lambda mz: mz + F.lit(DELTA_MP0_MP1)  # noqa: E731
     d1 = lambda mz: mz + F.lit(DELTA_MP0_MP2)  # noqa: E731
@@ -169,29 +229,12 @@ def candidate_ions(df_or_stream: DataFrame) -> DataFrame:
             F.lit(1),
         )
 
-    idx = F.sequence(F.lit(1), F.lit(PEAK_DIM))
-    cands = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.element_at(peaks, i.cast("int")).alias("peak"),
-            ion_match(F.element_at(peaks, i.cast("int"))).alias("ion"),
-        ),
-    )
-    kept = F.filter(
-        cands,
+    probed = peak_candidates(
+        F.col("peaks"),
         lambda c: (c["peak"]["intensity"] > F.lit(NOISE_INTENSITY))
         & c["ion"].isNotNull(),
-    )
-    probed = F.transform(
-        kept,
-        lambda c: F.struct(
-            c["pos"].alias("pos"),
-            c["peak"].alias("peak"),
-            c["ion"].alias("ion"),
-            nearest_peak(peaks, d0(c["peak"]["mz"])).alias("near1"),
-            nearest_peak(peaks, d1(c["peak"]["mz"])).alias("near2"),
-        ),
+        fields={"ion": ion_match},
+        deltas=(DELTA_MP0_MP1, DELTA_MP0_MP2),
     )
 
     def passes(c):
@@ -207,22 +250,14 @@ def candidate_ions(df_or_stream: DataFrame) -> DataFrame:
             & (c["near2"]["intensity"] < int0 * F.lit(BAND2_HI))
         )
 
-    out = spectra.select(
-        "vec_id", "rt", F.explode(F.filter(probed, passes)).alias("c")
-    )
-    return out.select(
-        F.col("vec_id").alias("num"),
-        "rt",
-        F.col("c.pos").alias("pos"),
-        F.round(F.col("c.peak.mz"), 6).alias("mz0"),
-        F.col("c.peak.intensity").alias("int0"),
-        F.round(F.col("c.near1.mz"), 6).alias("mz1"),
-        F.col("c.near1.intensity").alias("int1"),
-        F.round(F.col("c.near2.mz"), 6).alias("mz2"),
-        F.col("c.near2.intensity").alias("int2"),
+    return candidate_rows(
+        spectra_from_embeddings(df_or_stream),
+        F.col("vec_id"),
+        F.col("rt"),
+        F.filter(probed, passes),
         F.col("c.ion.ion_id").alias("ion_id"),
         F.col("c.ion.fragments").alias("fragments"),
-    )
+    ).withColumns({m: F.round(m, 6) for m in ("mz0", "mz1", "mz2")})
 
 
 # ---------------------------------------------------------------------------
@@ -263,23 +298,17 @@ def glucosinolate_candidates(
 
     ab_c1 = ABUNDANCE_ISOTOPE["C"][1]
     ab_s2 = ABUNDANCE_ISOTOPE["S"][2]
-    peaks = F.col("peaks")
-    kept = F.filter(peaks, lambda p: p["intensity"] > F.lit(min_intensity))
-
-    probed = F.transform(
-        kept,
-        lambda x: F.struct(
-            x.alias("p0"),
-            nearest_peak(peaks, x["mz"] + F.lit(1.0)).alias("p1"),
-            nearest_peak(peaks, x["mz"] + F.lit(delta_mp0_mp2)).alias("p2"),
-        ),
+    probed = peak_candidates(
+        F.col("peaks"),
+        lambda c: c["peak"]["intensity"] > F.lit(min_intensity),
+        deltas=(1.0, delta_mp0_mp2),
     )
 
-    def passes(t):
-        mz0, int0 = t["p0"]["mz"], t["p0"]["intensity"]
-        int1, int2 = t["p1"]["intensity"], t["p2"]["intensity"]
+    def passes(c):
+        mz0, int0 = c["peak"]["mz"], c["peak"]["intensity"]
+        int1, int2 = c["near1"]["intensity"], c["near2"]["intensity"]
         return (
-            (F.abs(t["p2"]["mz"] - mz0 - F.lit(delta_mp0_mp2)) < F.lit(precision_mz))
+            (F.abs(c["near2"]["mz"] - mz0 - F.lit(delta_mp0_mp2)) < F.lit(precision_mz))
             & (int1 >= int0 * F.lit(ab_c1 * carbon_min))
             & (int1 < int0 * F.lit(ab_c1 * carbon_max))
             & (int2 >= int0 * F.lit(ab_s2 * sulfur_min))
@@ -287,20 +316,20 @@ def glucosinolate_candidates(
         )
 
     return (
-        spectra.filter(F.col("rt").isNotNull())
-        .select(
-            "num",
-            F.col("rt").cast("double").alias("rt"),
-            F.posexplode(F.filter(probed, passes)).alias("pos", "t"),
+        candidate_rows(
+            spectra.filter(F.col("rt").isNotNull()),
+            F.col("num"),
+            F.col("rt").cast("double"),
+            F.filter(probed, passes),
         )
-        .orderBy(F.col("t.p0.mz").desc(), "num", "pos")
+        .orderBy(F.col("mz0").desc(), "num", "pos")
         .select(
             "rt",
-            F.col("t.p0.mz").alias("m0_mz"),
-            F.col("t.p0.intensity").alias("m0_intensity"),
-            F.col("t.p1.mz").alias("m1_mz"),
-            F.col("t.p1.intensity").alias("m1_intensity"),
-            F.col("t.p2.mz").alias("m2_mz"),
-            F.col("t.p2.intensity").alias("m2_intensity"),
+            F.col("mz0").alias("m0_mz"),
+            F.col("int0").alias("m0_intensity"),
+            F.col("mz1").alias("m1_mz"),
+            F.col("int1").alias("m1_intensity"),
+            F.col("mz2").alias("m2_mz"),
+            F.col("int2").alias("m2_intensity"),
         )
     )

@@ -18,9 +18,7 @@ file:line of the semantics being reproduced.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.functions.scalars import (
@@ -35,27 +33,15 @@ from stream_reader_mzxml_spark.operators.joins import (
     band_semi_join,
     interval_join,
 )
+from stream_reader_mzxml_spark.plans import ORACLES, QUERIES, register
 from stream_reader_mzxml_spark.sources.readers import read_table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
 # q01 — pricing summary: the A1/A7-shape multi-aggregate (two-phase partial →
 # final HashAggregate; TPC-H Q1 analog). SURVEY §2.4 A7.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q01_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -90,7 +76,7 @@ def q01_pricing_summary(spark, sf_dir):
 # q02 — quantized occurrence count + top-40 (A2 MainDistributionMzIons.scala:66-91
 # + F7 quantize-trunc :44,70 + O2 sort-desc-take-40 :102-106).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q02_occurrence_topk",
     """
     SELECT value, count(*) AS cnt
@@ -116,7 +102,7 @@ def q02_occurrence_topk(spark, sf_dir):
 # (A4 MainDistributionMzIons.scala:100-105). List rendered as a sorted ';'
 # string (C10 render, IonEligibleGlucosinolate.scala:62-66).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q03_inverse_histogram",
     """
     WITH counts AS (
@@ -150,7 +136,7 @@ def q03_inverse_histogram(spark, sf_dir):
 # ---------------------------------------------------------------------------
 _THRESHOLDS = [float(t) for t in range(0, 620, 20)]  # 31 thresholds
 
-@_register(
+@register(
     "q04_threshold_histogram",
     f"""
     SELECT threshold, count(*) AS cnt
@@ -169,7 +155,7 @@ def q04_threshold_histogram(spark, sf_dir):
 # (F3: rt.getOrElse(0) >= start && rt.getOrElse(Max) <= end,
 # MainDistributionIntensityIons.scala:67-68). Nulls synthesized with NULLIF.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q05_rt_gate_asymmetric",
     f"""
     SELECT event_id, rt FROM (
@@ -194,7 +180,7 @@ def q05_rt_gate_asymmetric(spark, sf_dir):
 # some part's retail price (J2, IonEligibleGlucosinolate.scala:42-59 /
 # databaseIons.sc:46-53). Bucketized equi-join, NOT a cross join.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q06_band_semi_join",
     """
     SELECT l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
@@ -216,7 +202,7 @@ def q06_band_semi_join(spark, sf_dir):
 # 1.0 (J1 findClosestValueMz, Spectrum.scala:39-41, lifted across rows;
 # first-min tie-break like Scala minBy).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q07_asof_nearest",
     """
     SELECT p_partkey, price, delta FROM (
@@ -261,7 +247,7 @@ def q07_asof_nearest(spark, sf_dir):
 # |value diff| < 2.0 (J3 libCandidateIons.sc:124-137 — rt window at :128,
 # mz tolerance at :129 — re-scaled to the events table's density).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q08_interval_join",
     """
     SELECT p.event_id AS p_id, e.event_id AS e_id
@@ -299,7 +285,7 @@ def q08_interval_join(spark, sf_dir):
 # MainDistributionDiffMzIons.scala:72-93 + A3 :62-106 + O2 top-40), via the
 # vectorized pairwise kernel over the embeddings array column.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q09_pairwise_diff_topk",
     """
     WITH el AS (
@@ -327,7 +313,7 @@ def q09_pairwise_diff_topk(spark, sf_dir):
 # (W3 SubScan parent-session analog, MzXMLTags.scala:414-442; lag+cumsum form
 # so batch Spark and DuckDB share exact semantics).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q10_sessionize",
     """
     WITH g AS (
@@ -379,7 +365,7 @@ def q10_sessionize(spark, sf_dir):
 # streaming tumbling agg — F.window() semantics checked against the epoch
 # formula oracle).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q11_tumbling_window",
     """
     SELECT (floor(epoch(ts) / 3600) * 3600)::BIGINT AS ws, event_type,
@@ -409,7 +395,7 @@ def q11_tumbling_window(spark, sf_dir):
 # libCandidateIons.sc:128, as a standalone sliding agg: 2 h window, 30 min
 # slide → each event lands in 4 windows).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q12_sliding_window",
     """
     SELECT ws, count(*) AS cnt FROM (
@@ -430,7 +416,7 @@ def q12_sliding_window(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # q13 — top-K per group via ranking window (W5/O2).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q13_topk_per_group",
     """
     SELECT l_returnflag, l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
@@ -471,7 +457,7 @@ def q13_topk_per_group(spark, sf_dir):
 # q14 — Pearson r² per group (A9, ChemicalConst.scala:119-137 hand-rolled
 # covariance/variance → built-in corr, squared).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q14_corr_r2",
     """
     SELECT l_returnflag,
@@ -492,7 +478,7 @@ def q14_corr_r2(spark, sf_dir):
 # q15 — min/max + deterministic argmin/argmax by key (A8
 # glucosinolateIons.sc:31 minBy/maxBy — tie-broken by key for determinism).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q15_minmax_by",
     """
     SELECT o_orderpriority,
@@ -529,7 +515,7 @@ def q15_minmax_by(spark, sf_dir):
 # q17 — group-and-collect (A5 diagnosticIon.sc:37-41), list rendered sorted
 # (C10) for hash-stable comparison.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q17_group_collect",
     """
     SELECT event_type,
@@ -563,7 +549,7 @@ def q17_group_collect(spark, sf_dir):
 # q18 — ppm-precision predicate (F5/C1 SpectrumRequest.scala:15-16): parts
 # within 50 ppm of a probe mass.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q18_ppm_filter",
     """
     SELECT p_partkey, round(p_retailprice, 2) AS price
@@ -583,7 +569,7 @@ def q18_ppm_filter(spark, sf_dir):
 # getSeconds truncation, the reference's 1 s event-time granularity).
 # Durations synthesized deterministically from integer columns.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q19_duration_seconds",
     """
     SELECT event_id, dur,
@@ -613,41 +599,16 @@ def q19_duration_seconds(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q20-q31 — training-data pipeline battery (dedup / similarity / text /
-# multimodal) from plans.pipeline_queries
+# The rest of the battery registers on import: the training-data pipeline
+# (plans.pipeline_queries), the nested record model and CandidateIons
+# programs (plans.program_queries), and the sketch-bound oracle plus the last
+# composed reference programs (plans.report_queries).
 # ---------------------------------------------------------------------------
-from stream_reader_mzxml_spark.plans.pipeline_queries import (  # noqa: E402
-    PIPELINE_ORACLES,
-    PIPELINE_QUERIES,
+from stream_reader_mzxml_spark.plans import (  # noqa: E402, F401
+    pipeline_queries,
+    program_queries,
+    report_queries,
 )
-
-QUERIES.update(PIPELINE_QUERIES)
-ORACLES.update(PIPELINE_ORACLES)
-
-# ---------------------------------------------------------------------------
-# q34-q36 — nested record model / CandidateIons program / salted top-K from
-# plans.program_queries
-# ---------------------------------------------------------------------------
-from stream_reader_mzxml_spark.plans.program_queries import (  # noqa: E402
-    PROGRAM_ORACLES,
-    PROGRAM_QUERIES,
-)
-
-QUERIES.update(PROGRAM_QUERIES)
-ORACLES.update(PROGRAM_ORACLES)
-
-# ---------------------------------------------------------------------------
-# q43b/q45-q47 — sketch-bound oracle + the last composed reference programs
-# (MainGlucosinolates, databaseIons.sc, glucosinolateIons.sc) from
-# plans.report_queries
-# ---------------------------------------------------------------------------
-from stream_reader_mzxml_spark.plans.report_queries import (  # noqa: E402
-    REPORT_ORACLES,
-    REPORT_QUERIES,
-)
-
-QUERIES.update(REPORT_QUERIES)
-ORACLES.update(REPORT_ORACLES)
 
 # ---------------------------------------------------------------------------
 # Correctness-gate priority ordering.

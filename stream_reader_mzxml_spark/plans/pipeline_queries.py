@@ -12,9 +12,6 @@ value-hash compare.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.pipeline import (
@@ -26,20 +23,8 @@ from stream_reader_mzxml_spark.pipeline import (
     similarity,
     text,
 )
+from stream_reader_mzxml_spark.plans import register
 from stream_reader_mzxml_spark.sources.readers import read_table
-
-PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-PIPELINE_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        PIPELINE_QUERIES[name] = fn
-        if oracle is not None:
-            PIPELINE_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # shared SQL fragments -------------------------------------------------------
@@ -66,7 +51,7 @@ _FOLD_NORM = (
 # ---------------------------------------------------------------------------
 # q20 — token counting (whitespace + regex word runs)
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q20_token_counts",
     """
     SELECT doc_id,
@@ -85,7 +70,7 @@ def q20_token_counts(spark, sf_dir):
 # ---------------------------------------------------------------------------
 _SW_EN = ", ".join(f"'{s}'" for s in text.LANG_STOPWORDS["en"])
 
-@_register(
+@register(
     "q21_quality_scores",
     f"""
     WITH w AS (
@@ -141,7 +126,7 @@ def _lang_sql() -> str:
     """
 
 
-@_register("q22_lang_id", _lang_sql())
+@register("q22_lang_id", _lang_sql())
 def q22_lang_id(spark, sf_dir):
     return text.lang_id(read_table(spark, sf_dir, "documents"))
 
@@ -149,7 +134,7 @@ def q22_lang_id(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # q23 — rolling-hash document fingerprint (ordered fold over word h32s)
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q23_fingerprint",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
@@ -170,7 +155,7 @@ def q23_fingerprint(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # q24 — exact dedup (content-digest groups, deterministic keeper)
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q24_exact_dedup",
     """
     SELECT md5(text) AS text_hash, min(doc_id) AS keeper_doc_id,
@@ -187,7 +172,7 @@ def q24_exact_dedup(spark, sf_dir):
 # frequent-shingle pruning: shingles in > NGRAM_MAX_DF docs are dropped on
 # BOTH sides before the self-join; Jaccard is exact over the pruned space)
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q25_ngram_jaccard",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -254,7 +239,7 @@ def _minhash_sql(src: str = "documents") -> str:
     """
 
 
-@_register("q26_minhash_lsh", _minhash_sql())
+@register("q26_minhash_lsh", _minhash_sql())
 def q26_minhash_lsh(spark, sf_dir):
     return dedup.minhash_lsh_pairs(
         read_table(spark, sf_dir, "documents"), threshold=0.5
@@ -271,7 +256,7 @@ def q26_minhash_lsh(spark, sf_dir):
 # ---------------------------------------------------------------------------
 _H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
-@_register(
+@register(
     "q27_simhash",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -310,7 +295,7 @@ def q27_simhash(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # q29 — brute-force cosine top-k (ANN correctness baseline)
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q29_cosine_topk",
     f"""
     WITH e AS (
@@ -388,7 +373,7 @@ def _lsh_ann_sql() -> str:
     """
 
 
-@_register("q30_lsh_ann_topk", _lsh_ann_sql())
+@register("q30_lsh_ann_topk", _lsh_ann_sql())
 def q30_lsh_ann_topk(spark, sf_dir):
     return similarity.lsh_ann_topk(
         read_table(spark, sf_dir, "embeddings"), n_probes=5, k=10
@@ -406,7 +391,7 @@ def q30_lsh_ann_topk(spark, sf_dir):
 # match the stub's fixed-dim output; assumes ASCII text (datagen guarantees —
 # ascii()/substr() are char-based, the stub is byte-based).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q31_multimodal_features",
     """
     WITH chars AS (
@@ -470,7 +455,7 @@ _Q31B_HDR_LEN = len(
 )
 
 
-@_register(
+@register(
     "q31b_pnm_codec",
     f"""
     WITH ids AS (
@@ -519,7 +504,7 @@ _ISO_TOL = 0.05
 _ISO_LO, _ISO_HI = -10.0, 10.0
 
 
-@_register(
+@register(
     "q32_isotope_match",
     f"""
     SELECT vec_id, n_matched, n_elems FROM (
@@ -566,7 +551,7 @@ _SCORE_REFS = [-0.4, -0.25, -0.1, 0.0, 0.1, 0.25, 0.4]
 _SCORE_TOL = 0.02
 
 
-@_register(
+@register(
     "q33_band_score",
     f"""
     SELECT vec_id, score FROM (
@@ -596,7 +581,7 @@ def q33_band_score(spark, sf_dir):
 # training corpus = the rest. The benchmark gram set is broadcast — the
 # corpus-side plan is one scan + one doc_id groupBy, the 100-TB shape.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q48_decontamination",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -635,7 +620,7 @@ def q48_decontamination(spark, sf_dir):
 # Oracle replicates the IVF *plan* (assignment + probed partitions), as the
 # LSH oracle replicates the bucketed plan.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q49_ivf_ann_topk",
     f"""
     WITH e AS (
@@ -689,7 +674,7 @@ def q49_ivf_ann_topk(spark, sf_dir):
 # q50 — per-domain caps (stratified sampling): seeded-uniform top-`cap` docs
 # per source via the salted two-phase top-K (a source is the Zipf-hot axis).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q50_domain_caps",
     f"""
     SELECT source, doc_id, priority, rank FROM (
@@ -721,7 +706,7 @@ _SEGS = f"""
 """
 
 
-@_register(
+@register(
     "q51_segment_dedup",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -760,7 +745,7 @@ _CHK = (
 )
 
 
-@_register(
+@register(
     "q52_context_chunks",
     f"""
     WITH w AS (
@@ -795,7 +780,7 @@ def q52_context_chunks(spark, sf_dir):
 # over a 64-bucket token-hash histogram): data-mixture QA. Both divergences
 # are ordered folds over buckets ascending — bit-identical to the oracle.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q53_source_drift",
     f"""
     WITH ex AS (
@@ -842,7 +827,7 @@ def q53_source_drift(spark, sf_dir):
 # (min reachable doc_id per node), so the O(log n)-round distributed
 # algorithm is checked against a directly-stated fixpoint semantics.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q54_dedup_clusters",
     f"""
     WITH RECURSIVE pr AS (SELECT a_id, b_id FROM ({_minhash_sql()})),
@@ -876,7 +861,7 @@ def q54_dedup_clusters(spark, sf_dir):
 # doc_id per component; unclustered docs keep themselves). The corpus-side
 # plan is one left join on doc_id against the cluster-members-only map.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q55_dedup_apply",
     f"""
     WITH RECURSIVE pr AS (SELECT a_id, b_id FROM ({_minhash_sql()})),
@@ -913,7 +898,7 @@ def q55_dedup_apply(spark, sf_dir):
 # ranking is q13/q36's operator; emitting scores keeps the float compare
 # ulp-safe under round(6).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q56_tfidf",
     f"""
     WITH ex AS (
@@ -941,7 +926,7 @@ def q56_tfidf(spark, sf_dir):
 _WS_TOKS = "length(regexp_extract_all(text, '\\S+'))"
 
 
-@_register(
+@register(
     "q57_mixture_sample",
     f"""
     WITH toks AS (
@@ -970,7 +955,7 @@ def q57_mixture_sample(spark, sf_dir):
 # same semantics as ONE plain window cumsum — decomposition vs declared
 # spec, as with q54's connected components.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q58_sequence_packing",
     f"""
     WITH toks AS (
@@ -1003,7 +988,7 @@ def q58_sequence_packing(spark, sf_dir):
 # Emails first, then remaining digit runs; md5 of the rewritten string is
 # the proof both engines produced the identical redacted text.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q59_pii_redact",
     f"""
     WITH r AS (
@@ -1034,7 +1019,7 @@ def q59_pii_redact(spark, sf_dir):
 # post-agg. Integer-exact throughout; the only float op is the final mean
 # division, identical IEEE in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q60_kmeans_step",
     f"""
     WITH q AS (
@@ -1084,7 +1069,7 @@ def q60_kmeans_step(spark, sf_dir):
 # word→pair fan-out, ONE map-side-combined groupBy over a ≤|alphabet|² key
 # space, global top-k as TakeOrderedAndProject (never a full sort).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q61_bpe_pair_counts",
     f"""
     WITH w AS (
@@ -1179,7 +1164,7 @@ def _q63_sql() -> str:
     """
 
 
-@_register("q63_kmeans_iterated", _q63_sql())
+@register("q63_kmeans_iterated", _q63_sql())
 def q63_kmeans_iterated(spark, sf_dir):
     return similarity.kmeans_iterate(
         read_table(spark, sf_dir, "embeddings"), n_iters=2
@@ -1191,7 +1176,7 @@ def q63_kmeans_iterated(spark, sf_dir):
 # min doc_id), rebuild the text scan-side from the tiny dropped-index array
 # (the text never shuffles), md5-prove the rewritten string.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q64_segment_dedup_apply",
     f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -1243,7 +1228,7 @@ def q64_segment_dedup_apply(spark, sf_dir):
 # the no-single-task-window decomposition is value-proven here directly
 # (q45 uses the same operator inside a larger program).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q65_epoch_order",
     f"""
     SELECT doc_id, {mixing.EPOCH} AS epoch, priority,
@@ -1265,7 +1250,7 @@ def q65_epoch_order(spark, sf_dir):
 # packing — docs per sequence, filled token slots, doc_id span. Scan-side
 # span explode + ONE groupBy((source, seq_id)); all integer arithmetic.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q66_sequence_manifest",
     f"""
     WITH toks AS (
@@ -1309,7 +1294,7 @@ def q66_sequence_manifest(spark, sf_dir):
 # safe scan projection); 'split:' salt keeps the draw independent of the
 # mixture/cap draws. Exact BIGINT draw: (h32 * 1e6) >> 32 in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q69_holdout_split",
     f"""
     SELECT doc_id, source, draw_ppm,
@@ -1341,7 +1326,7 @@ def q69_holdout_split(spark, sf_dir):
 _Q70_SAMPLES = multimodal.WAV_FIX_FRAMES * multimodal.WAV_FIX_CH
 
 
-@_register(
+@register(
     "q70_wav_codec",
     f"""
     WITH ids AS (
@@ -1391,7 +1376,7 @@ def q70_wav_codec(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "q71_png_codec",
     f"""
     WITH ids AS (
@@ -1445,7 +1430,7 @@ def q71_png_codec(spark, sf_dir):
 _MZXML_RES = "/root/reference/src/test/resources"
 
 
-@_register(
+@register(
     "q72_mzxml_ingest",
     """
     SELECT * FROM (VALUES
@@ -1580,7 +1565,7 @@ def _q73_sql() -> str:
     """
 
 
-@_register("q73_ingest_manifest", _q73_sql())
+@register("q73_ingest_manifest", _q73_sql())
 def q73_ingest_manifest(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline import curation, mixing
 
@@ -1622,7 +1607,7 @@ def q73_ingest_manifest(spark, sf_dir):
 _RZ_W, _RZ_H = multimodal.PNM_FIX_W // 2, multimodal.PNM_FIX_H // 2
 
 
-@_register(
+@register(
     "q74_image_resize",
     f"""
     WITH ids AS (
@@ -1685,7 +1670,7 @@ def q74_image_resize(spark, sf_dir):
 _VID_SAMPLES = multimodal.VID_FIX_W * multimodal.VID_FIX_H * 3
 
 
-@_register(
+@register(
     "q75_frame_sample",
     f"""
     WITH ids AS (

@@ -10,9 +10,7 @@ Spark plan and the DuckDB oracle from single Python sources of truth.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.operators.aggregates import salted_top_k
@@ -22,20 +20,8 @@ from stream_reader_mzxml_spark.operators.nested import (
     with_precursors,
 )
 from stream_reader_mzxml_spark.pipeline import candidate
+from stream_reader_mzxml_spark.plans import register
 from stream_reader_mzxml_spark.sources.readers import read_table
-
-PROGRAM_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-PROGRAM_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        PROGRAM_QUERIES[name] = fn
-        if oracle is not None:
-            PROGRAM_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +36,7 @@ _Q34_PPM = 4000.0
 _Q34_MIN_INT = 500.0
 
 
-@_register(
+@register(
     "q34_nested_precursor_gate",
     f"""
     WITH p AS (
@@ -169,7 +155,7 @@ def _q35_sql() -> str:
 # per-row projection (higher-order functions only: zero shuffles, zero joins,
 # streaming-safe).
 # ---------------------------------------------------------------------------
-@_register("q39_candidate_ions_fused", _q35_sql())
+@register("q39_candidate_ions_fused", _q35_sql())
 def q39_candidate_ions_fused(spark, sf_dir):
     return candidate.candidate_ions(read_table(spark, sf_dir, "embeddings"))
 
@@ -181,7 +167,7 @@ def q39_candidate_ions_fused(spark, sf_dir):
 # table through 3 tasks; the salted form's phase-1 shuffle key has
 # 3 × n_salts values.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q36_salted_topk",
     """
     SELECT l_returnflag, l_orderkey, l_linenumber, price, rank FROM (
@@ -228,7 +214,7 @@ def q36_salted_topk(spark, sf_dir):
 # groupBy doc — all shuffle keys well-distributed (words are Zipf but the
 # count join is a lookup, not a pair-join).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q37_unigram_perplexity",
     """
     WITH w AS (
@@ -314,7 +300,7 @@ def q37_unigram_perplexity(spark, sf_dir):
 # (approx_percentile / t-digest) is the knob when groups no longer fit — not
 # oracle-comparable, so the exact one is the contract query.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q38_quantiles",
     """
     SELECT event_type,
@@ -340,7 +326,7 @@ def q38_quantiles(spark, sf_dir):
 # distinct/total 3-gram counts, repeated-gram count, repeated-occurrence
 # fraction per doc.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q40_repetition",
     """
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -370,7 +356,7 @@ def q40_repetition(spark, sf_dir):
 # q41 — PII-pattern surface counts (email-shaped tokens, long digit runs):
 # the cheap pre-NER scrub filter, pure scan-project exprs.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q41_pii_patterns",
     """
     SELECT doc_id,
@@ -481,7 +467,7 @@ def _q42_sql(src: str = "documents") -> str:
     """
 
 
-@_register("q42_corpus_curation", _q42_sql())
+@register("q42_corpus_curation", _q42_sql())
 def q42_corpus_curation(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.curation import curate
 
@@ -667,7 +653,7 @@ def precursor_match_scores(emb: DataFrame) -> DataFrame:
     )
 
 
-@_register("q44_precursor_match_scores", _q44_sql())
+@register("q44_precursor_match_scores", _q44_sql())
 def q44_precursor_match_scores(spark, sf_dir):
     return precursor_match_scores(read_table(spark, sf_dir, "embeddings"))
 
@@ -760,7 +746,7 @@ def _q62_sql() -> str:
     """
 
 
-@_register("q62_training_manifest", _q62_sql())
+@register("q62_training_manifest", _q62_sql())
 def q62_training_manifest(spark, sf_dir):
     from stream_reader_mzxml_spark.pipeline.curation import training_manifest
 

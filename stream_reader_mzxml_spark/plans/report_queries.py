@@ -18,27 +18,12 @@ explicit rounds, constants shared from single Python sources of truth.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.functions.chem import ABUNDANCE_ISOTOPE
 from stream_reader_mzxml_spark.pipeline import candidate
+from stream_reader_mzxml_spark.plans import register
 from stream_reader_mzxml_spark.sources.readers import read_table
-
-REPORT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-REPORT_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        REPORT_QUERIES[name] = fn
-        if oracle is not None:
-            REPORT_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +42,7 @@ _Q43B_HLL_TOL = 5 * _Q43B_RSD  # 5σ of the configured rsd
 _Q43B_RANK_SLOP = 0.005
 
 
-@_register(
+@register(
     "q43b_sketch_bounds",
     """
     SELECT event_type, count(*) AS n_rows,
@@ -197,7 +182,7 @@ def _q45_sql() -> str:
     """
 
 
-@_register("q45_glucosinolates", _q45_sql())
+@register("q45_glucosinolates", _q45_sql())
 def q45_glucosinolates(spark, sf_dir):
     c = candidate
     sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).filter(
@@ -206,26 +191,10 @@ def q45_glucosinolates(spark, sf_dir):
     # two-pass count (MainGlucosinolates.scala:105-113): 1-row agg broadcast
     tot = sp.agg(F.count(F.lit(1)).alias("n_spectra"))
 
-    peaks = F.col("peaks")
-    idx = F.sequence(F.lit(1), F.lit(c.PEAK_DIM))
-    cands = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.element_at(peaks, i.cast("int")).alias("peak"),
-        ),
-    )
-    kept = F.filter(cands, lambda x: x["peak"]["intensity"] > F.lit(_Q45_MIN_INT))
-    probed = F.transform(
-        kept,
-        lambda x: F.struct(
-            x["pos"].alias("pos"),
-            x["peak"].alias("peak"),
-            c.nearest_peak(peaks, x["peak"]["mz"] + F.lit(1.0)).alias("near1"),
-            c.nearest_peak(peaks, x["peak"]["mz"] + F.lit(_Q45_DELTA)).alias(
-                "near2"
-            ),
-        ),
+    probed = c.peak_candidates(
+        F.col("peaks"),
+        lambda x: x["peak"]["intensity"] > F.lit(_Q45_MIN_INT),
+        deltas=(1.0, _Q45_DELTA),
     )
 
     def passes(x):
@@ -238,18 +207,8 @@ def q45_glucosinolates(spark, sf_dir):
             & (x["near2"]["intensity"] < int0 * _Q45_AB_S2 * _Q45_S_MAX)
         )
 
-    rows = sp.select(
-        "vec_id", "rt", F.explode(F.filter(probed, passes)).alias("x")
-    ).select(
-        F.col("vec_id").alias("num"),
-        "rt",
-        F.col("x.pos").alias("pos"),
-        F.col("x.peak.mz").alias("mz0_raw"),
-        F.col("x.peak.intensity").alias("int0"),
-        F.col("x.near1.mz").alias("mz1_raw"),
-        F.col("x.near1.intensity").alias("int1"),
-        F.col("x.near2.mz").alias("mz2_raw"),
-        F.col("x.near2.intensity").alias("int2"),
+    rows = c.candidate_rows(
+        sp, F.col("vec_id"), F.col("rt"), F.filter(probed, passes)
     )
     # stable sortBy(-mz0) (:133): a GLOBAL rank, decomposed two-level
     # (operators/aggregates.py:distributed_rank) so no single task ever
@@ -259,12 +218,12 @@ def q45_glucosinolates(spark, sf_dir):
 
     ranked = distributed_rank(
         rows,
-        order=[F.desc("mz0_raw"), F.asc("num"), F.asc("pos")],
-        bucket=F.floor(-F.col("mz0_raw")),
+        order=[F.desc("mz0"), F.asc("num"), F.asc("pos")],
+        bucket=F.floor(-F.col("mz0")),
     )
-    mz0 = F.round("mz0_raw", 6)
-    mz1 = F.round("mz1_raw", 6)
-    mz2 = F.round("mz2_raw", 6)
+    mz0 = F.round("mz0", 6)
+    mz1 = F.round("mz1", 6)
+    mz2 = F.round("mz2", 6)
     return ranked.crossJoin(F.broadcast(tot)).select(
         "num",
         "pos",
@@ -342,7 +301,7 @@ def _q46_sql() -> str:
     """
 
 
-@_register("q46_database_ions", _q46_sql())
+@register("q46_database_ions", _q46_sql())
 def q46_database_ions(spark, sf_dir):
     c = candidate
     sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).withColumn(
@@ -354,15 +313,9 @@ def q46_database_ions(spark, sf_dir):
             for i, mz in _Q46_DB
         ]
     )
-    idx = F.sequence(F.lit(1), F.lit(c.PEAK_DIM))
-    cands = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.element_at(F.col("peaks"), i.cast("int")).alias("peak"),
-        ),
+    kept = c.peak_candidates(
+        F.col("peaks"), lambda x: x["peak"]["intensity"] > F.lit(_Q46_NOISE)
     )
-    kept = F.filter(cands, lambda x: x["peak"]["intensity"] > F.lit(_Q46_NOISE))
     matched = F.transform(
         kept,
         lambda x: F.struct(
@@ -509,7 +462,7 @@ def _q47_sql() -> str:
     """
 
 
-@_register("q47_gluco_delta_stats", _q47_sql())
+@register("q47_gluco_delta_stats", _q47_sql())
 def q47_gluco_delta_stats(spark, sf_dir):
     # precursor-list stats (:29-31) over the literal ion list
     ions = spark.createDataFrame(
@@ -703,29 +656,15 @@ def _q67_sql() -> str:
     """
 
 
-@_register("q67_isotope_envelope", _q67_sql())
+@register("q67_isotope_envelope", _q67_sql())
 def q67_isotope_envelope(spark, sf_dir):
     c = candidate
     sp = c.spectra_from_embeddings(read_table(spark, sf_dir, "embeddings")).filter(
         (F.col("rt") >= _Q67_RT_LO) & (F.col("rt") <= _Q67_RT_HI)
     )
 
-    peaks = F.col("peaks")
-    idx = F.sequence(F.lit(1), F.lit(c.PEAK_DIM))
     # every peak — Main.scala probes the full peak list (no noise floor)
-    probed = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.element_at(peaks, i.cast("int")).alias("peak"),
-            c.nearest_peak(
-                peaks, F.element_at(peaks, i.cast("int"))["mz"] + F.lit(1.0)
-            ).alias("near1"),
-            c.nearest_peak(
-                peaks, F.element_at(peaks, i.cast("int"))["mz"] + F.lit(_Q67_DELTA)
-            ).alias("near2"),
-        ),
-    )
+    probed = c.peak_candidates(F.col("peaks"), deltas=(1.0, _Q67_DELTA))
 
     def passes(x):
         int0 = x["peak"]["intensity"]
@@ -736,42 +675,26 @@ def q67_isotope_envelope(spark, sf_dir):
             & (x["near2"]["intensity"] < int0 * _Q67_M2_HI)
         )
 
-    mz0 = F.round("mz0_raw", 6)
-    mz1 = F.round("mz1_raw", 6)
-    mz2 = F.round("mz2_raw", 6)
-    return (
-        sp.select(
-            "vec_id",
-            F.col("rt").cast("long").alias("rt"),
-            F.explode(F.filter(probed, passes)).alias("x"),
-        )
-        .select(
-            F.col("vec_id").alias("num"),
-            "rt",
-            F.col("x.pos").alias("pos"),
-            F.col("x.peak.mz").alias("mz0_raw"),
-            F.col("x.peak.intensity").alias("int0"),
-            F.col("x.near1.mz").alias("mz1_raw"),
-            F.col("x.near1.intensity").alias("int1"),
-            F.col("x.near2.mz").alias("mz2_raw"),
-            F.col("x.near2.intensity").alias("int2"),
-        )
-        .select(
-            "num",
-            "pos",
-            "rt",
-            mz0.alias("mz0"),
-            "int0",
-            mz1.alias("mz1"),
-            "int1",
-            mz2.alias("mz2"),
-            "int2",
-            F.format_string(
-                "(%d,((%.6f,%.1f),(%.6f,%.1f),(%.6f,%.1f)))",
-                F.col("rt"), mz0, F.col("int0"), mz1, F.col("int1"), mz2,
-                F.col("int2"),
-            ).alias("line"),
-        )
+    mz0 = F.round("mz0", 6)
+    mz1 = F.round("mz1", 6)
+    mz2 = F.round("mz2", 6)
+    return c.candidate_rows(
+        sp, F.col("vec_id"), F.col("rt").cast("long"), F.filter(probed, passes)
+    ).select(
+        "num",
+        "pos",
+        "rt",
+        mz0.alias("mz0"),
+        "int0",
+        mz1.alias("mz1"),
+        "int1",
+        mz2.alias("mz2"),
+        "int2",
+        F.format_string(
+            "(%d,((%.6f,%.1f),(%.6f,%.1f),(%.6f,%.1f)))",
+            F.col("rt"), mz0, F.col("int0"), mz1, F.col("int1"), mz2,
+            F.col("int2"),
+        ).alias("line"),
     )
 
 
@@ -857,7 +780,7 @@ def _q68_sql() -> str:
     """
 
 
-@_register("q68_diagnostic_report", _q68_sql())
+@register("q68_diagnostic_report", _q68_sql())
 def q68_diagnostic_report(spark, sf_dir):
     from stream_reader_mzxml_spark.operators.nested import precursors_expr
 

@@ -5,8 +5,8 @@ Spark result and ``oracle_sql()`` result must agree on column names, row
 count and order-insensitive normalized values. Covers the queries whose
 operator has a single form kept in sync with a hand-written oracle: q27
 (SimHash), q30 (LSH ±2-bit multi-probe), q49 (IVF Arrow assignment), and
-the four programs built on ``candidate.nearest_peak`` (q39 and q47 through
-``candidate.candidate_ions``, q45, q67).
+the programs built on ``candidate.peak_candidates`` (q39 and q47 through
+``candidate.candidate_ions``, q45, q46, q67).
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ def duck(sf_dir):
         "q49_ivf_ann_topk",
         "q39_candidate_ions_fused",
         "q45_glucosinolates",
+        "q46_database_ions",
         "q47_gluco_delta_stats",
         "q67_isotope_envelope",
     ],

@@ -188,6 +188,8 @@ class TestGlucosinolateCandidates:
             (2, None, peaks(350.0)),  # no retention time → no rows
             (4, 30.0, peaks(400.0)),
             (1, 10.0, peaks(300.0)),
+            (5, 40.0, []),  # no peaks → no rows, no error
+            (6, 50.0, None),  # NULL peak array → no rows, no error
         ]
         spectra = spark.createDataFrame(
             rows,

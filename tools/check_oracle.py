@@ -2,7 +2,8 @@
 
 Runs every ``queries()`` entry on Spark at sf0.01 and its ``oracle_sql()`` in
 DuckDB over the same parquet tables, comparing row count, column names, and
-order-insensitive values (sorted rows, floats rounded). Usage:
+order-insensitive values (sorted rows, floats rounded). Spark runs on
+``$SPARK_GRAFT_CPUS`` cores, else all of them (``session.get_spark``). Usage:
 
     python tools/check_oracle.py [query_name ...]
 """
@@ -45,7 +46,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", names: list[str] | None = None):
     import __spark_entry__ as e
     from stream_reader_mzxml_spark.session import get_spark
 
-    spark = get_spark(app_name="check_oracle", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="check_oracle")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
