@@ -15,6 +15,18 @@ This is the reference's "collect MS2 side then probe"
 (glucosinolateIons.sc:28-29) re-expressed with bounded per-group state
 instead of a full materialization.
 
+The state row is two ``BinaryType`` fields, ``ms1`` and ``ms2``, each one
+Arrow IPC stream of that side's buffered columns (``MS1_STATE``,
+``MS2_STATE``). Binary, not nested arrays: Spark builds a nested
+``ArrayType`` state's encoder from ``MapObjects``, which the analyzer
+resolves again for every copy of the operator made while planning and whose
+projections miss the codegen cache, so Janino recompiled them every trigger.
+The blobs stay data (no pickle in the checkpoint), and a blob with another
+Arrow layout raises on read instead of decoding wrongly. A checkpoint written
+under the earlier 7-array state schema stops on resume with
+``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; restart it from a fresh
+checkpoint.
+
 ``shard_join_batch_oracle`` re-states the same semantics as Spark's native
 batch interval join; for in-watermark data both emit the same rows. The
 per-row token-array invariant is carried by ``clean_tokens`` (pad-dropped ms2
@@ -27,11 +39,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -52,17 +66,20 @@ JOIN_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# state: the group's buffered ms1 rows + early ms2 arrivals, per salt
-STATE_SCHEMA = StructType(
+# state: the group's buffered ms1 rows + early ms2 arrivals, per salt, as one
+# Arrow IPC stream per side; binary fields keep Spark's state encoder flat
+MS1_STATE = pa.schema([("doc", pa.string()), ("t_us", pa.int64())])
+MS2_STATE = pa.schema(
     [
-        StructField("ms1_docs", ArrayType(StringType())),
-        StructField("ms1_times_us", ArrayType(LongType())),
-        StructField("ms2_docs", ArrayType(StringType())),
-        StructField("ms2_times_us", ArrayType(LongType())),
-        StructField("ms2_sources", ArrayType(StringType())),
-        StructField("ms2_refs", ArrayType(StringType())),
-        StructField("ms2_tokens", ArrayType(ArrayType(IntegerType()))),
+        ("doc", pa.string()),
+        ("t_us", pa.int64()),
+        ("source", pa.string()),
+        ("ref", pa.string()),
+        ("tokens", pa.list_(pa.int32())),
     ]
+)
+STATE_SCHEMA = StructType(
+    [StructField("ms1", BinaryType()), StructField("ms2", BinaryType())]
 )
 
 
@@ -73,7 +90,34 @@ def split_shards(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
     return shard_filter(stream, 1), shard_filter(stream, 2)
 
 
-_EMPTY_STATE = ([], [], [], [], [], [], [])
+def _write_side(cols: list[np.ndarray], schema: pa.Schema) -> bytes:
+    """One side's buffered columns as an Arrow IPC stream: the schema, then
+    one batch unless the side holds no rows (most groups buffer no ms2)."""
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, schema) as writer:
+        if len(cols[0]):
+            arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+            writer.write_batch(pa.RecordBatch.from_arrays(arrays, schema=schema))
+    return sink.getvalue().to_pybytes()
+
+
+def _read_side(blob: bytes, schema: pa.Schema) -> list[np.ndarray]:
+    """Numpy columns of a ``_write_side`` blob; raises on another layout."""
+    with pa.ipc.open_stream(blob) as reader:
+        if not reader.schema.equals(schema):
+            raise ValueError(
+                f"shard-join state holds Arrow schema {reader.schema}, "
+                f"expected {schema}"
+            )
+        table = reader.read_all()
+    # strings read as object arrays of str, tokens as one int32 array per row
+    return [c.to_numpy(zero_copy_only=False) for c in table.columns]
+
+
+_EMPTY_STATE = (
+    _write_side([[] for _ in MS1_STATE], MS1_STATE),
+    _write_side([[] for _ in MS2_STATE], MS2_STATE),
+)
 
 
 def _shard_join_fn(
@@ -82,11 +126,12 @@ def _shard_join_fn(
     """Per-salt stateful join — numpy arrays over all docs of the group.
 
     State holds the group's live ms1 rows (probe side) and parent-absent ms2
-    rows (early arrivals) as parallel columns, read straight into numpy
-    arrays. Each ms2 row (buffered + new) looks up its named parent in one
-    ``pd.Index.get_indexer`` over the ms1 doc ids: a found parent either emits
-    (interval holds) or kills the row (the parent's event time is fixed, so
-    the interval can never hold later); only parent-absent rows stay buffered.
+    rows (early arrivals) as parallel columns, one Arrow stream per side,
+    read straight into numpy arrays. Each ms2 row (buffered + new) looks up
+    its named parent in one ``pd.Index.get_indexer`` over the ms1 doc ids: a
+    found parent either emits (interval holds) or kills the row (the parent's
+    event time is fixed, so the interval can never hold later); only
+    parent-absent rows stay buffered.
     Duplicate ms1 delivery keeps the last copy of a doc id.
 
     Both buffers are purged by the watermark: an ms1 row older than
@@ -103,11 +148,7 @@ def _shard_join_fn(
 
     # state columns: ms1 (doc, t_us); ms2 (doc, t_us, source, ref, tokens)
     s = state.get if state.exists else _EMPTY_STATE
-    ms1 = [np.array(s[0], dtype=object), np.array(s[1], dtype=np.int64)]
-    ms2 = [np.array(s[2], dtype=object), np.array(s[3], dtype=np.int64)]
-    ms2 += [np.array(s[4], dtype=object), np.array(s[5], dtype=object)]
-    # fromiter, not array: equal-length token lists must stay one object each
-    ms2.append(np.fromiter(s[6], dtype=object, count=len(s[6])))
+    ms1, ms2 = _read_side(s[0], MS1_STATE), _read_side(s[1], MS2_STATE)
 
     if state.hasTimedOut:
         # purge-only invocation: no new data; drop everything the watermark
@@ -171,13 +212,7 @@ def _shard_join_fn(
 
 
 def _save(state: GroupState, ms1: list[np.ndarray], ms2: list[np.ndarray]) -> None:
-    # plain-python values: numpy scalars don't survive the state round-trip;
-    # only tokens of ms2 rows that arrived this batch are still ndarrays
-    *cols, toks = ms1 + ms2
-    state.update(
-        tuple(c.tolist() for c in cols)
-        + ([t.tolist() if isinstance(t, np.ndarray) else t for t in toks],)
-    )
+    state.update((_write_side(ms1, MS1_STATE), _write_side(ms2, MS2_STATE)))
 
 
 def stateful_shard_join(

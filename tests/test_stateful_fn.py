@@ -4,8 +4,9 @@ The function is driven directly with ``GroupState`` objects over simulated
 triggers and timeout passes of one salt group. Every
 saved state takes the serializer's round trip
 (``CPickleSerializer().dumps(STATE_SCHEMA.toInternal(...))``) and is read back
-by an unpickler that, like the JVM's, knows no Python classes: a numpy
-scalar or array leaking into state fails here, not in the state store.
+by an unpickler that, like the JVM's, knows no Python classes: anything but
+the two Arrow IPC blobs leaking into state fails here, not in the state
+store. The blobs are decoded by the module's own reader.
 """
 
 from __future__ import annotations
@@ -24,8 +25,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stream_reader_mzxml_spark.streaming.stateful import (
     JOIN_OUTPUT_SCHEMA,
+    MS1_STATE,
+    MS2_STATE,
     STATE_SCHEMA,
+    _read_side,
     _shard_join_fn,
+    _write_side,
 )
 
 KEY = (3,)
@@ -120,12 +125,20 @@ def _call(value: Row | None, wm_ms: int, rows: list[dict] | None):
     return sorted(out), state, saved
 
 
+def _ms1_cols(saved: Row) -> list[np.ndarray]:
+    return _read_side(saved[0], MS1_STATE)
+
+
+def _ms2_cols(saved: Row) -> list[np.ndarray]:
+    return _read_side(saved[1], MS2_STATE)
+
+
 def _ms1_docs(saved: Row) -> set[str]:
-    return set(saved[0])
+    return set(_ms1_cols(saved)[0])
 
 
 def _ms2_docs(saved: Row) -> list[str]:
-    return list(saved[2])
+    return list(_ms2_cols(saved)[0])
 
 
 class TestShardJoinFn:
@@ -180,8 +193,8 @@ class TestShardJoinFn:
 
     def test_early_ms2_is_buffered_then_emitted(self, run):
         assert _ms2_docs(run[1][2]) == ["ms2-01-y"]
-        buffered = dict(zip(run[1][2][2], run[1][2][6]))
-        assert buffered["ms2-01-y"] == [7]
+        doc, *_, toks = _ms2_cols(run[1][2])
+        assert dict(zip(doc, map(list, toks))) == {"ms2-01-y": [7]}
         out, _, saved = run[2]
         assert ("ms1-00-C", "ms2-01-y", "ms2-01", -1, (7,), 1) in out
         assert _ms2_docs(saved) == []
@@ -205,7 +218,7 @@ class TestShardJoinFn:
         assert out == []
         assert _ms1_docs(saved) == {"ms1-00-D", "ms1-00-F"}
         assert _ms2_docs(saved) == ["ms2-01-v"]
-        assert list(saved[3]) == [_ms(41) * 1000]
+        assert list(_ms2_cols(saved)[1]) == [_ms(41) * 1000]
         # re-armed past the newest event time: max(41 s, wm) + 3 s
         assert state._timeout_timestamp == _ms(44)
 
@@ -226,10 +239,25 @@ class TestShardJoinFn:
     def test_state_holds_plain_python_values(self, run):
         for k in (1, 2, 3, "t_live"):
             saved = run[k][2]
-            assert [type(c) for c in saved] == [list] * 7
-            assert all(type(d) is str for c in (0, 2, 4, 5) for d in saved[c])
-            assert all(type(t) is int for c in (1, 3) for t in saved[c])
-            assert all(type(v) is int for toks in saved[6] for v in toks)
+            assert [type(c) for c in saved] == [bytes, bytes]
+            for blob, schema in zip(saved, (MS1_STATE, MS2_STATE)):
+                with pa.ipc.open_stream(blob) as reader:
+                    assert reader.schema.equals(schema)
+
+    def test_blob_of_another_layout_raises(self, run):
+        saved = run[1][2]
+        with pytest.raises(ValueError, match="shard-join state holds Arrow schema"):
+            _read_side(saved[1], MS1_STATE)  # the ms2 blob read as ms1
+        # same field names, tokens widened to int64
+        wide = pa.schema(
+            [f.with_type(pa.list_(pa.int64())) if f.name == "tokens" else f for f in MS2_STATE]
+        )
+        blob = _write_side(_ms2_cols(saved), wide)
+        with pytest.raises(ValueError, match="shard-join state holds Arrow schema"):
+            _read_side(blob, MS2_STATE)
+        # the group function refuses the state rather than misreading it
+        with pytest.raises(ValueError, match="shard-join state holds Arrow schema"):
+            _call(Row(saved[0], blob), _ms(5), [_ms1("C", 13)])
 
 
 class TestMixedShardGroup:

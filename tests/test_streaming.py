@@ -296,6 +296,33 @@ class TestStatefulJoin:
         assert state_rows and max(state_rows) <= 4
         assert max(state_rows) > 0  # the groups really held state
 
+    def test_steady_triggers_compile_at_most_one_class(self, spark, small_seq_path):
+        """The operator's state encoder is built once per plan, not compiled
+        again every trigger: after two warm-up triggers each data trigger
+        compiles at most one class (a nested ``ArrayType`` state made Spark
+        recompile its ``MapObjects`` projections, three classes a trigger)."""
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiled = {}
+
+        def drain(df, batch_id):
+            df.collect()
+            compiled[batch_id] = codegen.METRIC_COMPILATION_TIME().getCount()
+
+        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=1)
+        q = (
+            stateful.stateful_shard_join(stream, watermark="30 seconds")
+            .writeStream.foreachBatch(drain)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        # data triggers only: the closing no-data trigger runs the timeouts
+        data = sorted(p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0)
+        assert data == list(range(5))
+        per_trigger = {b: compiled[b] - compiled[b - 1] for b in data[2:]}
+        assert max(per_trigger.values()) <= 1, per_trigger
+
 
 @pytest.mark.spark
 class TestStreamingDedup:
@@ -549,6 +576,67 @@ class TestStatefulKillResume:
         )
         assert len(exp) > 100
         assert got == exp
+
+    def test_checkpoint_of_another_state_layout_fails_loudly(
+        self, spark, small_seq_path, tmp_path, monkeypatch
+    ):
+        """A checkpoint whose shard-join state was written under another
+        (array-typed) state schema is refused on resume with Spark's
+        state-schema error, not read as the current two-blob layout."""
+        import shutil
+
+        from pyspark.errors import StreamingQueryException
+        from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+        src_dir = str(tmp_path / "seq")
+        os.makedirs(src_dir)
+        files = sorted(f for f in os.listdir(small_seq_path) if f.endswith(".parquet"))
+        ckpt = str(tmp_path / "ckpt")
+
+        def start():
+            stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+            return (
+                stateful.stateful_shard_join(stream, watermark="30 seconds")
+                .writeStream.format("noop")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        def docs_only(key, pdfs, state):
+            docs = list(state.get[0]) if state.exists else []
+            for pdf in pdfs:
+                docs += pdf["doc_id"].tolist()
+            state.update((docs,))
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 60_000)
+            return iter(())
+
+        # the tests' session turns the schema check off; this test needs it
+        prev = spark.conf.get("spark.sql.streaming.stateStore.stateSchemaCheck")
+        spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
+        try:
+            for f in files[:2]:
+                shutil.copy(os.path.join(small_seq_path, f), src_dir)
+            monkeypatch.setattr(stateful, "_shard_join_fn", docs_only)
+            monkeypatch.setattr(
+                stateful,
+                "STATE_SCHEMA",
+                StructType([StructField("docs", ArrayType(StringType()))]),
+            )
+            q = start()
+            q.awaitTermination(300)
+            assert q.exception() is None
+            monkeypatch.undo()
+
+            for f in files[2:]:
+                shutil.copy(os.path.join(small_seq_path, f), src_dir)
+            q = start()
+            with pytest.raises(
+                StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
+            ):
+                q.awaitTermination(300)
+        finally:
+            spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", prev)
 
     def test_replayed_committed_batch_commits_state(
         self, spark, small_seq_path, tmp_path
