@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stream_reader_mzxml_spark.pipeline.similarity import _cosine, _with_norm
 from stream_reader_mzxml_spark.pipeline.text import h32, h60, words
 from stream_reader_mzxml_spark.sources.readers import spread_scan
 
@@ -332,24 +333,9 @@ def embedding_cosine_pairs(
     float result is bit-identical to the oracle's ordered list_sum. The
     O(n²) join is the baseline; the bucketed scale path is
     ``similarity.lsh_ann_topk``."""
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = emb.select(
-        F.col(id_col),
-        v.alias("v"),
-        F.sqrt(
-            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-        ).alias("norm"),
-    )
-    a = base.select(
-        F.col(id_col).alias("a_id"), F.col("v").alias("va"), F.col("norm").alias("na")
-    )
-    b = base.select(
-        F.col(id_col).alias("b_id"), F.col("v").alias("vb"), F.col("norm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
+    a = _with_norm(emb, id_col, "a_id", "va", "na")
+    b = _with_norm(emb, id_col, "b_id", "vb", "nb")
+    cos = _cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
     return (
         a.crossJoin(b)
         .filter(F.col("a_id") < F.col("b_id"))

@@ -5,14 +5,17 @@ exactly how the reference treats its packed peak blobs (base64 →
 ``MzXMLTags.scala:297-327``): payload stays opaque until a vectorized kernel
 decodes it. The Spark-side plumbing is real and tested — schema, Arrow batch
 shape over ``mapInPandas``, partition-preserving projection — and so are
-THREE codecs: binary PNM images (PGM/PPM, ``decode_pnm``), PNG
+FOUR codecs: binary PNM images (PGM/PPM, ``decode_pnm``), PNG
 (``decode_png``: zlib inflate + all five scanline unfilters, CRC-checked),
-and RIFF/WAVE PCM audio (``decode_wav``) decode in pure numpy, no
-imaging/audio library required. ``decode_stub=True`` computes a
-deterministic fake feature from the raw bytes (any media type);
-``decode_stub=False`` really decodes PNM/PNG/WAV payloads and raises
-``NotImplementedError`` for media types whose codecs (ffmpeg-class) this
-container lacks.
+RIFF/WAVE PCM audio (``decode_wav``) and raw-DIB RIFF/AVI video
+(``decode_avi``) decode in pure numpy, no imaging/audio/video library
+required. One table, ``DECODERS``, maps each media type to its codec for
+``featurize``, ``frame_sample`` and ``resize_images``; ``channel_means``
+is their one feature and ``_fixture_media`` the one fixture builder.
+``decode_stub=True`` computes a deterministic fake feature from the raw
+bytes (any media type); ``decode_stub=False`` really decodes the four and
+raises ``NotImplementedError`` for media types whose codecs (ffmpeg-class)
+this container lacks.
 
 At 100 TB: payload columns dominate scan bytes, so every query that does not
 need them must project them out *before* any shuffle (column pruning does
@@ -23,7 +26,7 @@ each Arrow batch bounds executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -87,6 +90,39 @@ def _fake_feature(buf: bytes, dim: int = 4) -> list[float]:
     return [round(float(c.mean()) if len(c) else 0.0, 6) for c in chunks]
 
 
+def channel_means(samples: np.ndarray, dim: int | None = None) -> list[float]:
+    """Mean over every axis but the last (the channel), rounded to 6 places;
+    zero-padded (or cut) to ``dim`` values when ``dim`` is given."""
+    means = [
+        round(float(samples[..., c].mean()), 6) for c in range(samples.shape[-1])
+    ]
+    return means if dim is None else (means + [0.0] * dim)[:dim]
+
+
+def _fixture_media(
+    df: DataFrame, n: int, media_type: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """``(doc_id, media_type, payload = encode(doc_id))`` for ``doc_id < n``,
+    built executor-side in ``mapInPandas``."""
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "media_type": [media_type] * len(payloads),
+                    "payload": payloads,
+                }
+            )
+
+    return (
+        df.select("doc_id")
+        .filter(F.col("doc_id") < n)
+        .mapInPandas(build, "doc_id long, media_type string, payload binary")
+    )
+
+
 def decode_pnm(buf: bytes) -> tuple[np.ndarray, int, int]:
     """REAL image decode for the binary PNM family — no imaging library
     needed: P5 (PGM, 1 channel) and P6 (PPM, 3 channels) are a plain-text
@@ -125,13 +161,6 @@ def decode_pnm(buf: bytes) -> tuple[np.ndarray, int, int]:
         raise ValueError("truncated PNM raster")
     px = np.frombuffer(raster, dtype=dt).astype(np.float64)
     return px.reshape(height, width, channels), width, height
-
-
-def _pnm_feature(buf: bytes, dim: int = 4) -> list[float]:
-    """Per-channel pixel means (zero-padded to ``dim``) from a real decode."""
-    px, _w, _h = decode_pnm(buf)
-    means = [round(float(px[:, :, c].mean()), 6) for c in range(px.shape[2])]
-    return (means + [0.0] * dim)[:dim]
 
 
 def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
@@ -179,69 +208,6 @@ def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
     return samples.reshape(-1, n_channels), sample_rate
 
 
-def _wav_feature(buf: bytes, dim: int = 4) -> list[float]:
-    """Per-channel sample means (zero-padded to ``dim``) from a real decode."""
-    samples, _rate = decode_wav(buf)
-    means = [
-        round(float(samples[:, c].mean()), 6) for c in range(samples.shape[1])
-    ]
-    return (means + [0.0] * dim)[:dim]
-
-
-def featurize(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Decode / feature-extract payloads via ``mapInPandas``.
-
-    Arrow-batched: each partition streams through pandas in bounded batches;
-    payload bytes stay executor-side. The stub path is deterministic so tests
-    and oracles can assert on it."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_stub:
-                feats = [
-                    _fake_feature(b) if b is not None else None
-                    for b in pdf["payload"]
-                ]
-            else:
-                # real-decode path: PNM/PNG images, RIFF/WAVE PCM audio and
-                # raw-DIB RIFF/AVI video all decode in pure numpy; only
-                # compressed (ffmpeg-class) codecs remain out of reach in
-                # this container
-                feats = []
-                for mt, b in zip(pdf["media_type"], pdf["payload"]):
-                    if b is None:
-                        feats.append(None)
-                    elif mt in ("image/ppm", "image/pgm", "image/x-portable-pixmap",
-                                "image/x-portable-graymap"):
-                        feats.append(_pnm_feature(b))
-                    elif mt == "image/png":
-                        feats.append(_png_feature(b))
-                    elif mt in ("audio/wav", "audio/x-wav", "audio/wave"):
-                        feats.append(_wav_feature(b))
-                    elif mt in ("video/x-msvideo", "video/avi"):
-                        # raw-DIB AVI decodes here; compressed streams raise
-                        # NotImplementedError inside decode_avi
-                        feats.append(_avi_feature(b))
-                    else:
-                        raise NotImplementedError(
-                            f"real decode for {mt} needs a codec library "
-                            "(e.g. ffmpeg for compressed video/containerized "
-                            "audio) — not in this container"
-                        )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [
-                        len(b) if b is not None else 0 for b in pdf["payload"]
-                    ],
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
 # --- PNM fixture generator (q31b): real-codec output, SQL-predictable -----
 PNM_FIX_W, PNM_FIX_H = 16, 8  # 3-channel P6 → 384 samples/payload
 PNM_FIX_N = 64                # fixture rows (doc_id < N)
@@ -256,28 +222,12 @@ def pnm_fixture_media(df: DataFrame, n: int = PNM_FIX_N) -> DataFrame:
     Construction runs in ``mapInPandas`` (payload bytes never touch the
     driver), the same Arrow-batched plumbing the real ingest would use; only
     ``doc_id`` rides in from the scan."""
-    ids = df.select("doc_id").filter(F.col("doc_id") < n)
     w, h = PNM_FIX_W, PNM_FIX_H
     header = f"P6\n{w} {h}\n255\n".encode()
     s = np.arange(w * h * 3, dtype=np.int64)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                header
-                + ((int(d) * 31 + s * 7) % 256).astype(np.uint8).tobytes()
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["image/ppm"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    return ids.mapInPandas(
-        build, "doc_id long, media_type string, payload binary"
+    return _fixture_media(
+        df, n, "image/ppm",
+        lambda d: header + ((d * 31 + s * 7) % 256).astype(np.uint8).tobytes(),
     )
 
 
@@ -314,31 +264,11 @@ def wav_fixture_media(df: DataFrame, n: int = WAV_FIX_N) -> DataFrame:
     path's per-channel means (channel = s % 2) are exactly predictable by
     a SQL oracle (q70) with no audio library on either side. Same
     executor-side ``mapInPandas`` construction as ``pnm_fixture_media``."""
-    ids = df.select("doc_id").filter(F.col("doc_id") < n)
     n_samples = WAV_FIX_FRAMES * WAV_FIX_CH
     header = _wav_header(n_samples, WAV_FIX_CH, WAV_FIX_RATE)
     s = np.arange(n_samples, dtype=np.int64)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                header
-                + (((int(d) * 131 + s * 17) % 65536) - 32768)
-                .astype("<i2")
-                .tobytes()
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["audio/wav"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    return ids.mapInPandas(
-        build, "doc_id long, media_type string, payload binary"
-    )
+    return _fixture_media(df, n, "audio/wav", lambda d: header + (
+        ((d * 131 + s * 17) % 65536) - 32768).astype("<i2").tobytes())
 
 
 # --- PNG codec (round 5): zlib inflate + scanline unfilter, pure numpy ----
@@ -462,13 +392,6 @@ def decode_png(buf: bytes) -> tuple[np.ndarray, int, int]:
     return px, width, height
 
 
-def _png_feature(buf: bytes, dim: int = 4) -> list[float]:
-    """Per-channel pixel means (zero-padded to ``dim``) from a real decode."""
-    px, _w, _h = decode_png(buf)
-    means = [round(float(px[:, :, c].mean()), 6) for c in range(px.shape[2])]
-    return (means + [0.0] * dim)[:dim]
-
-
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     import zlib as _zlib
 
@@ -542,26 +465,11 @@ def png_fixture_media(df: DataFrame, n: int = PNG_FIX_N) -> DataFrame:
     Rows cycle through all five PNG filter types (``png_encode``), making
     the oracle match contingent on every unfilter path being correct.
     Payload bytes are built executor-side in ``mapInPandas``."""
-    ids = df.select("doc_id").filter(F.col("doc_id") < n)
     w, h = PNG_FIX_W, PNG_FIX_H
     s = np.arange(w * h * 3, dtype=np.int64)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                png_encode(((int(d) * 31 + s * 7) % 256).astype(np.uint8), w, h, 3)
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["image/png"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    return ids.mapInPandas(
-        build, "doc_id long, media_type string, payload binary"
+    return _fixture_media(
+        df, n, "image/png",
+        lambda d: png_encode(((d * 31 + s * 7) % 256).astype(np.uint8), w, h, 3),
     )
 
 
@@ -728,13 +636,6 @@ def decode_avi(buf: bytes) -> tuple[np.ndarray, int]:
     return frames, fps
 
 
-def _avi_feature(buf: bytes, dim: int = 4) -> list[float]:
-    """Per-channel means over ALL frames (zero-padded to ``dim``)."""
-    frames, _fps = decode_avi(buf)
-    means = [round(float(frames[..., c].mean()), 6) for c in range(3)]
-    return (means + [0.0] * dim)[:dim]
-
-
 def avi_fixture_media(df: DataFrame, n: int = VID_FIX_N) -> DataFrame:
     """Deterministic raw-DIB AVI payloads whose RGB sample ``s`` of frame
     ``f`` of doc ``d`` is the pure arithmetic function
@@ -742,29 +643,72 @@ def avi_fixture_media(df: DataFrame, n: int = VID_FIX_N) -> DataFrame:
     ``frame_sample`` path's per-frame per-channel means are exactly
     predictable by a SQL oracle (q75) with no video library on either
     side. Payload bytes are built executor-side in ``mapInPandas``."""
-    ids = df.select("doc_id").filter(F.col("doc_id") < n)
-    w, h, nf = VID_FIX_W, VID_FIX_H, VID_FIX_FRAMES
+    w, h = VID_FIX_W, VID_FIX_H
     s = np.arange(w * h * 3, dtype=np.int64).reshape(h, w, 3)
+    f = np.arange(VID_FIX_FRAMES, dtype=np.int64).reshape(-1, 1, 1, 1)
+    return _fixture_media(
+        df, n, "video/x-msvideo", lambda d: avi_encode((d * 31 + f * 13 + s * 7) % 256)
+    )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+# --- the one media-type → codec table ---------------------------------------
+# Each decoder returns its samples with the channel on the last axis: images
+# (h, w, c), audio (frames, c), video (n, h, w, c).
+DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {
+    **dict.fromkeys(
+        ("image/ppm", "image/pgm", "image/x-portable-pixmap", "image/x-portable-graymap"),
+        lambda b: decode_pnm(b)[0],
+    ),
+    "image/png": lambda b: decode_png(b)[0],
+    **dict.fromkeys(("audio/wav", "audio/x-wav", "audio/wave"), lambda b: decode_wav(b)[0]),
+    # raw-DIB AVI decodes here; compressed streams raise NotImplementedError
+    # inside decode_avi
+    **dict.fromkeys(("video/x-msvideo", "video/avi"), lambda b: decode_avi(b)[0]),
+}
+
+
+def decode(media_type: str, buf: bytes, kind: str | None = None) -> np.ndarray:
+    """Decode ``buf`` with the ``DECODERS`` codec of ``media_type``. With a
+    ``kind`` (``"image"``, ``"video"``), a payload of another top-level type
+    raises ``ValueError`` naming its media type."""
+    if kind is not None and media_type.split("/")[0] != kind:
+        raise ValueError(f"media type {media_type!r} is not {kind}/*")
+    if media_type not in DECODERS:
+        raise NotImplementedError(
+            f"real decode for {media_type} needs a codec library "
+            "(e.g. ffmpeg for compressed video/containerized "
+            "audio) — not in this container"
+        )
+    return DECODERS[media_type](buf)
+
+
+def featurize(media: DataFrame, decode_stub: bool = True) -> DataFrame:
+    """Decode / feature-extract payloads via ``mapInPandas``.
+
+    Arrow-batched: each partition streams through pandas in bounded batches;
+    payload bytes stay executor-side. The stub path is deterministic so tests
+    and oracles can assert on it."""
+
+    def feature(mt: str, b: bytes) -> list[float]:
+        return _fake_feature(b) if decode_stub else channel_means(decode(mt, b), 4)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                frames = np.stack(
-                    [(int(d) * 31 + f * 13 + s * 7) % 256 for f in range(nf)]
-                )
-                payloads.append(avi_encode(frames))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "media_type": ["video/x-msvideo"] * len(payloads),
-                    "payload": payloads,
+                    "media_type": pdf["media_type"],
+                    "n_bytes": [
+                        len(b) if b is not None else 0 for b in pdf["payload"]
+                    ],
+                    "feature": [
+                        None if b is None else feature(mt, b)
+                        for mt, b in zip(pdf["media_type"], pdf["payload"])
+                    ],
                 }
             )
 
-    return ids.mapInPandas(
-        build, "doc_id long, media_type string, payload binary"
-    )
+    return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = (
@@ -786,10 +730,10 @@ def frame_sample(media: DataFrame, every_k: int = 3) -> DataFrame:
             rows = {k: [] for k in (
                 "doc_id", "frame_idx", "n_frames", "width", "height", "feature"
             )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
+            for d, mt, b in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"]):
                 if b is None:
                     continue
-                frames, _fps = decode_avi(b)
+                frames = decode(mt, b, kind="video")
                 n, h, w, _ = frames.shape
                 for f in range(0, n, every_k):
                     rows["doc_id"].append(d)
@@ -797,10 +741,7 @@ def frame_sample(media: DataFrame, every_k: int = 3) -> DataFrame:
                     rows["n_frames"].append(n)
                     rows["width"].append(w)
                     rows["height"].append(h)
-                    rows["feature"].append(
-                        [round(float(frames[f, :, :, c].mean()), 6)
-                         for c in range(3)]
-                    )
+                    rows["feature"].append(channel_means(frames[f]))
             yield pd.DataFrame(rows)
 
     return media.mapInPandas(run, FRAME_SAMPLE_SCHEMA)
@@ -838,12 +779,13 @@ RESIZE_SCHEMA = (
 def resize_images(
     media: DataFrame, out_w: int, out_h: int, method: str = "box"
 ) -> DataFrame:
-    """Decode image payloads (PNM/PNG — the real codecs), resize to
-    (out_w, out_h), and emit per-channel stats of the RESIZED raster:
-    plain means plus position-weighted sums (weight = flat output index
-    + 1), which pin the output geometry — a transposed, flipped, or
-    mis-strided resize changes ``ch_wsum`` even when ``ch_mean`` is
-    invariant. Same executor-side ``mapInPandas`` shape as ``featurize``."""
+    """Decode image payloads (the ``image/*`` codecs of ``DECODERS``; any
+    other media type raises ``ValueError``), resize to (out_w, out_h), and
+    emit per-channel stats of the RESIZED raster: plain means plus
+    position-weighted sums (weight = flat output index + 1), which pin the
+    output geometry — a transposed, flipped, or mis-strided resize changes
+    ``ch_wsum`` even when ``ch_mean`` is invariant. Same executor-side
+    ``mapInPandas`` shape as ``featurize``."""
     weights = np.arange(1, out_h * out_w + 1, dtype=np.float64).reshape(
         out_h, out_w
     )
@@ -858,19 +800,12 @@ def resize_images(
             ):
                 if b is None:
                     continue
-                if mt == "image/png":
-                    px, _w, _h = decode_png(b)
-                else:
-                    px, _w, _h = decode_pnm(b)
-                rz = resize_raster(px, out_w, out_h, method)
+                rz = resize_raster(decode(mt, b, kind="image"), out_w, out_h, method)
                 rows["doc_id"].append(d)
                 rows["media_type"].append(mt)
                 rows["width"].append(out_w)
                 rows["height"].append(out_h)
-                rows["ch_mean"].append(
-                    [round(float(rz[:, :, c].mean()), 6)
-                     for c in range(rz.shape[2])]
-                )
+                rows["ch_mean"].append(channel_means(rz))
                 rows["ch_wsum"].append(
                     [round(float((rz[:, :, c] * weights).sum()), 6)
                      for c in range(rz.shape[2])]

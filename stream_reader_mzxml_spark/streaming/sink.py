@@ -56,12 +56,7 @@ def _hadoop_path(spark: SparkSession, path: str, *children: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _batch_writer(
-    out_dir: str,
-    lineage_dir: str,
-    token_col: str | None,
-    id_col: str = "doc_id",
-):
+def _batch_writer(out_dir: str, token_col: str | None, id_col: str = "doc_id"):
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         target = f"batch_id={batch_id}"
         fs, marker = _hadoop_path(batch_df.sparkSession, out_dir, target, "_COMMITTED")
@@ -97,7 +92,7 @@ def _batch_writer(
             batch_df.drop("__pid").write.mode("overwrite").parquet(
                 f"{out_dir}/{target}"
             )
-            lineage.write.mode("overwrite").parquet(f"{lineage_dir}/{target}")
+            lineage.write.mode("overwrite").parquet(f"{out_dir}/_lineage/{target}")
             fs.create(marker, True).close()
         finally:
             batch_df.unpersist()
@@ -109,14 +104,13 @@ def start_exactly_once(
     stream_df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    lineage_dir: str | None = None,
     token_col: str | None = "tokens",
     trigger: dict | None = None,
-    output_mode: str = "append",
     id_col: str = "doc_id",
 ):
     """Start the checkpointed exactly-once query. Returns the StreamingQuery.
 
+    Output mode is ``append``; the lineage table goes to ``{out_dir}/_lineage``.
     ``trigger`` defaults to ``availableNow`` (drain all pending input then
     stop — the batch-driver mode used by tests and bench).
 
@@ -125,14 +119,13 @@ def start_exactly_once(
     row and token counts with zero extra passes — the replacement for the
     reference's two-pass count-then-process shape
     (MainGlucosinolates.scala:105-130)."""
-    lineage_dir = lineage_dir or f"{out_dir}/_lineage"
     observed = stream_df.observe(
         "rates",
         F.count(F.lit(1)).alias("n_rows"),
         _token_count(token_col).alias("n_tokens"),
     )
-    writer = observed.writeStream.outputMode(output_mode).foreachBatch(
-        _batch_writer(out_dir, lineage_dir, token_col, id_col=id_col)
+    writer = observed.writeStream.outputMode("append").foreachBatch(
+        _batch_writer(out_dir, token_col, id_col=id_col)
     )
     writer = writer.option("checkpointLocation", checkpoint_dir)
     trigger = trigger if trigger is not None else {"availableNow": True}

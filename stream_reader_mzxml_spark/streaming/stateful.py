@@ -260,6 +260,10 @@ def stateful_shard_join(
         outputStructType=JOIN_OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
+        # Spark drops input rows behind the previous trigger's watermark
+        # (numRowsDroppedByWatermark) only under an event-time timeout; with
+        # NoTimeout a late ms2 child would still join its parent. The price
+        # is an empty timeout pass in every partition of every trigger.
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 

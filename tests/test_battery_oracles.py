@@ -6,7 +6,9 @@ count and order-insensitive normalized values. Covers the queries whose
 operator has a single form kept in sync with a hand-written oracle: q27
 (SimHash), q30 (LSH ±2-bit multi-probe), q49 (IVF Arrow assignment), and
 the programs built on ``candidate.peak_candidates`` (q39 and q47 through
-``candidate.candidate_ions``, q45, q46, q67).
+``candidate.candidate_ions``, q45, q46, q67), and the media codecs of
+``pipeline.multimodal`` (q31 stub features, q31b PNM, q70 WAV, q71 PNG,
+q74 resize, q75 AVI frame sampling).
 """
 
 from __future__ import annotations
@@ -42,6 +44,12 @@ def duck(sf_dir):
         "q46_database_ions",
         "q47_gluco_delta_stats",
         "q67_isotope_envelope",
+        "q31_multimodal_features",
+        "q31b_pnm_codec",
+        "q70_wav_codec",
+        "q71_png_codec",
+        "q74_image_resize",
+        "q75_frame_sample",
     ],
 )
 def test_query_matches_oracle(spark, sf_dir, duck, name):

@@ -401,9 +401,7 @@ class TestMultimodal:
         px = [10, 0, 255, 20, 100, 255, 30, 200, 255, 40, 50, 255]
         arr, w, h = multimodal.decode_pnm(self._ppm(2, 2, px, comment=True))
         assert (w, h) == (2, 2) and arr.shape == (2, 2, 3)
-        assert multimodal._pnm_feature(self._ppm(2, 2, px, comment=True)) == [
-            25.0, 87.5, 255.0, 0.0,
-        ]
+        assert multimodal.channel_means(arr, 4) == [25.0, 87.5, 255.0, 0.0]
 
     def test_decode_pnm_16bit_pgm(self):
         # P5 with maxval 65535 → big-endian 2-byte samples
@@ -413,7 +411,7 @@ class TestMultimodal:
         arr, w, h = multimodal.decode_pnm(buf)
         assert (w, h) == (2, 1) and arr.shape == (1, 2, 1)
         assert arr.reshape(-1).tolist() == [1000.0, 3000.0]
-        assert multimodal._pnm_feature(buf) == [2000.0, 0.0, 0.0, 0.0]
+        assert multimodal.channel_means(arr, 4) == [2000.0, 0.0, 0.0, 0.0]
 
     def test_decode_pnm_rejects_garbage(self):
         with pytest.raises(ValueError):
@@ -440,7 +438,8 @@ class TestMultimodal:
             for r in multimodal.featurize(media, decode_stub=False).collect()
         }
         assert got[1].feature == [25.0, 87.5, 255.0, 0.0]
-        assert got[2].feature == multimodal._pnm_feature(pay_b)
+        exp = multimodal.channel_means(multimodal.decode_pnm(pay_b)[0], 4)
+        assert got[2].feature == exp
         assert got[3].feature is None
 
     def test_media_schema_columns(self, spark, docs_df):
@@ -1423,7 +1422,7 @@ class TestWavCodec:
         assert rate == 8000 and samples.shape == (3, 2)
         assert samples[:, 0].tolist() == [100.0, -200.0, 300.0]
         assert samples[:, 1].tolist() == [-1000.0, 2000.0, 3000.0]
-        assert multimodal._wav_feature(buf) == [
+        assert multimodal.channel_means(samples, 4) == [
             round(200 / 3, 6), round(4000 / 3, 6), 0.0, 0.0,
         ]
 
@@ -1455,7 +1454,8 @@ class TestWavCodec:
             r.doc_id: r
             for r in multimodal.featurize(media, decode_stub=False).collect()
         }
-        assert got[1].feature == multimodal._wav_feature(pay)
+        exp = multimodal.channel_means(multimodal.decode_wav(pay)[0], 4)
+        assert got[1].feature == exp
         assert got[2].feature is None
 
     def test_wav_fixture_roundtrip(self, spark):
@@ -1598,7 +1598,8 @@ class TestPngCodec:
             multimodal.MEDIA_SCHEMA,
         )
         got = multimodal.featurize(media, decode_stub=False).collect()[0]
-        assert got.feature == multimodal._png_feature(pay)
+        exp = multimodal.channel_means(multimodal.decode_png(pay)[0], 4)
+        assert got.feature == exp
         px = raster.reshape(2, 2, 3).astype(np.float64)
         assert got.feature[:3] == [round(float(px[:, :, c].mean()), 6) for c in range(3)]
 
@@ -1878,7 +1879,8 @@ class TestAviCodec:
             multimodal.MEDIA_SCHEMA,
         )
         (row,) = multimodal.featurize(media, decode_stub=False).collect()
-        assert row.feature == multimodal._avi_feature(pay)
+        exp = multimodal.channel_means(multimodal.decode_avi(pay)[0], 4)
+        assert row.feature == exp
 
 
 class TestResize:
@@ -1925,6 +1927,13 @@ class TestResize:
         rz = multimodal.resize_raster(px, 8, 4, "box")
         wts = np.arange(1, 33, dtype=np.float64).reshape(4, 8)
         assert a[0][1][0] == round(float((rz[:, :, 0] * wts).sum()), 6)
+
+    def test_resize_images_rejects_non_image_media(self, spark, docs_df):
+        # text/plain is no image: the error names the media type instead of
+        # handing the bytes to an image decoder
+        media = multimodal.documents_as_media(docs_df)
+        with pytest.raises(Exception, match="'text/plain' is not image"):
+            multimodal.resize_images(media, 8, 4).collect()
 
 
 class TestMultimodalStreaming:

@@ -296,6 +296,52 @@ class TestStatefulJoin:
         assert state_rows and max(state_rows) <= 4
         assert max(state_rows) > 0  # the groups really held state
 
+    def test_late_child_dropped_by_watermark(self, spark, tmp_path):
+        """A child behind the watermark is dropped even though its parent is
+        still in state. One file per trigger, watermark 5 s: the parent
+        (294 s) and an ms1 row at 300 s; an ms1 row at 301 s; then the ms2
+        child at 294 s, behind the previous trigger's watermark (295 s).
+        Spark filters such late input only under an event-time timeout."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from stream_reader_mzxml_spark.datagen import SEQUENCES_SCHEMA
+
+        parent = "ms1-00-000000001"
+        files = [
+            [(parent, "ms1-00", 294, None), ("ms1-00-000000002", "ms1-00", 300, None)],
+            [("ms1-00-000000003", "ms1-00", 301, None)],
+            [("ms2-01-000000001", "ms2-01", 294, parent)],
+        ]
+        path = tmp_path / "late_child"
+        path.mkdir()
+        for i, rows in enumerate(files):
+            doc, src, sec, ref = zip(*rows)
+            t = pa.table(
+                {
+                    "doc_id": doc,
+                    "tokens": [[7, 0, 9]] * len(rows),
+                    "n_tok": [3] * len(rows),
+                    "source": src,
+                    "event_time": [s * 1_000_000 for s in sec],
+                    "precursor_ref": ref,
+                },
+                schema=SEQUENCES_SCHEMA,
+            )
+            f = path / f"part-{i:05d}.parquet"
+            pq.write_table(t, f)
+            os.utime(f, (1_000 + i, 1_000 + i))  # the source lists by mtime
+
+        stream = read_sequences_stream(spark, str(path), max_files_per_trigger=1)
+        out = stateful.stateful_shard_join(stream, watermark="5 seconds")
+        name = f"ssjlate_{uuid.uuid4().hex[:8]}"
+        q = _run_to_memory(out, name)
+        assert spark.sql(f"SELECT * FROM {name}").count() == 0
+        data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert [p["numInputRows"] for p in data] == [2, 1, 1]
+        dropped = [p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in data]
+        assert dropped == [0, 0, 1]
+
     def test_steady_triggers_compile_at_most_one_class(self, spark, small_seq_path):
         """The operator's state encoder is built once per plan, not compiled
         again every trigger: after two warm-up triggers each data trigger
