@@ -145,9 +145,9 @@ def run_batch_suite(
 def run_streaming_suite(
     spark, seq_path: str, total_tokens: int, n_batches: int = 6
 ) -> dict:
-    """The north-rule suite: watermarked tumbling windowed agg (salted
-    two-phase) + stateful shard join, rate-limited micro-batches, exactly-once
-    file-source offsets. Returns wall seconds + tokens/sec."""
+    """The north-rule suite: watermarked tumbling windowed agg + salted
+    stateful shard join, rate-limited micro-batches, exactly-once file-source
+    offsets. Returns wall seconds + tokens/sec."""
     from stream_reader_mzxml_spark.sources.readers import read_sequences_stream
     from stream_reader_mzxml_spark.streaming.stateful import stateful_shard_join
     from stream_reader_mzxml_spark.streaming.windows import salted_tumbling_token_stats

@@ -5,8 +5,10 @@ partials" — exactly Catalyst's partial→final HashAggregate, which we get for
 free by writing ``groupBy().agg()``; a salted count would only repeat that
 map-side partial. What Catalyst does NOT split is a window partition: the
 two-phase forms here bound the per-task sort of a hot group (``salted_top_k``)
-and of a global rank (``distributed_rank``). Salting for streaming state lives
-with the stateful operators (``streaming/windows.py``, ``streaming/stateful.py``).
+and of a global rank (``distributed_rank``). The streaming windowed aggregate
+gets the same partial→final split from Catalyst; only the stateful shard join,
+which buffers rows rather than partials, salts its state
+(``streaming/stateful.py``).
 """
 
 from __future__ import annotations

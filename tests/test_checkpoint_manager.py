@@ -4,7 +4,7 @@
 the JVM itself: checkpoint and state-store files are renamed by one
 ``FileSystem.rename``, so Hadoop forks no ``readlink`` for them (it does for
 every rename under Spark's FileContext default when libhadoop is absent).
-Each test drains a salted windowed aggregate through the exactly-once sink
+Each test drains the windowed aggregate through the exactly-once sink
 in a fresh driver whose ``PATH`` starts with a ``readlink`` that logs its
 argument, then resumes it on the same checkpoint with the rest of the input.
 """

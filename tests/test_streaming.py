@@ -152,12 +152,13 @@ class TestWindows:
 
     def test_salted_equals_unsalted(self, spark, small_seq_path):
         stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=5)
-        salted = windows.salted_tumbling_token_stats(
-            stream, "10 seconds", "30 seconds", n_salts=8
-        )
+        salted = windows.salted_tumbling_token_stats(stream, "10 seconds", "30 seconds")
         name = f"salt_{uuid.uuid4().hex[:8]}"
-        _run_to_memory(salted, name)
+        q = _run_to_memory(salted, name)
         got = spark.sql(f"SELECT * FROM {name}")
+        # one stateful aggregate: Catalyst's partial aggregate is the first phase
+        assert q.recentProgress
+        assert all(len(p.stateOperators) == 1 for p in q.recentProgress)
 
         batch = read_sequences(spark, small_seq_path)
         plain = (
@@ -176,6 +177,58 @@ class TestWindows:
         got_rows = _sorted_rows(got, cols)
         exp_rows = _sorted_rows(plain, cols)
         assert got_rows == exp_rows
+
+    def test_two_stage_checkpoint_fails_loudly(self, spark, small_seq_path, tmp_path):
+        """A checkpoint written by the earlier two-stage form (a salted
+        (window, source, salt) aggregate re-windowed through ``window_time``)
+        is refused on resume by the state metadata check, not re-aggregated
+        by the one-stage plan."""
+        import shutil
+
+        from pyspark.errors import StreamingQueryException
+
+        src_dir = str(tmp_path / "seq")
+        os.makedirs(src_dir)
+        files = sorted(f for f in os.listdir(small_seq_path) if f.endswith(".parquet"))
+        ckpt = str(tmp_path / "ckpt")
+
+        def start(df):
+            return (
+                df.writeStream.format("noop")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        for f in files[:2]:
+            shutil.copy(os.path.join(small_seq_path, f), src_dir)
+        stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+        two_stage = (
+            windows.prepare(stream, "30 seconds")
+            .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(8)))
+            .groupBy(F.window("event_time", "10 seconds").alias("w"), "source", "salt")
+            .agg(
+                F.count(F.lit(1)).alias("p_rows"),
+                F.sum(F.size("clean_tokens")).alias("p_tokens"),
+            )
+            .groupBy(F.window(F.window_time("w"), "10 seconds").alias("w2"), "source")
+            .agg(F.sum("p_rows").alias("n_rows"), F.sum("p_tokens").alias("n_tokens"))
+            .select(F.unix_timestamp("w2.start").alias("ws"), "source", "n_rows", "n_tokens")
+        )
+        q = start(two_stage)
+        q.awaitTermination(300)
+        assert q.exception() is None
+        assert len(q.lastProgress.stateOperators) == 2
+
+        for f in files[2:]:
+            shutil.copy(os.path.join(small_seq_path, f), src_dir)
+        stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+        q = start(windows.salted_tumbling_token_stats(stream))
+        with pytest.raises(
+            StreamingQueryException,
+            match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
+        ):
+            q.awaitTermination(300)
 
 
 @pytest.mark.spark
