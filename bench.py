@@ -145,8 +145,8 @@ def run_batch_suite(
 def run_streaming_suite(
     spark, seq_path: str, total_tokens: int, n_batches: int = 6
 ) -> dict:
-    """The north-rule suite: watermarked tumbling windowed agg + salted
-    stateful shard join, rate-limited micro-batches, exactly-once file-source
+    """The north-rule suite: watermarked tumbling windowed agg + stateful
+    shard join, rate-limited micro-batches, exactly-once file-source
     offsets. Returns wall seconds + tokens/sec."""
     from stream_reader_mzxml_spark.sources.readers import read_sequences_stream
     from stream_reader_mzxml_spark.streaming.stateful import stateful_shard_join
@@ -163,13 +163,12 @@ def run_streaming_suite(
     tokens_per_row = total_tokens / max(total_rows, 1)
 
     out = {}
-    # join salts pinned (identical job at every parallelism level) and sized
-    # so the 32 state groups (``n_salts`` counts them all) spread evenly over
-    # the state partitions — too few groups leaves straggler partitions at
-    # high core counts (hot shard = 40 % of rows)
+    # the join runs one state group per shuffle partition, each aligned to
+    # its own partition, so every partition holds an equal share of the
+    # parents (the hot shard's 40 % of rows too) at every parallelism level
     jobs = (
         ("windowed_agg", lambda s: salted_tumbling_token_stats(s)),
-        ("stateful_join", lambda s: stateful_shard_join(s, n_salts=32)),
+        ("stateful_join", lambda s: stateful_shard_join(s)),
     )
     # UNMEASURED warmup: the session's FIRST streaming query pays ~20 s of
     # one-time cost (streaming-plan codegen, python streaming worker pool,

@@ -13,6 +13,12 @@ Cluster launch (the master/executors come from spark-submit, not the code):
 Local smoke (Spark's default of 200 shuffle partitions is slow for small
 stateful runs): spark-submit --master 'local[8]' --conf
 spark.sql.shuffle.partitions=8 --py-files deps.zip ...
+
+``spark.sql.shuffle.partitions`` also sets the ``stateful_join`` suite's
+state groups: one group per partition (200 under Spark's default). A
+checkpoint pins that count; resumed under another ``--conf`` value, the job
+stops in its first trigger with ``StatePartitionsChanged``. Resume with the
+count the checkpoint was written with, or start a fresh checkpoint.
 With a local ``--checkpoint`` it may also pass the checkpoint manager that a
 launched session uses (``session.py``; it renames without forking
 ``readlink``):

@@ -5,15 +5,31 @@ each ms2 record names its parent ms1 record (``precursor_ref``) and must match
 within a ±2 s event-time interval.
 
 ``stateful_shard_join`` runs it with ``applyInPandasWithState`` (per
-north_rule): the stream is keyed by a salt on the parent doc id alone, so
+north_rule): the stream is keyed by a hash of the parent doc id alone, so
 each group holds many docs from every source shard and the per-group logic is
-a numpy index probe — one Arrow batch per salt, never one Python call per
+a numpy index probe — one Arrow batch per group, never one Python call per
 doc, and no pandas frame but the output. Per-key state buffers the group's
 recent ms1 rows and any early-arriving ms2 rows; matches emit as both sides
 arrive and ``EventTimeTimeout`` + inline watermark purging bound the state.
 This is the reference's "collect MS2 side then probe"
 (glucosinolateIons.sc:28-29) re-expressed with bounded per-group state
 instead of a full materialization.
+
+One group per state partition. Spark places a stateful operator's key in
+partition ``pmod(hash(key), P)`` (Murmur3, seed 42, the function behind
+``F.hash``), P being ``spark.sql.shuffle.partitions``. ``partition_keys(P)``
+picks, for each partition g, a ``BIGINT`` key that lands in g, so the P
+groups fill the P partitions one each: P group calls per trigger, each over
+1/P of the parents. Every group call checks that it runs in the partition
+its key was aligned to, which is what a checkpoint written under another
+partition count breaks (Spark restores the checkpoint's count; the plan
+reads the session's): the query then stops with ``StatePartitionsChanged``
+instead of stranding buffered parents under keys no new row maps to.
+
+The state key is one ``BIGINT``. A checkpoint of the earlier plan, keyed by
+an ``INT`` salt ``pmod(hash(parent), n_salts)``, stops on resume with
+``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``; restart it from a fresh
+checkpoint.
 
 The state row is two ``BinaryType`` fields, ``ms1`` and ``ms2``, each one
 Arrow IPC stream of that side's buffered columns (``MS1_STATE``,
@@ -35,11 +51,13 @@ tokens — the S8 kernel applied on the streaming path).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -66,7 +84,7 @@ JOIN_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# state: the group's buffered ms1 rows + early ms2 arrivals, per salt, as one
+# state: the group's buffered ms1 rows + early ms2 arrivals, per key, as one
 # Arrow IPC stream per side; binary fields keep Spark's state encoder flat
 MS1_STATE = pa.schema([("doc", pa.string()), ("t_us", pa.int64())])
 MS2_STATE = pa.schema(
@@ -123,7 +141,7 @@ _EMPTY_STATE = (
 def _shard_join_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-salt stateful join — numpy arrays over all docs of the group.
+    """Per-group stateful join — numpy arrays over all docs of the group.
 
     State holds the group's live ms1 rows (probe side) and parent-absent ms2
     rows (early arrivals) as parallel columns, one Arrow stream per side,
@@ -215,28 +233,105 @@ def _save(state: GroupState, ms1: list[np.ndarray], ms2: list[np.ndarray]) -> No
     state.update((_write_side(ms1, MS1_STATE), _write_side(ms2, MS2_STATE)))
 
 
+_M32 = 0xFFFFFFFF
+
+
+def _murmur3_mix(h: int, k: int) -> int:
+    """One 32-bit word of Murmur3_x86_32 (``mixK1`` then ``mixH1``)."""
+    k = k * 0xCC9E2D51 & _M32
+    k = ((k << 15 | k >> 17) & _M32) * 0x1B873593 & _M32
+    h ^= k
+    h = (h << 13 | h >> 19) & _M32
+    return (h * 5 + 0xE6546B64) & _M32
+
+
+def spark_hash_long(v: int) -> int:
+    """``F.hash`` of a ``BIGINT``: Spark's Murmur3_x86_32 ``hashLong`` with
+    seed 42 (low word, high word, then ``fmix`` of length 8), signed."""
+    v &= (1 << 64) - 1
+    h = _murmur3_mix(_murmur3_mix(42, v & _M32), v >> 32) ^ 8
+    h = (h ^ h >> 16) * 0x85EBCA6B & _M32
+    h = (h ^ h >> 13) * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache
+def partition_keys(n_parts: int) -> tuple[int, ...]:
+    """Key g is the least non-negative ``BIGINT`` that Spark's hash
+    partitioning over ``n_parts`` partitions places in partition g."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < n_parts:
+        keys.setdefault(spark_hash_long(v) % n_parts, v)
+        v += 1
+    return tuple(keys[g] for g in range(n_parts))
+
+
+class StatePartitionsChanged(RuntimeError):
+    """A shard-join group ran outside the state partition its key was
+    aligned to: the checkpoint was written under another
+    ``spark.sql.shuffle.partitions`` than the session's."""
+
+
+def _aligned(join_fn: Callable, n_parts: int) -> Callable:
+    """``join_fn`` behind the check that each group runs in the state
+    partition ``partition_keys(n_parts)`` aligned its key to.
+
+    Run over another partition count, the keys misplace: for every P from
+    3 to 128 and every other count up to 1,024, at least one of the P keys
+    lands outside its partition (a spark-free test pins this). At P ≤ 2
+    some counts keep every key in place, so the check cannot see them."""
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        aligned = spark_hash_long(int(key[0])) % n_parts
+        ran = TaskContext.get().partitionId()
+        if ran != aligned:
+            raise StatePartitionsChanged(
+                f"shard-join key {key[0]} is aligned to state partition "
+                f"{aligned} of {n_parts} (the session's "
+                f"spark.sql.shuffle.partitions) but runs in partition {ran}: "
+                "the checkpoint holds another partition count. Resume with "
+                "the count it was written with, or start a fresh checkpoint."
+            )
+        return join_fn(key, pdfs, state)
+
+    return fn
+
+
 def stateful_shard_join(
-    stream: DataFrame, watermark: str = "30 seconds", n_salts: int = 64
+    stream: DataFrame, watermark: str = "30 seconds", n_salts: int | None = None
 ) -> DataFrame:
     """J3 via ``applyInPandasWithState``: one pass over the unified stream.
 
-    Group key = salt, a pure function of the parent doc id (an ms1 row's
+    The group key is a pure function of the parent doc id (an ms1 row's
     ``doc_id``, an ms2 row's ``precursor_ref``), so a parent and its children
     always co-locate; a doc id carries its source, so no shard key is needed.
-    All sources' parents (the hot one's ~40 % of rows too) spread over the
-    ``n_salts`` groups: the explicit skew handling AQE cannot give stateful
-    streaming. ``n_salts`` counts all state groups, so it caps the operator's
-    parallelism; the default 64 is 8 ms1 sources × 8.
+    Parents spread by ``pmod(hash(parent), G)`` over G keys, key g being
+    ``partition_keys(P)[g]``, with P read from ``spark.sql.shuffle.partitions``
+    when the plan is built: one group per state partition, and all sources'
+    parents (the hot one's ~40 % of rows too) split evenly over them — the
+    explicit skew handling AQE cannot give stateful streaming. G = P;
+    ``n_salts`` only caps it at ``min(n_salts, P)``.
+
+    A checkpoint pins P: resumed under another session count, the first
+    group call raises ``StatePartitionsChanged``.
     """
     # driver-side imports: Python workers import this module for
     # _shard_join_fn and need none of the plan-building helpers
     from stream_reader_mzxml_spark.operators.filters import drop_pad_tokens
 
+    n_parts = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    keys = partition_keys(n_parts)[: min(n_salts or n_parts, n_parts)]
     parent = F.coalesce("precursor_ref", "doc_id")
+    key_of = F.array(*(F.lit(k) for k in keys)).cast("array<bigint>")
     keyed = (
         stream.filter(F.col("tokens").isNotNull())
         .filter(F.col("source").startswith("ms1-") | F.col("precursor_ref").isNotNull())
-        .withColumn("salt", F.pmod(F.hash(parent), F.lit(n_salts)))
+        .withColumn(
+            "part_key",
+            F.element_at(key_of, F.pmod(F.hash(parent), F.lit(len(keys))) + 1),
+        )
         .withWatermark("event_time", watermark)
         # probe-side (ms1) rows never use their tokens — null them out so
         # they don't ride the Arrow transfer into Python (≈ half the volume);
@@ -244,7 +339,7 @@ def stateful_shard_join(
         # so the Python operator only routes already-clean arrays instead of
         # re-cleaning them per batch (codegen'd filter vs numpy reduceat)
         .select(
-            "salt",
+            "part_key",
             "doc_id",
             "source",
             "event_time",
@@ -255,8 +350,8 @@ def stateful_shard_join(
             "precursor_ref",
         )
     )
-    return keyed.groupBy("salt").applyInPandasWithState(
-        _shard_join_fn,
+    return keyed.groupBy("part_key").applyInPandasWithState(
+        _aligned(_shard_join_fn, n_parts),
         outputStructType=JOIN_OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -14,7 +14,8 @@ streaming stateful aggregate (SURVEY §4). The windowed aggregates need no
 salt for it: Catalyst's partial aggregate runs before the shuffle, and the
 window in the state key spreads a hot source over state partitions
 (``salted_tumbling_token_stats``). The stateful shard join, which holds rows
-rather than partials, salts (``streaming/stateful.py``).
+rather than partials, spreads its parents by hash over one group per state
+partition (``streaming/stateful.py``).
 """
 
 from __future__ import annotations

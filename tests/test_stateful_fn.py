@@ -1,7 +1,8 @@
-"""Spark-free tests of the shard-join group function (``_shard_join_fn``).
+"""Spark-free tests of the shard-join group function (``_shard_join_fn``)
+and of its partition-aligned keys.
 
 The function is driven directly with ``GroupState`` objects over simulated
-triggers and timeout passes of one salt group. Every
+triggers and timeout passes of one group. Every
 saved state takes the serializer's round trip
 (``CPickleSerializer().dumps(STATE_SCHEMA.toInternal(...))``) and is read back
 by an unpickler that, like the JVM's, knows no Python classes: anything but
@@ -28,9 +29,13 @@ from stream_reader_mzxml_spark.streaming.stateful import (
     MS1_STATE,
     MS2_STATE,
     STATE_SCHEMA,
+    StatePartitionsChanged,
+    _aligned,
     _read_side,
     _shard_join_fn,
     _write_side,
+    partition_keys,
+    spark_hash_long,
 )
 
 KEY = (3,)
@@ -316,3 +321,58 @@ class TestMixedShardGroup:
         out, state, saved = run["t_stale"]
         assert out == []
         assert state._removed and saved is None
+
+
+class TestPartitionKeys:
+    def test_hash_matches_frozen_spark_values(self):
+        # F.hash of these BIGINT values, read from Spark 4.1.2
+        spark_hash = {
+            0: -1670924195,
+            1: -1712319331,
+            2: -797927272,
+            -1: -939490007,
+            7: 1293116811,
+            123456789: 198011545,
+            2**31: 238268309,
+            -(2**31) - 1: -1945244161,
+            2**40: -1596767687,
+            2**63 - 1: -1604625029,
+            -(2**63): -853646085,
+        }
+        assert {v: spark_hash_long(v) for v in spark_hash} == spark_hash
+
+    @pytest.mark.parametrize("n_parts", [1, 2, 4, 8, 200])
+    def test_key_g_lands_in_partition_g(self, n_parts):
+        keys = partition_keys(n_parts)
+        assert [spark_hash_long(k) % n_parts for k in keys] == list(range(n_parts))
+        assert len(set(keys)) == n_parts
+
+    def test_another_partition_count_misplaces_some_key(self):
+        """What the resume guard relies on: for every plan over P ≥ 3
+        partitions, running its P keys over any other count Q ≤ 1024 puts
+        at least one key outside the partition it was aligned to."""
+        for p in range(3, 129):
+            hashes = [spark_hash_long(k) for k in partition_keys(p)]
+            for q in range(1, 1025):
+                if q != p:
+                    assert any(h % q != g for g, h in enumerate(hashes)), (p, q)
+
+    def test_group_outside_its_partition_raises(self, monkeypatch):
+        import stream_reader_mzxml_spark.streaming.stateful as stateful
+
+        class _Task:  # TaskContext.get() of a task in state partition 5
+            @staticmethod
+            def get():
+                return _Task
+
+            @staticmethod
+            def partitionId():
+                return 5
+
+        keys = partition_keys(8)
+        fn = _aligned(lambda key, pdfs, state: ["ran", key], 8)
+        monkeypatch.setattr(stateful, "TaskContext", _Task)
+        # keys arrive from Arrow as numpy ints
+        assert fn((np.int64(keys[5]),), iter(()), None) == ["ran", (keys[5],)]
+        with pytest.raises(StatePartitionsChanged, match="partition 3 of 8 .* partition 5"):
+            fn((np.int64(keys[3]),), iter(()), None)

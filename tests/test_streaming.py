@@ -333,21 +333,57 @@ class TestStatefulJoin:
         exp = self._oracle_rows(spark, small_seq_path)
         assert got == exp  # same rows as the batch oracle (native interval join)
 
-    def test_state_groups_bounded_by_salts(self, spark, small_seq_path):
-        """The state key is the parent-hash salt alone: with 8 ms1 shards in
-        the stream, 4 salts still mean at most 4 state rows at any trigger."""
-        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
-        out = stateful.stateful_shard_join(stream, watermark="30 seconds", n_salts=4)
-        name = f"ssj4_{uuid.uuid4().hex[:8]}"
-        q = _run_to_memory(out, name)
-        got = sorted(
+    def _drain_with_state(self, spark, out, ckpt):
+        """Drain ``out`` to a memory table; return its sorted join rows and
+        the ``(partition_id, key)`` of every group the state store holds
+        after the last committed trigger."""
+        name = f"ssjk_{uuid.uuid4().hex[:8]}"
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        rows = sorted(
             (r.ms1_doc_id, r.ms2_doc_id, r.ms2_source, r.dt_seconds, tuple(r.clean_tokens), r.n_clean)
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         )
-        assert got == self._oracle_rows(spark, small_seq_path)
-        state_rows = [p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress]
-        assert state_rows and max(state_rows) <= 4
-        assert max(state_rows) > 0  # the groups really held state
+        state = spark.read.format("statestore").load(ckpt)
+        groups = sorted((r.partition_id, r.key[0]) for r in state.select("partition_id", "key").collect())
+        return rows, groups
+
+    def test_one_state_group_per_partition(self, spark, small_seq_path, tmp_path):
+        """Key g is aligned to state partition g: the state store holds one
+        group in each of the P = ``spark.sql.shuffle.partitions`` partitions
+        and no other, and the rows are the batch oracle's."""
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
+        out = stateful.stateful_shard_join(stream, watermark="30 seconds")
+        rows, groups = self._drain_with_state(spark, out, str(tmp_path / "ckpt"))
+        assert rows == self._oracle_rows(spark, small_seq_path)
+        assert [p for p, _ in groups] == list(range(n_parts))
+        assert [k for _, k in groups] == list(stateful.partition_keys(n_parts))
+
+    def test_state_groups_bounded_by_salts(self, spark, small_seq_path, tmp_path):
+        """``n_salts`` caps the groups: 4 salts under 8 state partitions are
+        4 keys, each alone in its own partition."""
+        stream = read_sequences_stream(spark, small_seq_path, max_files_per_trigger=2)
+        out = stateful.stateful_shard_join(stream, watermark="30 seconds", n_salts=4)
+        rows, groups = self._drain_with_state(spark, out, str(tmp_path / "ckpt"))
+        assert rows == self._oracle_rows(spark, small_seq_path)
+        assert [p for p, _ in groups] == [0, 1, 2, 3]
+
+    def test_spark_hash_long_matches_f_hash(self, spark):
+        """The key table's Murmur3 is Spark's: ``F.hash`` over BIGINTs 0..9,999
+        and over 10,000 64-bit values spread by ``xxhash64``."""
+        ids = spark.range(10_000)
+        df = ids.select("id").union(ids.select(F.xxhash64("id").alias("id")))
+        got = df.select("id", F.hash("id").alias("h")).collect()
+        assert len(got) == 20_000
+        assert [r.h for r in got] == [stateful.spark_hash_long(r.id) for r in got]
 
     def test_late_child_dropped_by_watermark(self, spark, tmp_path):
         """A child behind the watermark is dropped even though its parent is
@@ -676,20 +712,41 @@ class TestStatefulKillResume:
         assert len(exp) > 100
         assert got == exp
 
-    def test_checkpoint_of_another_state_layout_fails_loudly(
-        self, spark, small_seq_path, tmp_path, monkeypatch
-    ):
-        """A checkpoint whose shard-join state was written under another
-        (array-typed) state schema is refused on resume with Spark's
-        state-schema error, not read as the current two-blob layout."""
-        import shutil
+    @pytest.fixture
+    def state_schema_check(self, spark):
+        """Spark's state-schema check, which the tests' session turns off."""
+        key = "spark.sql.streaming.stateStore.stateSchemaCheck"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        yield
+        spark.conf.set(key, prev)
 
-        from pyspark.errors import StreamingQueryException
-        from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+    @staticmethod
+    def _split_input(small_seq_path, tmp_path):
+        """An empty input dir, and a ``feed(first)`` that copies the fixture's
+        first two files into it (``first=True``) or the rest."""
+        import shutil
 
         src_dir = str(tmp_path / "seq")
         os.makedirs(src_dir)
         files = sorted(f for f in os.listdir(small_seq_path) if f.endswith(".parquet"))
+
+        def feed(first):
+            for f in files[:2] if first else files[2:]:
+                shutil.copy(os.path.join(small_seq_path, f), src_dir)
+
+        return src_dir, feed
+
+    def test_checkpoint_of_another_state_layout_fails_loudly(
+        self, spark, small_seq_path, tmp_path, monkeypatch, state_schema_check
+    ):
+        """A checkpoint whose shard-join state was written under another
+        (array-typed) state schema is refused on resume with Spark's
+        state-schema error, not read as the current two-blob layout."""
+        from pyspark.errors import StreamingQueryException
+        from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+        src_dir, feed = self._split_input(small_seq_path, tmp_path)
         ckpt = str(tmp_path / "ckpt")
 
         def start():
@@ -710,32 +767,118 @@ class TestStatefulKillResume:
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 60_000)
             return iter(())
 
-        # the tests' session turns the schema check off; this test needs it
-        prev = spark.conf.get("spark.sql.streaming.stateStore.stateSchemaCheck")
-        spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
-        try:
-            for f in files[:2]:
-                shutil.copy(os.path.join(small_seq_path, f), src_dir)
-            monkeypatch.setattr(stateful, "_shard_join_fn", docs_only)
-            monkeypatch.setattr(
-                stateful,
-                "STATE_SCHEMA",
-                StructType([StructField("docs", ArrayType(StringType()))]),
-            )
-            q = start()
-            q.awaitTermination(300)
-            assert q.exception() is None
-            monkeypatch.undo()
+        feed(first=True)
+        monkeypatch.setattr(stateful, "_shard_join_fn", docs_only)
+        monkeypatch.setattr(
+            stateful,
+            "STATE_SCHEMA",
+            StructType([StructField("docs", ArrayType(StringType()))]),
+        )
+        q = start()
+        q.awaitTermination(300)
+        assert q.exception() is None
+        monkeypatch.undo()
 
-            for f in files[2:]:
-                shutil.copy(os.path.join(small_seq_path, f), src_dir)
+        feed(first=False)
+        q = start()
+        with pytest.raises(
+            StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
+        ):
+            q.awaitTermination(300)
+
+    def test_int_salt_checkpoint_fails_loudly(
+        self, spark, small_seq_path, tmp_path, state_schema_check
+    ):
+        """A checkpoint of the earlier plan, keyed by an INT salt
+        ``pmod(hash(parent), 32)``, is refused on resume by the key-schema
+        check: its buffered parents sit under keys no new row maps to."""
+        from pyspark.errors import StreamingQueryException
+        from pyspark.sql.streaming.state import GroupStateTimeout
+
+        src_dir, feed = self._split_input(small_seq_path, tmp_path)
+        ckpt = str(tmp_path / "ckpt")
+
+        def start(df):
+            return (
+                df.writeStream.format("noop")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        feed(first=True)
+        stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+        int_salted = (
+            stream.filter(F.col("tokens").isNotNull())
+            .filter(F.col("source").startswith("ms1-") | F.col("precursor_ref").isNotNull())
+            .withColumn("salt", F.pmod(F.hash(F.coalesce("precursor_ref", "doc_id")), F.lit(32)))
+            .withWatermark("event_time", "30 seconds")
+            .select("salt", "doc_id", "source", "event_time", "tokens", "precursor_ref")
+            .groupBy("salt")
+            .applyInPandasWithState(
+                stateful._shard_join_fn,
+                outputStructType=stateful.JOIN_OUTPUT_SCHEMA,
+                stateStructType=stateful.STATE_SCHEMA,
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+        )
+        q = start(int_salted)
+        q.awaitTermination(300)
+        assert q.exception() is None
+        assert q.lastProgress["stateOperators"][0]["numRowsTotal"] > 0
+
+        feed(first=False)
+        stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+        q = start(stateful.stateful_shard_join(stream, watermark="30 seconds"))
+        with pytest.raises(
+            StreamingQueryException, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"
+        ):
+            q.awaitTermination(300)
+
+    def test_resume_under_another_partition_count_fails_loudly(
+        self, spark, small_seq_path, tmp_path
+    ):
+        """Spark resumes a checkpoint with the partition count it was written
+        with; a plan built under another session count aligns its keys to
+        partitions they do not run in. The first resumed trigger stops with
+        ``StatePartitionsChanged`` before emitting a row."""
+        from pyspark.errors import StreamingQueryException
+
+        src_dir, feed = self._split_input(small_seq_path, tmp_path)
+        ckpt = str(tmp_path / "ckpt")
+        emitted = {}
+
+        def start():
+            stream = read_sequences_stream(spark, src_dir, max_files_per_trigger=1)
+            return (
+                stateful.stateful_shard_join(stream, watermark="30 seconds")
+                .writeStream.foreachBatch(
+                    lambda df, batch_id: emitted.update({batch_id: df.count()})
+                )
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
+        feed(first=True)
+        q = start()
+        q.awaitTermination(300)
+        assert q.exception() is None
+        written = dict(emitted)
+        assert sum(written.values()) > 0
+
+        feed(first=False)
+        spark.conf.set(key, str(int(prev) // 2))
+        try:
             q = start()
-            with pytest.raises(
-                StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
-            ):
+            with pytest.raises(StreamingQueryException, match="StatePartitionsChanged"):
                 q.awaitTermination(300)
         finally:
-            spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", prev)
+            spark.conf.set(key, prev)
+        assert emitted == written  # the resumed query emitted nothing
 
     def test_replayed_committed_batch_commits_state(
         self, spark, small_seq_path, tmp_path
