@@ -37,7 +37,7 @@ CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
 
 # Headline batch queries: one per operator family (agg, quantize+topk,
 # threshold histogram, band join, as-of join, interval join, pairwise kernel,
-# sessionize, ranking window, salted top-k) — SURVEY.md §2 coverage.
+# sessionize, ranking window, top-k with its rank) — SURVEY.md §2 coverage.
 HEADLINE = [
     "q01_pricing_summary",
     "q02_occurrence_topk",

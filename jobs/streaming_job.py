@@ -17,8 +17,11 @@ spark.sql.shuffle.partitions=8 --py-files deps.zip ...
 ``spark.sql.shuffle.partitions`` also sets the ``stateful_join`` suite's
 state groups: one group per partition (200 under Spark's default). A
 checkpoint pins that count; resumed under another ``--conf`` value, the job
-stops in its first trigger with ``StatePartitionsChanged``. Resume with the
-count the checkpoint was written with, or start a fresh checkpoint.
+stops in its first trigger with ``StatePartitionsChanged``, except at a
+value of 1 or 2: a value of 1 over a checkpoint of 5, 103, 515, … partitions,
+or 2 over one of 4, is not caught, and the parents buffered in the other
+partitions are stranded. Resume with the count the checkpoint was written
+with, or start a fresh checkpoint.
 With a local ``--checkpoint`` it may also pass the checkpoint manager that a
 launched session uses (``session.py``; it renames without forking
 ``readlink``):

@@ -1,19 +1,20 @@
-"""Aggregation operators (SURVEY.md §2.4, A1-A10) + two-phase ranking.
+"""Aggregation operators (SURVEY.md §2.4, A1-A10) + ranking.
 
 Every reference aggregation is "per-record partial map, then global fold of
 partials" — exactly Catalyst's partial→final HashAggregate, which we get for
 free by writing ``groupBy().agg()``; a salted count would only repeat that
-map-side partial. What Catalyst does NOT split is a window partition: the
-two-phase forms here bound the per-task sort of a hot group (``salted_top_k``)
-and of a global rank (``distributed_rank``). The streaming windowed aggregate
-gets the same partial→final split from Catalyst; only the stateful shard join,
-which buffers rows rather than partials, salts its state
-(``streaming/stateful.py``).
+map-side partial. A per-group top-k gets the same split from Catalyst's
+``WindowGroupLimit`` Partial/Final pair (``top_k``), so it is not salted
+either. What Catalyst does NOT split is a global rank, an unpartitioned
+window: ``distributed_rank`` is the two-level form of it. The streaming
+windowed aggregate gets the partial→final split from Catalyst too; only the
+stateful shard join, which buffers rows rather than partials, salts its
+state (``streaming/stateful.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -43,47 +44,19 @@ def threshold_histogram(
     )
 
 
-def salted_top_k(
-    df: DataFrame,
-    keys: list[str],
-    order: list[Column],
-    k: int,
-    n_salts: int = 32,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """W5 at scale — per-group top-K without a single-task sort per group.
+def top_k(df: DataFrame, keys: list[str], order: list[Column], k: int) -> DataFrame:
+    """W5 — per-group top-``k``: ``row_number()`` over ``keys`` in ``order``
+    into a ``rank`` column, keeping ``rank <= k``.
 
-    A plain ``row_number() OVER (PARTITION BY key)`` shuffles every row of a
-    group into ONE task: with a 3-value key (q13) or a handful of probe ids
-    (q29) the whole table serializes through ≤ |keys| tasks. Two-phase form:
-
-      phase 1: rank within (key, salt) — the shuffle key has |keys|·n_salts
-               values, so a hot group spreads over n_salts tasks; keep ≤ k
-               rows per (key, salt).
-      phase 2: re-rank the ≤ k·n_salts survivors per key — bounded input,
-               the singleton-task sort is now O(k·n_salts), not O(group).
-
-    Equality with the single-phase window holds because any row in the true
-    global top-k is also in the top-k of its own salt partition (its rank
-    within any subset is ≤ its global rank). Proven against the plain-window
-    oracle by q36. Salt is ``pmod(spark_partition_id(), n_salts)`` — free,
-    retry-stable, no physical-partitioning dependence needed here (batch only;
-    streaming state keys use content hashes instead).
+    A hot group does not funnel through one task: Spark 4's
+    ``InsertWindowGroupLimit`` rule (SPARK-37099) plans this filter as
+    ``WindowGroupLimit Partial → Exchange → WindowGroupLimit Final``, so each
+    input partition ships at most ``k`` rows per group to the shuffle — the
+    two phases a salted form would spell out (BASELINE.md "One per-group
+    top-k"). ``tests/test_plan_shapes.py`` pins that plan at every caller.
     """
-    salted = df.withColumn("__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
-    from pyspark.sql import Window
-
-    w1 = Window.partitionBy(*keys, "__salt").orderBy(*order)
-    partial = (
-        salted.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__salt", "__r1")
-    )
-    w2 = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        partial.withColumn(rank_col, F.row_number().over(w2))
-        .filter(F.col(rank_col) <= k)
-    )
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def distributed_rank(
@@ -108,8 +81,6 @@ def distributed_rank(
     the bucket value are ordered by the within-bucket ``order``, so ties
     never straddle the decomposition. Equality with the plain global window
     is pinned by a pytest oracle (test_operators_rank)."""
-    from pyspark.sql import Window
-
     b = df.withColumn("__b", bucket)
     counts = b.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
     ow = (

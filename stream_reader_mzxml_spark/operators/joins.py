@@ -8,7 +8,7 @@ The reference implements all join semantics as nested loops over in-memory
   buckets {b-1, b, b+1}, plus the exact residual predicate. This turns an
   O(N·M) theta join into a hash join on bucket — the difference between
   "cross join at 100 TB" and "shuffle join at 100 TB".
-- **as-of join** (J1 across rows): band join + ``row_number`` argmin.
+- **as-of join** (J1 across rows): band join + a per-probe ``top_k`` of 1.
 - **interval join** (J3): event-time range + value tolerance, the
   MS1⋈MS2 precursor join; batch form here, stateful streaming form in
   ``streaming/stateful.py``.
@@ -16,8 +16,10 @@ The reference implements all join semantics as nested loops over in-memory
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from stream_reader_mzxml_spark.operators.aggregates import top_k
 
 
 def _bucketize(col: Column, tol: float) -> Column:
@@ -109,8 +111,8 @@ def asof_nearest_join(
     """J1 across rows — for each probe row, the nearest value row within tol.
 
     Reference: ``peaks.minBy(abs(peak.mz - mz))`` (Spectrum.scala:39-41) lifted
-    to a relational as-of join: band join for candidates, then
-    ``row_number() over (partition by probe order by abs(delta))`` = 1.
+    to a relational as-of join: band join for candidates, then the per-probe
+    ``top_k`` of 1 by ``abs(delta)``.
     Scala ``minBy`` keeps the first minimum in input order — reproduced by the
     ``order_tiebreak`` column (a deterministic input-order key) as the
     secondary sort.
@@ -121,12 +123,7 @@ def asof_nearest_join(
     if order_tiebreak is not None:
         cols = [order_tiebreak] if isinstance(order_tiebreak, str) else order_tiebreak
         order.extend(F.col(c).asc() for c in cols)
-    w = Window.partitionBy(probe_key).orderBy(*order)
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_k(cand, [probe_key], order, 1).drop("rank")
 
 
 def interval_join(

@@ -22,10 +22,12 @@ the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stream_reader_mzxml_spark.operators.aggregates import top_k
 from stream_reader_mzxml_spark.pipeline.text import (
+    h32,
     has_pii_col,
     pred_lang_col,
     quality_score_col,
@@ -91,9 +93,7 @@ def curate(df: DataFrame, text_col: str = "text") -> DataFrame:
 DOMAIN_CAP = 10  # max docs kept per source
 
 
-def domain_caps(
-    df: DataFrame, cap: int = DOMAIN_CAP, key_col: str = "source"
-) -> DataFrame:
+def domain_caps(df: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
     """Per-domain document caps — the stratified-sampling step of a web-scale
     corpus mix: no single domain may contribute more than ``cap`` documents
     (per-source quotas keep one mega-crawl host from dominating the mixture).
@@ -110,27 +110,21 @@ def domain_caps(
     discipline as ``mixing.epoch_order``'s per-epoch salt.
 
     Scale shape: a source is exactly the Zipf-hot axis (one domain can be
-    10^9 docs), so ranking uses the salted two-phase top-K — a hot source
-    spreads over ``n_salts`` tasks and no task ever sorts a whole domain.
-    Only (doc_id, source, priority) rides the shuffle, never the text.
+    10^9 docs), so ranking is ``top_k``, whose ``WindowGroupLimit`` Partial
+    keeps ≤ ``cap`` docs per source in each input partition before the
+    shuffle — no task ever sorts a whole domain. Only (doc_id, source,
+    priority) is projected, never the text.
     """
-    from stream_reader_mzxml_spark.operators.aggregates import salted_top_k
-    from stream_reader_mzxml_spark.pipeline.text import h32
-
     prio = df.select(
         "doc_id",
-        key_col,
+        "source",
         h32(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))).alias(
             "priority"
         ),
     )
-    return salted_top_k(
-        prio,
-        keys=[key_col],
-        order=[F.asc("priority"), F.asc("doc_id")],
-        k=cap,
-        rank_col="rank",
-    ).select(key_col, "doc_id", "priority", "rank")
+    return top_k(
+        prio, ["source"], [F.asc("priority"), F.asc("doc_id")], cap
+    ).select("source", "doc_id", "priority", "rank")
 
 
 def dedup_apply(
@@ -319,8 +313,6 @@ def holdout_split(
 
     Scale: zero-shuffle stateless projection; the text never rides it.
     """
-    from stream_reader_mzxml_spark.pipeline.text import h32
-
     draw = F.shiftright(
         h32(F.concat(F.lit("split:"), F.col(id_col).cast("string")))
         * F.lit(1_000_000).cast("long"),
@@ -359,8 +351,6 @@ def _ingest_verdicts(
         MIX_TARGET_TOKENS,
         _ws_tokens,
     )
-    from stream_reader_mzxml_spark.pipeline.text import h32
-
     g = curation_gates(deduped, text_col, passthrough=("source", "event_time", text_col))
     m = g.join(
         F.broadcast(totals.select("source", F.col("src_tokens").cast("long").alias("src_tokens"))),
@@ -438,11 +428,7 @@ def ingest_manifest_batch(
     arrival-order keeper a single-pass stream selects), then the same
     fused verdict projection."""
     h = F.md5(F.col(text_col)).alias("content_h")
-    w = docs.select("*", h).withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.partitionBy("content_h").orderBy("event_time", "doc_id")
-        ),
-    )
-    dd = w.filter(F.col("_rk") == 1).drop("_rk")
+    dd = top_k(
+        docs.select("*", h), ["content_h"], [F.asc("event_time"), F.asc("doc_id")], 1
+    ).drop("rank")
     return _ingest_verdicts(dd, totals, text_col)

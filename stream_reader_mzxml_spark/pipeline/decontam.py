@@ -35,39 +35,37 @@ from stream_reader_mzxml_spark.sources.readers import spread_scan
 CONTAM_THRESHOLD = 0.05  # fraction of a doc's distinct grams found in the benchmark
 
 
-def benchmark_grams(bench: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct shingle hashes of the benchmark corpus (one column ``g``).
+def benchmark_grams(bench: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct shingle hashes of the benchmark's ``text`` (one column ``g``).
 
     Small by construction (eval sets are tiny) — callers broadcast it.
     """
     return (
-        bench.select(F.explode(shingle_hashes(F.col(text_col), n)).alias("g"))
+        bench.select(F.explode(shingle_hashes(F.col("text"), n)).alias("g"))
         .distinct()
     )
 
 
-def ngram_decontaminate(
-    docs: DataFrame,
-    bench: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = CONTAM_THRESHOLD,
-) -> DataFrame:
-    """Per-doc benchmark-overlap verdict for every training doc.
+def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 3) -> DataFrame:
+    """Per-doc benchmark-overlap verdict for every training doc's ``text``.
 
     Returns ``(doc_id, n_grams, n_hit, contam_frac, contaminated)`` — docs
     with no grams (shorter than ``n`` words) have ``n_grams = 0`` and are
-    clean by definition.
+    clean by definition; a doc is contaminated at ``contam_frac >=
+    CONTAM_THRESHOLD``.
 
     Plan shape: ONE shuffle (the doc_id partial/final count). The benchmark
     probe is a broadcast left join with a hit indicator — not a semi-join
-    plus a join-back, which would shuffle twice.
+    plus a join-back, which would shuffle twice. A 1-row broadcast gram array
+    probed per doc with ``array_intersect`` (zero shuffles) returned the same
+    rows on q48 at sf0.1 but took more than twice the wall (BASELINE.md "One
+    per-group top-k").
     """
     ex = spread_scan(docs).select(
         "doc_id",
-        F.explode_outer(shingle_hashes(F.col(text_col), n)).alias("g"),
+        F.explode_outer(shingle_hashes(F.col("text"), n)).alias("g"),
     )
-    grams = F.broadcast(benchmark_grams(bench, text_col, n).withColumn("hit", F.lit(1)))
+    grams = F.broadcast(benchmark_grams(bench, n).withColumn("hit", F.lit(1)))
     out = (
         ex.join(grams, ["g"], "left")
         .groupBy("doc_id")
@@ -76,10 +74,6 @@ def ngram_decontaminate(
             F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
         )
     )
-    return _verdict(out, threshold)
-
-
-def _verdict(out: DataFrame, threshold: float) -> DataFrame:
     frac = F.when(F.col("n_grams") > 0, F.col("n_hit") / F.col("n_grams")).otherwise(
         F.lit(0.0)
     )
@@ -88,42 +82,5 @@ def _verdict(out: DataFrame, threshold: float) -> DataFrame:
         "n_grams",
         "n_hit",
         F.round(frac, 6).alias("contam_frac"),
-        (frac >= threshold).cast("int").alias("contaminated"),
+        (frac >= CONTAM_THRESHOLD).cast("int").alias("contaminated"),
     )
-
-
-def ngram_decontaminate_stateless(
-    docs: DataFrame,
-    bench: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = CONTAM_THRESHOLD,
-) -> DataFrame:
-    """Zero-shuffle, stateless decontamination — the Structured Streaming form.
-
-    The benchmark gram set is folded into a 1-row broadcast array and each
-    doc's overlap is ``array_intersect`` scan-side: no explode, no groupBy, no
-    state — the verdict runs unchanged on a ``readStream`` in append mode
-    (tested row-for-row vs the batch form).
-
-    Trade-off vs :func:`ngram_decontaminate`: ``array_intersect`` rebuilds a
-    hash set of one argument per row, so this form wants benchmark gram sets
-    in the 10^3-10^5 range (typical per-benchmark splits); for a merged
-    10^7-gram mega-benchmark the exploded broadcast-join form amortizes the
-    build across the batch. Same verdict either way.
-    """
-    bg = F.broadcast(
-        benchmark_grams(bench, text_col, n)
-        .groupBy()
-        .agg(F.array_sort(F.collect_list("g")).alias("bg"))
-    )
-    out = (
-        docs.select("doc_id", shingle_hashes(F.col(text_col), n).alias("grams"))
-        .crossJoin(bg)
-        .select(
-            "doc_id",
-            F.size("grams").alias("n_grams"),
-            F.size(F.array_intersect("grams", "bg")).alias("n_hit"),
-        )
-    )
-    return _verdict(out, threshold)

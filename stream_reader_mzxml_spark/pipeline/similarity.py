@@ -2,7 +2,7 @@
 
 Brute-force cosine top-k is the correctness baseline: broadcast the (small)
 probe set against the corpus — one scan, no O(n²) shuffle — and rank with a
-per-probe window. The scale path is random-hyperplane LSH: each vector maps
+per-probe top-k. The scale path is random-hyperplane LSH: each vector maps
 to a bucket id from the sign pattern of ``n_planes`` fixed hyperplane dot
 products; candidates are corpus vectors in the probe's bucket, so the join is
 an equi-join on ``bucket`` (shuffle keyed by bucket; recall from ±2-bit
@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.aggregates import top_k
 
 N_PLANES = 8
 DIM = 64
@@ -81,33 +83,37 @@ def _with_norm(emb: DataFrame, id_col: str, out_id: str, vec: str, norm: str):
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    n_probes: int = 5,
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def _corpus_and_probes(emb: DataFrame, n_probes: int):
+    """The normed corpus ``(n_id, vn, nn)`` and its first ``n_probes`` ids as
+    probes ``(p_id, vp, np)``."""
+    return (
+        _with_norm(emb, "vec_id", "n_id", "vn", "nn"),
+        _with_norm(emb.filter(F.col("vec_id") < n_probes), "vec_id", "p_id", "vp", "np"),
+    )
+
+
+def _probe_topk(cand: DataFrame, cols: list[str], k: int) -> DataFrame:
+    """Top-``k`` neighbors per probe by exact cosine, ties to the lower id."""
+    cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
+    return top_k(
+        cand.select(*cols, cos.alias("cosine")),
+        ["p_id"],
+        [F.desc("cosine"), F.asc("n_id")],
+        k,
+    )
+
+
+def cosine_topk(emb: DataFrame, n_probes: int = 5, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k: probes = first ``n_probes`` ids (a stand-in
     for an arbitrary probe table). Broadcast the (small) probe side against a
     scan of the corpus — the corpus never leaves its executors, so the plan
-    survives a 100× corpus without a driver/executor OOM. Ranking is a salted
-    two-phase top-k: partition-local top-k (shuffle keyed by (p_id, salt)),
-    then a final merge over at most ``k × n_partitions`` rows per probe — no
-    single-task sort over the whole corpus. Ties broken by neighbor id
-    (deterministic)."""
-    corpus = _with_norm(emb, id_col, "n_id", "vn", "nn")
-    probes = _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
+    survives a 100× corpus without a driver/executor OOM. Ranking is
+    ``top_k``: its ``WindowGroupLimit`` Partial keeps ≤ ``k`` rows per probe
+    in each corpus partition before the shuffle, so no task sorts the whole
+    corpus for a probe. Ties broken by neighbor id (deterministic)."""
+    corpus, probes = _corpus_and_probes(emb, n_probes)
     cand = F.broadcast(probes).join(corpus, F.col("p_id") != F.col("n_id"))
-    cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
-    from ..operators.aggregates import salted_top_k
-
-    return salted_top_k(
-        cand.select("p_id", "n_id", cos.alias("cosine")),
-        keys=["p_id"],
-        order=[F.desc("cosine"), F.asc("n_id")],
-        k=k,
-        rank_col="rank",
-    )
+    return _probe_topk(cand, ["p_id", "n_id"], k)
 
 
 IVF_STRIDE = 31  # vec_id % stride == 0 → deterministic centroid seeds
@@ -118,7 +124,6 @@ def ivf_topk(
     emb: DataFrame,
     n_probes: int = 5,
     k: int = 10,
-    id_col: str = "vec_id",
     stride: int = IVF_STRIDE,
     nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
@@ -138,15 +143,15 @@ def ivf_topk(
     matmul — no shuffle; ties go to the lower cid via a stable argsort over
     cid-ascending centroid columns. The candidate join is an equi-join on
     ``cluster`` (shuffle keyed by cluster id, the IVF fan-in); ranking is a
-    per-probe window over the probed partitions only. Candidate cosines are
+    per-probe ``top_k`` over the probed partitions only. Candidate cosines are
     ordered left-folds — bit-identical to the DuckDB oracle; the assignment
     cosines are not (matmul summation order), so a centroid pair tied to the
     last bit could assign differently than the oracle's fold (none does at
     sf0.001-sf0.1).
     """
+    seeds = emb.filter(F.col("vec_id") % stride == 0)
     crows = sorted(
-        _with_norm(emb.filter(F.col(id_col) % stride == 0), id_col, "cid", "cv", "cnorm")
-        .collect(),
+        _with_norm(seeds, "vec_id", "cid", "cv", "cnorm").collect(),
         key=lambda r: r["cid"],
     )
     cids = np.array([r["cid"] for r in crows], dtype=np.int64)
@@ -160,30 +165,16 @@ def ivf_topk(
         order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
         return pd.Series([cids[row].tolist() for row in order])
 
-    corpus = (
-        _with_norm(emb, id_col, "n_id", "vn", "nn")
-        .withColumn("cluster", F.element_at(_topcids(F.col("vn"), F.col("nn")), 1))
+    corpus, probes = _corpus_and_probes(emb, n_probes)
+    corpus = corpus.withColumn(
+        "cluster", F.element_at(_topcids(F.col("vn"), F.col("nn")), 1)
     )
-    probes = (
-        _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
-        .withColumn("cluster", F.explode(_topcids(F.col("vp"), F.col("np"))))
-    )
+    probes = probes.withColumn("cluster", F.explode(_topcids(F.col("vp"), F.col("np"))))
     cand = probes.join(corpus, ["cluster"]).filter(F.col("p_id") != F.col("n_id"))
-    cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
-    w = Window.partitionBy("p_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.select("p_id", "cluster", "n_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _probe_topk(cand, ["p_id", "cluster", "n_id"], k)
 
 
-def lsh_ann_topk(
-    emb: DataFrame,
-    n_probes: int = 5,
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def lsh_ann_topk(emb: DataFrame, n_probes: int = 5, k: int = 10) -> DataFrame:
     """LSH-bucketed ANN top-k: equi-join probe and corpus on bucket id, then
     exact cosine rank within the bucket. At corpus scale the bucket join
     replaces the broadcast-everything of ``cosine_topk``.
@@ -197,25 +188,17 @@ def lsh_ann_topk(
     Pairs cannot duplicate: a neighbor lives in exactly one bucket and probe
     variants are distinct buckets."""
     planes = hyperplanes()
-    corpus = _with_norm(emb, id_col, "n_id", "vn", "nn").withColumn(
-        "bucket", bucket_id(F.col("vn"), planes)
-    )
+    corpus, probes = _corpus_and_probes(emb, n_probes)
+    corpus = corpus.withColumn("bucket", bucket_id(F.col("vn"), planes))
     variants = F.array(
         *[F.col("bucket0").bitwiseXOR(F.lit(m)) for m in PROBE_FLIPS]
     )
     probes = (
-        _with_norm(emb.filter(F.col(id_col) < n_probes), id_col, "p_id", "vp", "np")
-        .withColumn("bucket0", bucket_id(F.col("vp"), planes))
+        probes.withColumn("bucket0", bucket_id(F.col("vp"), planes))
         .withColumn("bucket", F.explode(variants))
     )
     cand = probes.join(corpus, ["bucket"]).filter(F.col("p_id") != F.col("n_id"))
-    cos = F.round(_cosine(F.col("vp"), F.col("vn"), F.col("np"), F.col("nn")), 6)
-    w = Window.partitionBy("p_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.select("p_id", "bucket", "n_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _probe_topk(cand, ["p_id", "bucket", "n_id"], k)
 
 
 KM_QUANT = 1_000_000  # fixed-point scale for exact-integer k-means arithmetic

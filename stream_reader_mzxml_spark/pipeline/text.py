@@ -430,7 +430,7 @@ def tfidf_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     agg'd] → term document frequency via a second groupBy on the term hash
     [1 shuffle, Zipf-hot terms cost a combiner cell each, never a join
     explosion] → N from a 1-row broadcast cross join. Emits scores, not a
-    per-doc ranking — ranking is the (salted) top-K operator's job.
+    per-doc ranking — ranking is ``top_k``'s job.
 
     Returns ``(doc_id, term_h, tf, df, tf_idf)`` for terms with
     ``tf >= TFIDF_MIN_TF``.

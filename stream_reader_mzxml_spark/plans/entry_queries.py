@@ -27,7 +27,7 @@ from stream_reader_mzxml_spark.functions.scalars import (
     ppm_ok,
     quantize_trunc,
 )
-from stream_reader_mzxml_spark.operators.aggregates import threshold_histogram
+from stream_reader_mzxml_spark.operators.aggregates import threshold_histogram, top_k
 from stream_reader_mzxml_spark.operators.joins import (
     asof_nearest_join,
     band_semi_join,
@@ -431,25 +431,16 @@ def q12_sliding_window(spark, sf_dir):
     """,
 )
 def q13_topk_per_group(spark, sf_dir):
-    # Plain-window W5 form. Scale note: Spark 4 plans a rank<=k filter as
-    # Partial WindowGroupLimit BEFORE the exchange, so each input partition
-    # ships at most k rows per group — the 3-value partition key is no longer
-    # a full-table single-task funnel. The explicitly salted two-phase
-    # operator (salted_top_k, q36) is the variant for engines/versions
-    # without that optimization and for very large k.
+    # The 3-value partition key is no full-table single-task funnel: top_k's
+    # filter plans as WindowGroupLimit Partial before the exchange, so each
+    # input partition ships at most k rows per group.
     li = read_table(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_returnflag").orderBy(
-        F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
-    )
-    return (
-        li.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "l_returnflag",
-            "l_orderkey",
-            "l_linenumber",
-            F.round("l_extendedprice", 2).alias("price"),
-        )
+    order = [F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")]
+    return top_k(li, ["l_returnflag"], order, k=3).select(
+        "l_returnflag",
+        "l_orderkey",
+        "l_linenumber",
+        F.round("l_extendedprice", 2).alias("price"),
     )
 
 

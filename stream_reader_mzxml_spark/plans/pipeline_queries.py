@@ -672,7 +672,9 @@ def q49_ivf_ann_topk(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # q50 — per-domain caps (stratified sampling): seeded-uniform top-`cap` docs
-# per source via the salted two-phase top-K (a source is the Zipf-hot axis).
+# per source via top_k, whose WindowGroupLimit Partial caps each input
+# partition's rows per source before the shuffle (a source is the Zipf-hot
+# axis).
 # ---------------------------------------------------------------------------
 @register(
     "q50_domain_caps",

@@ -24,7 +24,11 @@ groups fill the P partitions one each: P group calls per trigger, each over
 its key was aligned to, which is what a checkpoint written under another
 partition count breaks (Spark restores the checkpoint's count; the plan
 reads the session's): the query then stops with ``StatePartitionsChanged``
-instead of stranding buffered parents under keys no new row maps to.
+instead of stranding buffered parents under keys no new row maps to. At a
+session P ≤ 2 the check is blind to some counts, whose partitions keep all
+of the session's keys in place (P = 1 over a checkpoint of 5, 103, 515, …
+partitions; P = 2 over one of 4): such a resume strands parents without an
+error.
 
 The state key is one ``BIGINT``. A checkpoint of the earlier plan, keyed by
 an ``INT`` salt ``pmod(hash(parent), n_salts)``, stops on resume with
@@ -314,8 +318,10 @@ def stateful_shard_join(
     explicit skew handling AQE cannot give stateful streaming. G = P;
     ``n_salts`` only caps it at ``min(n_salts, P)``.
 
-    A checkpoint pins P: resumed under another session count, the first
-    group call raises ``StatePartitionsChanged``.
+    A checkpoint pins P: resumed under another session count P ≥ 3, the
+    first group call raises ``StatePartitionsChanged``. At P ≤ 2 some counts
+    go uncaught (P = 1 over a checkpoint of 5, 103, 515, … partitions; P = 2
+    over one of 4), and the parents of the other partitions are stranded.
     """
     # driver-side imports: Python workers import this module for
     # _shard_join_fn and need none of the plan-building helpers

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -35,6 +36,18 @@ NO_CARTESIAN = [
     "q61_bpe_pair_counts",
 ]
 
+# every per-group top-k of the battery (operators/aggregates.py::top_k)
+TOP_K = [
+    "q07_asof_nearest",
+    "q13_topk_per_group",
+    "q29_cosine_topk",
+    "q30_lsh_ann_topk",
+    "q36_salted_topk",
+    "q49_ivf_ann_topk",
+    "q50_domain_caps",
+    "q73_ingest_manifest",
+]
+
 
 def _plan(spark, name: str) -> str:
     import __spark_entry__ as e
@@ -53,6 +66,15 @@ class TestPlanShapes:
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+    @pytest.mark.parametrize("name", TOP_K)
+    def test_topk_is_one_window_with_group_limits(self, spark, name):
+        # one rank window, and Catalyst's WindowGroupLimit Partial before the
+        # exchange plus Final after it: each input partition ships at most k
+        # rows per group, so a hot group never funnels whole into one task
+        nodes = re.findall(r"^\(\d+\) (\w+)", _plan(spark, name), re.M)
+        assert nodes.count("Window") == 1, name
+        assert nodes.count("WindowGroupLimit") == 2, name
 
     def test_mixture_sample_broadcasts_totals(self, spark):
         # the ~#sources-row totals must broadcast — a shuffled equi-join of
@@ -73,8 +95,6 @@ class TestPlanShapes:
     def test_packing_windows_are_partitioned(self, spark):
         # both window operators must carry partition specs (bounded
         # partitions); an empty partitionBy would be the single-task rank
-        import re
-
         plan = _plan(spark, "q58_sequence_packing")
         for args in re.findall(r"Arguments: \[.*windowspecdefinition\(([^)]*)\)", plan):
             assert args.split(",")[0].strip(), "unpartitioned window"

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the semantics-critical scalar and
 operator contracts — the invariants that must hold for ANY input, not just
-the goldens: trunc-toward-zero quantization, salted top-K ≡ plain window,
+the goldens: trunc-toward-zero quantization, per-group top-K ≡ a Python sort,
 sessionization form equivalence, portable-hash ranges.
 
 Spark calls are batched: each example builds one small DataFrame, and
@@ -17,7 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from stream_reader_mzxml_spark.functions.scalars import quantize_trunc
-from stream_reader_mzxml_spark.operators.aggregates import salted_top_k
+from stream_reader_mzxml_spark.operators.aggregates import top_k
 from stream_reader_mzxml_spark.pipeline.text import h32, h60
 
 _settings = settings(
@@ -75,7 +75,7 @@ class TestTopKProperties:
         ),
         st.integers(min_value=1, max_value=5),
     )
-    def test_salted_topk_equals_plain_window(self, spark, rows, k):
+    def test_topk_equals_python_sort(self, spark, rows, k):
         # dedupe ids so the ordering is total (row_number determinism)
         seen, data = set(), []
         for g, v, i in rows:
@@ -83,19 +83,15 @@ class TestTopKProperties:
                 seen.add(i)
                 data.append((g, v, i))
         df = spark.createDataFrame(data, ["g", "v", "id"])
-        order = [F.desc("v"), F.asc("id")]
         got = sorted(
             (r.g, r.v, r.id, r.rank)
-            for r in salted_top_k(df, ["g"], order, k=k, n_salts=4).collect()
+            for r in top_k(df, ["g"], [F.desc("v"), F.asc("id")], k).collect()
         )
-        w = Window.partitionBy("g").orderBy(*order)
-        exp = sorted(
-            (r.g, r.v, r.id, r.rank)
-            for r in df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .collect()
-        )
-        assert got == exp
+        exp = []
+        for g in {g for g, _, _ in data}:
+            ranked = sorted((r for r in data if r[0] == g), key=lambda r: (-r[1], r[2]))
+            exp.extend((*r, rank) for rank, r in enumerate(ranked[:k], start=1))
+        assert got == sorted(exp)
 
 
 @pytest.mark.spark

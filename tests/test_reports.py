@@ -138,65 +138,6 @@ class TestPrecursorMatchStreaming:
 
 
 @pytest.mark.spark
-class TestDecontamStreaming:
-    def test_stateless_decontam_stream_equals_batch(self, spark, tmp_path):
-        # the 1-row-broadcast array_intersect form is a stateless projection:
-        # run it unchanged over a micro-batched stream and require row-for-row
-        # equality with the batch run (the q39/q44 treatment)
-        import uuid
-
-        from pyspark.sql import functions as F
-
-        from stream_reader_mzxml_spark.pipeline.decontam import (
-            ngram_decontaminate,
-            ngram_decontaminate_stateless,
-        )
-
-        words = ["agg", "scan", "join", "sort", "hash", "key", "row", "batch"]
-        rows = [
-            (int(i), " ".join(words[(i + j) % len(words)] for j in range(12)))
-            for i in range(80)
-        ]
-        docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-        bench = docs.filter(F.col("doc_id") % 17 == 0)
-        corpus = docs.filter(F.col("doc_id") % 17 != 0)
-
-        src = str(tmp_path / "docs_stream")
-        corpus.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
-        )
-        out = ngram_decontaminate_stateless(stream, bench)
-        name = f"q48s_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(map(tuple, spark.sql(f"SELECT * FROM {name}").collect()))
-        exp = sorted(
-            map(tuple, ngram_decontaminate_stateless(corpus, bench).collect())
-        )
-        assert len(exp) == 75 and got == exp
-        # and the stateless form agrees with the broadcast-join batch form
-        # (cast-insensitive compare: join form counts are BIGINT, array form INT)
-        joined = sorted(
-            (r.doc_id, int(r.n_grams), int(r.n_hit), r.contam_frac, r.contaminated)
-            for r in ngram_decontaminate(corpus, bench).collect()
-        )
-        flat = sorted(
-            (r.doc_id, int(r.n_grams), int(r.n_hit), r.contam_frac, r.contaminated)
-            for r in ngram_decontaminate_stateless(corpus, bench).collect()
-        )
-        assert joined == flat
-
-
-@pytest.mark.spark
 class TestContextChunksStreaming:
     def test_chunking_stream_equals_batch(self, spark, tmp_path):
         # context chunking is a stateless posexplode projection -> identical

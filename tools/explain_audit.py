@@ -5,7 +5,8 @@ check the properties that matter at 100 TB:
 - joins that should broadcast do (BroadcastHashJoin), and nothing falls back
   to a cartesian product (CartesianProduct/BroadcastNestedLoopJoin) except
   queries explicitly built on a bounded cross join;
-- hot paths sit inside WholeStageCodegen spans.
+- hot paths sit inside WholeStageCodegen spans;
+- a per-group top-k shows its WindowGroupLimit Partial/Final pair (wgl=2).
 
 Usage: python tools/explain_audit.py [query ...]   (prints one audit line per
 query; -v dumps full plans).
@@ -58,12 +59,16 @@ def audit(sf_dir: str = "/root/testdata/sf0.001", names: list[str] | None = None
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        scans = plan.count("Scan parquet")
+        # one "(N) Node" details header per plan node; the tree above the
+        # headers names each node again, so plain substring counts double
+        nodes = re.findall(r"^\(\d+\) (Scan parquet|\w+)", plan, re.M)
+        scans = nodes.count("Scan parquet")
         pushed = len(re.findall(r"PushedFilters: \[(?!\])", plan))
         wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
-        bhj = plan.count("BroadcastHashJoin")
-        smj = plan.count("SortMergeJoin")
-        cart = plan.count("CartesianProduct") + plan.count("BroadcastNestedLoopJoin")
+        bhj = nodes.count("BroadcastHashJoin")
+        smj = nodes.count("SortMergeJoin")
+        wgl = nodes.count("WindowGroupLimit")
+        cart = nodes.count("CartesianProduct") + nodes.count("BroadcastNestedLoopJoin")
         flags = []
         if cart and name not in ALLOWED_CARTESIAN:
             flags.append(f"UNEXPECTED-CARTESIAN x{cart}")
@@ -73,7 +78,7 @@ def audit(sf_dir: str = "/root/testdata/sf0.001", names: list[str] | None = None
             n_warn += 1
         print(
             f"{name}: scans={scans} pushedFilterScans={pushed} codegen={wsc} "
-            f"bhj={bhj} smj={smj} cartesian={cart} {' '.join(flags)}"
+            f"bhj={bhj} smj={smj} wgl={wgl} cartesian={cart} {' '.join(flags)}"
         )
         if verbose:
             print(plan)
